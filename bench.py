@@ -965,9 +965,7 @@ def main() -> None:
     # and sim_topk_bruteforce left the catalog but keep their bench legs
     # — same plan, same leg name, timed via the plain plan functions
     # (with the same release_persists preamble the @query wrapper added)
-    from excelstream_spark.operators.dedup import (
-        release_persists as _release_persists,
-    )
+    from excelstream_spark.scope import release_persists
     from excelstream_spark.plans.extension import (
         dedup_embedding as _folded_dedup_embedding,
         dedup_exact as _folded_dedup_exact,
@@ -989,7 +987,7 @@ def main() -> None:
     def run_catalog(name: str, n_timed: int | None = None) -> None:
         if name in FOLDED_LEGS:
             def fn(name=name):
-                _release_persists()
+                release_persists()
                 noop_fp(name, FOLDED_LEGS[name](spark, SF_DIR))
         else:
             spec = CATALOG[name]
@@ -1065,7 +1063,6 @@ def main() -> None:
     )
 
     # unigram surprisal scoring: vocab build + token join + per-doc mean
-    from excelstream_spark.operators.dedup import release_persists
     from excelstream_spark.operators.quality import unigram_logprob_score
 
     def unigram_cold():
@@ -1853,11 +1850,9 @@ def main() -> None:
         from excelstream_spark.operators.classifier import (
             hashed_doc_features as _clf_feats,
         )
-        from excelstream_spark.operators.dedup import (
-            _scoped_persist as _clf_persist,
-        )
+        from excelstream_spark.scope import share
 
-        feat = _clf_persist(_clf_feats(d, n_buckets=1024))
+        feat = share(_clf_feats(d, n_buckets=1024))
         labeled = d.withColumn(
             "y",
             F.size(_txt_tokens(F.coalesce(F.col("text"), F.lit(""))))
@@ -1930,7 +1925,7 @@ def main() -> None:
         durs, _ = converge(
             lambda: noop(make(d)),
             n_timed,
-            pre=DDo.release_persists,
+            pre=release_persists,
             timed_warmup=True,
             descent_extra=3,
         )
@@ -2000,7 +1995,7 @@ def main() -> None:
                 rungs["10x"],
                 _rung(make, 10, 1, _inflator, runs_out=arrays["10x"]),
             )
-        DDo.release_persists()
+        release_persists()
         drift = round(rungs["10x"] / (10 * rungs["1x"]), 3)
         scale_ladder[name] = {
             "runs": rungs,
@@ -2034,7 +2029,7 @@ def main() -> None:
         durs, _ = converge(
             lambda: noop(make()),
             n_timed,
-            pre=DDo.release_persists,
+            pre=release_persists,
             timed_warmup=True,
             descent_extra=3,
         )

@@ -56,6 +56,7 @@ from excelstream_spark.functions.text import (
 )
 from excelstream_spark.functions.text import tokens as TXT_tokens
 from excelstream_spark.operators.selection import _bucket, _grams
+from excelstream_spark.scope import share
 
 #: Quantization used for engine portability (see module docstring).
 _Q_STEP = 9  # weights / probabilities between GD steps
@@ -477,9 +478,7 @@ def select_top_quality(
     funnel.  Same downstream semantics; only the threshold's rank
     precision differs (equivalence at fixture scale pinned in
     tests/test_classifier.py)."""
-    from excelstream_spark.operators.dedup import _scoped_persist
-
-    scored = _scoped_persist(
+    scored = share(
         score_quality(
             docs, model, text_col, id_col, features=features
         ).select(id_col, "score_r")

@@ -56,6 +56,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from excelstream_spark.scope import share
+
 _DEC = "decimal(38,15)"
 
 
@@ -154,9 +156,7 @@ def kmeans_assign_exact(
 
     Fully deterministic and DuckDB-replayable (module docstring); the
     driver row's oracle unrolls the same iterations as CTEs."""
-    from excelstream_spark.operators.dedup import _scoped_persist
-
-    dims = _scoped_persist(_dim_rows(corpus, vec_col, id_col))
+    dims = share(_dim_rows(corpus, vec_col, id_col))
     cents = md5_seed_centroids(corpus, vec_col, id_col, k)
     assign = None
     for _ in range(n_iter):

@@ -20,21 +20,14 @@ does not stack exponential plans.  Convergence is detected by an edge
 fixpoint (no edge changes), with a hard ``max_iter`` guard.
 
 Checkpoint hygiene (round 6): localCheckpoint blocks are NOT
-cache-manager entries — ``unpersist()``/release_persists cannot free
-them, and Spark will not evict them (eviction would lose the only copy
-of a lineage-truncated RDD).  Before this fix every invocation leaked
-all of its round checkpoints until JVM GC happened to collect the RDD
-handles; a bench session that ran the 10x scale-ladder rungs then
-re-timed this operator measured 17 s on a plan whose steady state is
-~2.7 s — the leaked blocks had squatted on the unified memory pool.
-Now each round frees the PREVIOUS round's blocks (via the public
-JavaSparkContext.getPersistentRDDs handle) as soon as the next
-checkpoint is materialized, and the FINAL checkpoint — which the
-lazily-returned result still reads — is registered with
-dedup._scoped_release so the standard scope boundary
-(release_persists, called by every catalog query and bench leg) frees
-it.  Cleanup is defensive: a lookup miss degrades to the old
-GC-eventually behavior, never to an error.
+cache-manager entries and Spark will not evict them, so leaked round
+checkpoints squatted on the unified memory pool (a bench session that
+ran the scale-ladder rungs then re-timed this operator measured 17 s on
+a plan whose steady state is ~2.7 s).  Each round is a
+``scope.checkpoint``: the PREVIOUS round's blocks are freed as soon as
+the next one is materialized, and the FINAL checkpoint — which the
+lazily-returned result still reads — is freed at the scope boundary
+(release_persists, called by every catalog query and bench leg).
 
 100 TB shape: state per round is the edge list itself (never adjacency
 materialization); each round's shuffle is O(|edges|); no driver-side
@@ -46,6 +39,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from excelstream_spark.scope import checkpoint
 
 
 def _star_round(edges: DataFrame, large: bool) -> DataFrame:
@@ -87,39 +82,7 @@ def connected_components(
 ) -> DataFrame:
     """-> (id, component) for every id appearing in ``pairs``; component
     is the minimum id in the connected set (a stable canonical label)."""
-    sc = pairs.sparkSession.sparkContext
-
-    def _ckpt(df: DataFrame) -> tuple[DataFrame, frozenset[int]]:
-        """Eager localCheckpoint + the id of the RDD it persisted, read
-        off the checkpointed Dataset's OWN plan: ``Dataset
-        .localCheckpoint`` wraps the internally-persisted RDD in a
-        ``LogicalRDD``, so ``analyzed().rdd().id()`` names exactly the
-        block set this invocation owns.  Never a global
-        getRDDStorageInfo() before/after diff — in a shared
-        SparkSession a concurrent job's persist/checkpoint lands in
-        that diff and the later ``_free`` would unpersist ANOTHER
-        thread's RDD (for its localCheckpoint, destroying the only
-        copy) — the round-6 advisor's concurrency finding.  A plan-
-        introspection miss degrades to the old GC-eventually behavior
-        (empty id set), never to freeing someone else's blocks."""
-        out = df.localCheckpoint(eager=True)
-        try:
-            rid = out._jdf.queryExecution().analyzed().rdd().id()
-            return out, frozenset({rid})
-        except Exception:
-            return out, frozenset()
-
-    def _free(ids: frozenset[int]) -> None:
-        try:
-            jmap = sc._jsc.getPersistentRDDs()
-            for rid in ids:
-                jrdd = jmap.get(rid)
-                if jrdd is not None:
-                    jrdd.unpersist(True)
-        except Exception:
-            pass  # degrade to GC-eventually, never fail the computation
-
-    edges, live_ids = _ckpt(
+    edges, free = checkpoint(
         pairs.select(
             F.least(id_a, id_b).alias("u"), F.greatest(id_a, id_b).alias("v")
         )
@@ -143,12 +106,14 @@ def connected_components(
     prev = _edge_stats(edges)
     for i in range(max_iter):
         after_large = _star_round(edges, large=True)
-        after_small, new_ids = _ckpt(_star_round(after_large, large=False))
+        after_small, new_free = checkpoint(
+            _star_round(after_large, large=False)
+        )
         cur = _edge_stats(after_small)
         # the previous round's checkpoint blocks are garbage the moment
         # the new one is materialized (the new plan reads only it)
-        _free(live_ids)
-        edges, live_ids = after_small, new_ids
+        free()
+        edges, free = after_small, new_free
         if cur == prev:  # fixpoint: the edge set stopped changing
             break
         prev = cur
@@ -156,11 +121,8 @@ def connected_components(
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds"
         )
-    # the RETURNED plan still reads the final checkpoint lazily — free
-    # its blocks at the standard scope boundary, not here
-    from excelstream_spark.operators.dedup import _scoped_release
-
-    _scoped_release(lambda ids=live_ids: _free(ids))
+    # the RETURNED plan still reads the final checkpoint lazily: its
+    # blocks are freed at the scope boundary, not here
     # at the fixpoint every edge is (root, member)
     members = edges.select(F.col("v").alias("id"), F.col("u").alias("component"))
     roots = edges.select(F.col("u").alias("id")).distinct().withColumn(

@@ -31,6 +31,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from excelstream_spark.operators.components import connected_components
+from excelstream_spark.scope import share
 
 #: bucket space for split assignment — 2^32 hash values fold into this
 #: many buckets; weights are quantized to 1/SPLIT_BUCKETS resolution
@@ -232,8 +233,6 @@ def token_budget_head(
     """
     from pyspark.sql.window import Window
 
-    from excelstream_spark.operators.dedup import _scoped_persist
-
     n_parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     order = F.col(order_col).desc() if descending else F.col(order_col).asc()
     # PERSIST the ranged layout before reading it twice: range
@@ -242,7 +241,7 @@ def token_budget_head(
     # job and the final job — a row would then apply an offset computed
     # for a partition it no longer lives in, silently keeping documents
     # past the budget.  Scoped like dedup's load-bearing persists.
-    ranged = _scoped_persist(
+    ranged = share(
         df.repartitionByRange(n_parts, order, F.col("doc_id")).withColumn(
             "_pid", F.spark_partition_id()
         )

@@ -30,8 +30,6 @@ north-star extension surface.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
@@ -39,177 +37,7 @@ from excelstream_spark.functions import text as TXT
 from excelstream_spark.functions import vectors as VEC
 from excelstream_spark.operators import vectorized as VZ
 from excelstream_spark.partitioning import fan_out
-
-#: DataFrames persisted by the operators below, pending release.  The
-#: persists are load-bearing (the shingle pipeline feeds both sides of a
-#: self-join; ReusedExchange does NOT kick in under AQE here, and the
-#: unpersisted plan measures 2.5x slower) but they must not accumulate
-#: for the life of the session: every catalog query releases its
-#: predecessors' caches via release_persists() (plans/catalog.py), which
-#: also kills the "CacheManager: Asked to cache already cached data"
-#: spam that repeated runs of the same plan produced.
-_SCOPED_PERSISTS: list[DataFrame] = []
-
-
-def _scoped_persist(df: DataFrame) -> DataFrame:
-    _SCOPED_PERSISTS.append(df.persist())
-    return df
-
-
-def _scoped_release(fn) -> None:
-    """Register a zero-arg cleanup callable to run at the next
-    :func:`release_persists` — for load-bearing storage that is NOT a
-    cache-manager persist and so cannot be freed with ``unpersist()``
-    (components.py's final localCheckpoint blocks)."""
-    _SCOPED_PERSISTS.append(fn)
-
-
-def _scoped_local_checkpoint(df: DataFrame) -> DataFrame:
-    """Eager ``localCheckpoint`` with scope-bound cleanup (r13
-    optimization round) — the heavyweight sibling of
-    :func:`_scoped_persist` for subtrees that feed MANY downstream
-    consumers inside a very large composed plan.
-
-    Versus ``persist()`` it buys two things, both measured on the v6
-    capstone:
-
-    * the lineage is TRUNCATED to a ``LogicalRDD`` scan, so the
-      composed plan the driver must analyze/canonicalize no longer
-      contains the (deep, persist-nested) upstream subtree — nested
-      ``InMemoryRelation`` towers made CacheManager canonicalization
-      quadratic (~8s of pure driver time before v6's first stage, ~37s
-      with one more nesting level; see the video_fp_sets NOTE);
-    * materialization is EAGER and happens exactly once, up front —
-      a lazy persist that first gets pulled by several concurrent
-      broadcast-exchange build threads is raced and its subtree
-      recomputed per thread (observed: the decode chain executing 2-3x
-      per v6 action).
-
-    The blocks are NOT CacheManager entries, so they are registered
-    with :func:`_scoped_release` and freed at the standard scope
-    boundary exactly like components.py's final checkpoint.  Storage
-    is unreplicated executor memory/disk — the components.py trade,
-    fine for metadata-scale tables (ids + 64-bit fingerprints); do not
-    hand it payload-scale data.  Never call with a streaming frame
-    (checkpointing is a batch action)."""
-    sc = df.sparkSession.sparkContext
-    out = df.localCheckpoint(eager=True)
-    try:
-        rid = out._jdf.queryExecution().analyzed().rdd().id()
-    except Exception:
-        # rid lookup rides private internals; on Spark API drift the
-        # blocks degrade to GC-eventually (bounded: session lifetime).
-        # Say so rather than leak silently (r13 ADVICE #4).
-        import warnings
-
-        warnings.warn(
-            "_scoped_local_checkpoint: checkpoint RDD id unresolved "
-            "(Spark internals drift?) — blocks will not be freed at "
-            "release_persists() and live until session end",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-        rid = None
-
-    def _free(rid=rid):
-        if rid is None:
-            return
-        try:
-            jrdd = sc._jsc.getPersistentRDDs().get(rid)
-            if jrdd is not None:
-                jrdd.unpersist(True)
-        except Exception:
-            pass  # degrade to GC-eventually, never to an error
-
-    _scoped_release(_free)
-    return out
-
-
-#: upper bound (bytes, plan-stats estimate) under which
-#: :func:`_scoped_materialize` may hand a table to the unreplicated
-#: ``localCheckpoint``; above it (or when the estimate is unavailable)
-#: the durable DISK_ONLY persist path is taken.  8 GiB default: far
-#: above any metadata-scale table and far below a payload-scale corpus
-#: slice at production SF.  Env-tunable for deployments.
-_CHECKPOINT_BOUND_BYTES = int(
-    os.environ.get("SPARK_GRAFT_CHECKPOINT_BOUND_BYTES", str(8 * 1024**3))
-)
-
-
-def _scoped_materialize(df: DataFrame) -> DataFrame:
-    """SIZE-GUARDED eager materialization (r14, r13 verdict #5 /
-    what's-wrong #2): the eager-once semantics of
-    :func:`_scoped_local_checkpoint` without its scale hazard.
-
-    ``localCheckpoint`` stores blocks on UNREPLICATED executor-local
-    storage with the lineage truncated — metadata-scale tables (ids +
-    64-bit fingerprints) accept that trade, but a payload-scale table
-    (document text, media bytes) held that way makes a lost executor
-    unrecoverable at cluster scale (guide §5) and competes with
-    execution memory.  This helper decides from the optimizer's size
-    estimate:
-
-    * estimate available and <= ``_CHECKPOINT_BOUND_BYTES`` -> the
-      r13 checkpoint (eager, lineage-truncating — keeps the v2
-      60->6-Exchange plan-canonicalization win at bench scale);
-    * estimate above the bound, or unavailable -> ``persist`` at
-      ``DISK_ONLY`` followed by an explicit materializing noop write:
-      still EAGER (so concurrent downstream subtree builds cannot
-      race an unmaterialized cache and recompute the upstream chain
-      per thread — the r13 pathology) and still released at the scope
-      boundary, but the lineage survives, so a lost executor
-      recomputes the lost blocks instead of failing the job.  On a
-      deployment with a fault-tolerant checkpoint dir configured, a
-      reliable ``df.checkpoint(eager=True)`` is the equivalent
-      durable+truncating option; the persist form needs no such dir.
-    """
-    try:
-        est = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:
-        est = -1
-    if 0 <= est <= _CHECKPOINT_BOUND_BYTES:
-        return _scoped_local_checkpoint(df)
-    from pyspark import StorageLevel
-
-    out = df.persist(StorageLevel.DISK_ONLY)
-    _SCOPED_PERSISTS.append(out)
-    out.write.format("noop").mode("overwrite").save()
-    return out
-
-
-def release_persists() -> None:
-    """Unpersist every DataFrame cached by dedup operators so far.  Safe
-    to call between queries (a materialized result never needs its
-    intermediate caches again); a subsequent rebuild re-persists.
-
-    HARD INVARIANT for checkpointed scopes (r13 ADVICE #1): a handle
-    produced by :func:`_scoped_local_checkpoint` reads truncated
-    lineage — after this release, re-executing such a retained handle
-    fails with "checkpoint block not found" instead of transparently
-    recomputing the way an unpersisted lazy cache would.  Callers must
-    treat scope boundaries as the end of those DataFrames' lives:
-    materialized RESULTS stay valid, retained INTERMEDIATE handles do
-    not.  Every in-tree caller already obeys this (the composed closes
-    fully consume their checkpoints inside one query evaluation).
-
-    BLOCKING on purpose: with ``blocking=False`` the block deletion is
-    queued while the next run immediately re-persists the SAME logical
-    plan, so two+ copies of the shingle/signature caches coexist until
-    the async delete lands — under repeated back-to-back runs storage
-    memory fills with stale copies and intermittent 2.5-4x stalls appear
-    (measured on the minhash bench leg: runs of [2.7..3.9]s with
-    recurring 7-11s outliers async, [2.8..3.9]s with no outliers
-    blocking).  The synchronous wait itself is milliseconds (a handful
-    of blocks); paying it deterministically at query entry beats paying
-    an eviction storm mid-query."""
-    while _SCOPED_PERSISTS:
-        item = _SCOPED_PERSISTS.pop()
-        if isinstance(item, DataFrame):
-            item.unpersist(blocking=True)
-        else:
-            item()  # _scoped_release cleanup callable
+from excelstream_spark.scope import release_persists, share  # noqa: F401
 
 
 def dedup_exact(
@@ -333,7 +161,7 @@ def dedup_ngram_jaccard(
         # systematically underestimated for boilerplate-heavy docs —
         # under pruning both numerator and denominators are over the
         # SURVIVING (informative) shingle space.
-        base = _scoped_persist(rows)
+        base = share(rows)
         hot = (
             base.groupBy("s").count()
             .filter(F.col("count") > max_shingle_df)
@@ -344,7 +172,7 @@ def dedup_ngram_jaccard(
     # of the shingle pipeline); persisted because BOTH sides of the
     # inverted-index self-join read it — at 100 TB the equivalent is
     # materializing the posting list to storage once.
-    ex = _scoped_persist(
+    ex = share(
         rows.withColumn("n", F.count(F.lit(1)).over(W.partitionBy("id")))
     )
     # explicit DataFrame aliases: both sides of the self-join descend from
@@ -405,14 +233,14 @@ def dedup_ngram_containment(
         # duplicates this operator exists to catch.  Pruning first
         # makes cont_a the containment over the SURVIVING (informative)
         # shingle space: |A'∩B'| / |A'| with A' = A minus hot shingles.
-        base = _scoped_persist(rows)
+        base = share(rows)
         hot = (
             base.groupBy("s").count()
             .filter(F.col("count") > max_shingle_df)
             .select("s")
         )
         rows = base.join(F.broadcast(hot), "s", "left_anti")
-    ex = _scoped_persist(
+    ex = share(
         rows.withColumn("n", F.count(F.lit(1)).over(W.partitionBy("id")))
     )
     a = ex.select(F.col("id").alias("doc_a"), F.col("n").alias("na"), "s").alias("A")
@@ -461,7 +289,7 @@ def minhash_signatures(
     persist is the posting-list materialization any minhash pipeline
     does.
     """
-    rows = _scoped_persist(shingle_rows(df, text_col, id_col, k))
+    rows = share(shingle_rows(df, text_col, id_col, k))
     # shingles are already 64-bit hashes (shingle_rows); derive the
     # num_hashes families directly from them.  The aggregate is built
     # as ONE parsed SQL expression, not num_hashes Column objects
@@ -531,7 +359,7 @@ def dedup_minhash_lsh(
     Returns (doc_a, doc_b, jaccard[, est_jaccard]).
     """
     rows_per_band = num_hashes // bands
-    sigs = _scoped_persist(
+    sigs = share(
         minhash_signatures(df, text_col, id_col, k, num_hashes)
     )
 
@@ -996,7 +824,7 @@ def dedup_token_blocks_twopass(
             # chain per subtree — the scoped persist bounds that to
             # once (interleaved A/B at sf0.1: mins 3.3 vs 4.1s and
             # 5.0 vs 5.9s in both orderings)
-            out = _scoped_persist(out)
+            out = share(out)
         out = dedup_token_blocks(
             out, text_col=text_col, id_col=id_col,
             block_tokens=bt, min_df=min_df,

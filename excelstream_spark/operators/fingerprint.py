@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from excelstream_spark.functions import text as TXT
+from excelstream_spark.scope import share
 
 
 def winnow_fingerprints_py(
@@ -167,9 +168,7 @@ def neardup_increment_winnow(
     (the incremental.py convention).  ``max_fp_df`` caps corpus-side
     posting lists (computed over the corpus artifact — cheap, and the
     increment cannot inflate it)."""
-    from excelstream_spark.operators.dedup import _scoped_persist
-
-    inc_fps = _scoped_persist(
+    inc_fps = share(
         winnow_fingerprints(new_docs, text_col, id_col, k, w)
         .select(F.col(id_col).alias("doc_new"), "fp")
         .distinct()
@@ -233,14 +232,12 @@ def dedup_winnowing_pairs(
     ``max_shingle_df`` hot-key bound)."""
     from pyspark.sql import Window as W
 
-    from excelstream_spark.operators.dedup import _scoped_persist
-
     fps = winnow_fingerprints(df, text_col, id_col, k, w)
     # distinct fp per doc (a fp selected at several positions counts
     # once in the set semantics) + per-doc set size via a count window;
     # persisted because BOTH sides of the inverted-index self-join read
     # it — the dedup_ngram_jaccard posting-list shape exactly
-    ex = _scoped_persist(
+    ex = share(
         fps.select(F.col(id_col).alias("doc_id"), "fp")
         .distinct()
         .withColumn("n", F.count(F.lit(1)).over(W.partitionBy("doc_id")))

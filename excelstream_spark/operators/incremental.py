@@ -35,11 +35,11 @@ from pyspark.sql import functions as F
 
 from excelstream_spark.functions import text as TXT
 from excelstream_spark.operators.dedup import (
-    _scoped_persist,
     band_entries,
     minhash_signatures,
     shingle_sets,
 )
+from excelstream_spark.scope import share
 
 
 def corpus_fingerprints(
@@ -164,7 +164,7 @@ def neardup_increment_pairs(
         # ONE corpus signature plan feeds both the fallback band index
         # and the verify join — persisting the same shingle subtree
         # twice would waste memory and spam "already cached" warnings
-        corpus_sigs = _scoped_persist(
+        corpus_sigs = share(
             minhash_signatures(corpus_docs, text_col, id_col, k, num_hashes)
         )
         band_index = band_entries(corpus_sigs, bands, rows_per_band).select(
@@ -175,7 +175,7 @@ def neardup_increment_pairs(
     else:
         corpus_sets = None  # built below, from candidate docs only
         stored_index = True
-    new_sigs = _scoped_persist(
+    new_sigs = share(
         minhash_signatures(new_docs, text_col, id_col, k, num_hashes)
     )
     new_entries = band_entries(new_sigs, bands, rows_per_band)
@@ -196,7 +196,7 @@ def neardup_increment_pairs(
         # corpus text (the point of storing the index).  candidates is
         # persisted: its subtree feeds both this semi-join and the
         # verify join below.
-        candidates = _scoped_persist(candidates)
+        candidates = share(candidates)
         cand_ids = candidates.select(
             F.col("doc_corpus").alias(id_col)
         ).distinct()

@@ -12,14 +12,15 @@ Positioning: PIL/libjpeg remains the production path (multimodal.py
 tries it first).  Round 7 made the bit-reader buffered with an 8-bit
 Huffman LUT (~7x the per-bit reader); round 8 inlined the entropy loop
 into locals-only bit arithmetic and batched dequant/zigzag/IDCT across
-all blocks per component (one stacked (n,8,8) matmul — bit-identical,
-a further ~2x): measured ~2 MB/s on photo-texture payloads, which
+all blocks per component (one stacked (n,8,8) transform, a further
+~2x): measured ~2 MB/s on photo-texture payloads, which
 funds the 8 MB megapixel-photo cap in the multimodal dispatch; still
 well short of libjpeg, so the cap stays and PIL stays the photo-corpus
 path.
-Everything here is written from the public T.81 spec; the
-Huffman tables travel IN the file (DHT), so the encoder emits its own
-canonical tables and nothing is copied from any implementation.
+Everything here is written from the public T.81 spec (the integer DCT
+pair is the published Loeffler-Ligtenberg-Moschytz factorization, with
+the IJG "islow" 13-bit constants); the Huffman tables travel IN the
+file (DHT), so the encoder emits its own canonical tables.
 """
 
 from __future__ import annotations
@@ -60,18 +61,99 @@ _ZZ_ROWS = np.array([r for r, _ in _ZZ])
 _ZZ_COLS = np.array([c for _, c in _ZZ])
 
 
-def _dct_basis() -> np.ndarray:
-    """T[u, x] = 0.5 * c(u) * cos((2x+1) u pi / 16); forward DCT of
-    block B is T @ B @ T.T, inverse is T.T @ F @ T."""
-    T = np.zeros((8, 8))
-    for u in range(8):
-        cu = (1.0 / np.sqrt(2.0)) if u == 0 else 1.0
-        for x in range(8):
-            T[u, x] = 0.5 * cu * np.cos((2 * x + 1) * u * np.pi / 16.0)
-    return T
+# IJG "islow" fixed-point DCT (jfdctint / jidctint): the Loeffler-
+# Ligtenberg-Moschytz factorization of the T.81 A.3.3 transform with
+# 13-bit constants, in integer arithmetic only.  A float matmul's
+# rounding depends on the host's BLAS kernel (FMA or not), which moved
+# encoded bytes and decoded pixels between CPUs; integers do not.
+_CONST_BITS, _PASS1_BITS = 13, 2
+_C0_298 = 2446    # round(0.298631336 * 2**13), and so on
+_C0_390 = 3196
+_C0_541 = 4433
+_C0_765 = 6270
+_C0_899 = 7373
+_C1_175 = 9633
+_C1_501 = 12299
+_C1_847 = 15137
+_C1_961 = 16069
+_C2_053 = 16819
+_C2_562 = 20995
+_C3_072 = 25172
 
 
-_T = _dct_basis()
+def _rotate_even(p: np.ndarray, q: np.ndarray):
+    z1 = (p + q) * _C0_541
+    return z1 + p * _C0_765, z1 - q * _C1_847
+
+
+def _rotate_odd(a, b, c, d):
+    """The shared odd-part rotation of jfdctint/jidctint."""
+    z5 = (a + b + c + d) * _C1_175
+    z1 = (a + d) * -_C0_899
+    z2 = (b + c) * -_C2_562
+    z3 = (a + c) * -_C1_961 + z5
+    z4 = (b + d) * -_C0_390 + z5
+    return (
+        a * _C0_298 + z1 + z3,
+        b * _C2_053 + z2 + z4,
+        c * _C3_072 + z2 + z3,
+        d * _C1_501 + z1 + z4,
+    )
+
+
+def _descale(x: np.ndarray, n: int) -> np.ndarray:
+    return (x + (1 << (n - 1))) >> n
+
+
+def _fdct_1d(x: np.ndarray, n: int) -> np.ndarray:
+    """One jfdctint pass along the last axis, descaled by ``n`` bits."""
+    v = [x[..., i] for i in range(8)]
+    t0, t1, t2, t3 = (v[i] + v[7 - i] for i in range(4))
+    t7, t6, t5, t4 = (v[i] - v[7 - i] for i in range(4))
+    t10, t13, t11, t12 = t0 + t3, t0 - t3, t1 + t2, t1 - t2
+    o2, o6 = _rotate_even(t13, t12)
+    o7, o5, o3, o1 = _rotate_odd(t4, t5, t6, t7)
+    o0 = (t10 + t11) << _CONST_BITS
+    o4 = (t10 - t11) << _CONST_BITS
+    return _descale(np.stack([o0, o1, o2, o3, o4, o5, o6, o7], -1), n)
+
+
+def _idct_1d(x: np.ndarray, n: int) -> np.ndarray:
+    """One jidctint pass along the last axis, descaled by ``n`` bits."""
+    v = [x[..., i] for i in range(8)]
+    t3, t2 = _rotate_even(v[2], v[6])
+    t0 = (v[0] + v[4]) << _CONST_BITS
+    t1 = (v[0] - v[4]) << _CONST_BITS
+    t10, t13, t11, t12 = t0 + t3, t0 - t3, t1 + t2, t1 - t2
+    o0, o1, o2, o3 = _rotate_odd(v[7], v[5], v[3], v[1])
+    return _descale(
+        np.stack(
+            [t10 + o3, t11 + o2, t12 + o1, t13 + o0,
+             t13 - o0, t12 - o1, t11 - o2, t10 - o3],
+            -1,
+        ),
+        n,
+    )
+
+
+def _fdct_islow(blocks: np.ndarray) -> np.ndarray:
+    """(n,8,8) level-shifted int samples -> (n,8,8) coefficients
+    [vertical, horizontal frequency], rounded as with an all-ones
+    quantization table.  Rows first, then columns (jfdctint order);
+    its output carries a factor 8, removed with round-half-away."""
+    b = blocks.astype(np.int64)
+    rows = _fdct_1d(b, _CONST_BITS - _PASS1_BITS)
+    f8 = _fdct_1d(rows.swapaxes(-1, -2), _PASS1_BITS + _CONST_BITS)
+    f8 = f8.swapaxes(-1, -2)
+    return np.sign(f8) * ((np.abs(f8) + 4) >> 3)
+
+
+def _idct_islow(coeffs: np.ndarray) -> np.ndarray:
+    """(n,8,8) dequantized coefficients -> (n,8,8) level-shifted int
+    samples.  Columns first, then rows (jidctint order)."""
+    c = coeffs.astype(np.int64)
+    ws = _idct_1d(c.swapaxes(-1, -2), _CONST_BITS - _PASS1_BITS)
+    return _idct_1d(ws.swapaxes(-1, -2), _CONST_BITS + _PASS1_BITS + 3)
 
 
 # --- decoder ---------------------------------------------------------------
@@ -318,16 +400,15 @@ def _decode_scan(payload, start, frame, scan, qt, dc_tables, ac_tables,
     # (Huffman is inherently sequential bit work) but everything after
     # it is batched — per block the old loop paid numpy dispatch for a
     # zeros(64), a zigzag scatter, a dequant multiply and an 8x8
-    # matmul pair; each component now collects plain-list coefficient
+    # transform; each component now collects plain-list coefficient
     # rows and block coords, and ONE stacked pipeline does
-    # zigzag/dequant/IDCT for all blocks (np.matmul over a (n,8,8)
-    # stack runs the identical 2D kernel per slice, so pixels are
-    # bit-identical to the per-block form — pinned by
-    # test_jpeg_batched_idct_bit_equal).  Together with the
-    # locals-only entropy loop below (no per-symbol method dispatch;
-    # acc masked per symbol to stay on CPython's small-int fast path)
-    # the decode measures ~2x end-to-end vs r7 (~2 MB/s on 64x64
-    # through 1024x1024 photo-texture payloads, bit-identical).
+    # zigzag/dequant/IDCT for all blocks (the integer IDCT is
+    # elementwise over the stack, so pixels equal the per-block form
+    # bit-for-bit — pinned by test_jpeg_batched_idct_bit_equal).
+    # Together with the locals-only entropy loop below (no per-symbol
+    # method dispatch; acc masked per symbol to stay on CPython's
+    # small-int fast path) the decode measures ~2x end-to-end vs r7
+    # (~2 MB/s on 64x64 through 1024x1024 photo-texture payloads).
     coeff_rows: list[list[list[int]]] = [[] for _ in comps]
     block_ys: list[list[int]] = [[] for _ in comps]
     block_xs: list[list[int]] = [[] for _ in comps]
@@ -459,17 +540,16 @@ def _decode_scan(payload, start, frame, scan, qt, dc_tables, ac_tables,
             coeff_rows[ci], dtype=np.int64
         )
         zz *= qt[comp["tq"]]
-        pix = _T.T @ zz.astype(np.float64) @ _T
-        plane4 = np.zeros((rows_n, cols_n, 8, 8), dtype=np.float64)
+        pix = np.clip(_idct_islow(zz) + 128, 0, 255)
+        plane4 = np.zeros((rows_n, cols_n, 8, 8), dtype=np.int64)
         plane4[block_ys[ci], block_xs[ci]] = pix
         p = plane4.transpose(0, 2, 1, 3).reshape(rows_n * 8, cols_n * 8)
         p = np.repeat(p, hmax // comp["h"], axis=1)
         p = np.repeat(p, vmax // comp["v"], axis=0)
-        out_planes.append(p[:H, :W] + 128.0)
+        out_planes.append(p[:H, :W])
     if len(out_planes) == 1:
-        gray = np.clip(np.rint(out_planes[0]), 0, 255).astype(np.uint8)
-        return gray[:, :, None]
-    y, cb, cr = out_planes
+        return out_planes[0].astype(np.uint8)[:, :, None]
+    y, cb, cr = (p.astype(np.float64) for p in out_planes)
     r = y + 1.402 * (cr - 128.0)
     g = y - 0.344136 * (cb - 128.0) - 0.714136 * (cr - 128.0)
     b = y + 1.772 * (cb - 128.0)
@@ -586,7 +666,9 @@ def encode_jpeg_baseline(
             p, ((0, th - p.shape[0]), (0, tw - p.shape[1])), mode="edge"
         )
 
-    prepared = []
+    # per component: integer samples -> all blocks' zigzagged
+    # coefficients in one stacked transform, indexed [block_y, block_x]
+    zz_coeffs = []
     for c, p in zip(comps, planes):
         if c["h"] != hmax or c["v"] != vmax:
             fy, fx = vmax // c["v"], hmax // c["h"]
@@ -595,7 +677,12 @@ def encode_jpeg_baseline(
                 p.shape[0] // fy, fy, p.shape[1] // fx, fx
             ).mean(axis=(1, 3))
         th, tw = mcus_y * 8 * c["v"], mcus_x * 8 * c["h"]
-        prepared.append(pad_to(p, th, tw) - 128.0)
+        p = np.rint(pad_to(p, th, tw)).astype(np.int64) - 128
+        blocks = p.reshape(th // 8, 8, tw // 8, 8).swapaxes(1, 2)
+        coeffs = _fdct_islow(blocks.reshape(-1, 8, 8))
+        zz_coeffs.append(
+            coeffs[:, _ZZ_ROWS, _ZZ_COLS].reshape(th // 8, tw // 8, 64)
+        )
 
     dc_counts, dc_enc = _fixed_length_table(_DC_SYMS)
     ac_counts, ac_enc = _fixed_length_table(_AC_SYMS)
@@ -618,13 +705,9 @@ def encode_jpeg_baseline(
             for ci, c in enumerate(comps):
                 for by in range(c["v"]):
                     for bx in range(c["h"]):
-                        y0 = (my * c["v"] + by) * 8
-                        x0 = (mx * c["h"] + bx) * 8
-                        block = prepared[ci][y0 : y0 + 8, x0 : x0 + 8]
-                        coeffs2d = np.rint(_T @ block @ _T.T).astype(
-                            np.int64
-                        )
-                        coeffs = coeffs2d[_ZZ_ROWS, _ZZ_COLS]
+                        coeffs = zz_coeffs[ci][
+                            my * c["v"] + by, mx * c["h"] + bx
+                        ]
                         diff = int(coeffs[0]) - preds[ci]
                         preds[ci] = int(coeffs[0])
                         s, bits = _category(diff)

@@ -65,6 +65,7 @@ from pyspark.sql import functions as F
 
 from excelstream_spark.functions import text as TXT
 from excelstream_spark.operators.quality import UNSEEN_TOKEN_COUNT
+from excelstream_spark.scope import share
 
 #: Brants et al. 2007's published backoff multiplier.
 BACKOFF_ALPHA = 0.4
@@ -117,8 +118,6 @@ def fit_bigram_lm(
     on Wikipedia; the catalog entry fits on a deterministic half-split
     of the fixture).  Two word-count aggregations + one fit-time join;
     the total is the one scalar collected."""
-    from excelstream_spark.operators.dedup import _scoped_persist
-
     tkn = _tok_array(reference, text_col, id_col)
     # persist the unigram table: it feeds the total aggregate, the
     # fit-time bip join AND every scoring join — unpersisted, each is
@@ -126,7 +125,7 @@ def fit_bigram_lm(
     # word-count (the unigram_logprob_score precedent; scoped like
     # dedup's load-bearing persists, released at the next catalog
     # query / explicit release_persists())
-    uni = _scoped_persist(
+    uni = share(
         tkn.select(F.explode("tk").alias("tok"))
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -234,10 +233,8 @@ def ppl_tercile_buckets(
     within ±0.1% of n/3) with no single-task funnel; same downstream
     semantics (equivalence at fixture scale pinned in
     tests/test_lm.py)."""
-    from excelstream_spark.operators.dedup import _scoped_persist
-
     base = docs.where(F.col(id_col).isNotNull())
-    scored = _scoped_persist(stupid_backoff_score(base, lm, text_col, id_col))
+    scored = share(stupid_backoff_score(base, lm, text_col, id_col))
     n = scored.count()
     thresholds: list[float] = []
     if exact:

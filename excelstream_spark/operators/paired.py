@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from excelstream_spark.operators.dedup import shingle_rows
+from excelstream_spark.scope import share
 
 
 def paired_image_fingerprints(
@@ -139,13 +140,11 @@ def paired_crossmodal_matrix(
     )
     num, den = int(threshold_num), int(threshold_den)
 
-    from excelstream_spark.operators.dedup import _scoped_persist as _sp
-
     # persist the per-pair fingerprint table (r13 optimization): it
     # feeds FOUR subtrees (the hot-fp DF prune, its anti-join side and
     # both halves of the blocking self-join), and each broadcast build
     # otherwise re-runs the image synth+decode chain end-to-end.
-    fps = _sp(
+    fps = share(
         paired_image_fingerprints(
             base, "_ik", "_pid", image_synth=image_synth
         ).select(F.col("_pid").alias("_fid"), "fp")
@@ -173,9 +172,7 @@ def paired_crossmodal_matrix(
             .select("s")
         )
         rows = rows.join(F.broadcast(hot_s), "s", "left_anti")
-    from excelstream_spark.operators.dedup import _scoped_persist
-
-    rows = _scoped_persist(rows)
+    rows = share(rows)
     sizes = rows.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
     sa = rows.select(F.col("id").alias("doc_a"), "s").alias("SA")
     sb = rows.select(F.col("id").alias("doc_b"), "s").alias("SB")
@@ -188,7 +185,7 @@ def paired_crossmodal_matrix(
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("inter"))
     )
-    shared = _scoped_persist(shared)
+    shared = share(shared)
     cand_cap = (
         shared.join(sizes.withColumnRenamed("id", "doc_a").withColumnRenamed("n", "_na"), "doc_a")
         .join(sizes.withColumnRenamed("id", "doc_b").withColumnRenamed("n", "_nb"), "doc_b")

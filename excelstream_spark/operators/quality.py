@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from excelstream_spark.functions import text as TXT
+from excelstream_spark.scope import share
 
 
 def gopher_quality_flags(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -125,9 +126,7 @@ def unigram_logprob_score(
         # would run twice over the corpus.  Scoped like dedup's
         # load-bearing persists (released at the next catalog query /
         # explicit release_persists()).
-        from excelstream_spark.operators.dedup import _scoped_persist
-
-        vocab = _scoped_persist(unigram_vocab(df, text_col))
+        vocab = share(unigram_vocab(df, text_col))
     total = vocab.agg(F.sum("cnt").cast("double").alias("_total"))
     ex = df.select(
         F.col(id_col),

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from excelstream_spark.scope import checkpoint
+
 #: normalizer for xxhash64 -> uniform [0, 1): map the signed 64-bit hash
 #: onto the unit interval
 _HASH_SPAN = float(1 << 64)
@@ -253,13 +255,12 @@ def reservoir_sample_exact(
     ucol = _tmp_name(df, "_u")
     cand = df.withColumn(ucol, u_expr).where(F.col(ucol) < cutoff)
     parts = df.sparkSession.sparkContext.defaultParallelism
-    srt = (
+    # checkpoint pins the range boundaries: repartitionByRange samples
+    # them per execution, and the counts action below must see the SAME
+    # partitioning the trim reads.  Freed at the scope boundary.
+    srt, _ = checkpoint(
         cand.repartitionByRange(parts, F.col(ucol), F.col(id_col))
         .sortWithinPartitions(ucol, id_col)
-        # pin the range boundaries: repartitionByRange samples them per
-        # execution, and the counts action below must see the SAME
-        # partitioning the trim reads
-        .localCheckpoint(eager=True)
     )
     pid = F.spark_partition_id()
     counts = sorted(

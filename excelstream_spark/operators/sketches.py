@@ -59,6 +59,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from excelstream_spark.scope import share
+
 #: 60-bit hash space (15 hex chars of md5 — the repo's bigint-safe
 #: hash-prefix convention, bloom.py / selection.py).
 HASH_BITS = 60
@@ -436,12 +438,10 @@ def kmv_jaccard(
     join), so both are scope-persisted: an inline-composed sketch
     (kmv_sketch over a fresh corpus scan) would otherwise execute its
     whole upstream pipeline twice per side."""
-    from excelstream_spark.operators.dedup import _scoped_persist
-
-    a = _scoped_persist(
+    a = share(
         sketch_a.select(F.col("h").alias("h"), F.lit(1).alias("_a"))
     )
-    b = _scoped_persist(
+    b = share(
         sketch_b.select(F.col("h").alias("h"), F.lit(1).alias("_b"))
     )
     u = (

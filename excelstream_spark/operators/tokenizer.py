@@ -18,10 +18,9 @@ collect (the arg-max pair).
   (TakeOrderedAndProject; exactly one row reaches the driver).
 - Merge application is a codegen'd ``aggregate`` fold over each word's
   symbol array (greedy left-to-right non-overlapping — the published
-  semantics); the words table is localCheckpointed every
-  ``_CKPT_EVERY`` rounds to keep the lineage bounded, with blocks
-  freed per checkpoint exactly like operators/components.py (ids read
-  off the checkpointed Dataset's own plan — concurrency-safe).
+  semantics); the words table is checkpointed (``scope.checkpoint``)
+  every ``_CKPT_EVERY`` rounds to keep the lineage bounded, each
+  round's blocks freed as soon as the next is materialized.
 - ``bpe_encode`` applies the learned merges to the DISTINCT words only
   and joins the result back to the exploded corpus — encoding cost is
   per distinct word, not per token occurrence.
@@ -44,10 +43,11 @@ Byte-level BPE (the GPT-2 variant) would sidestep this; out of scope.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from excelstream_spark.functions import text as TXT
+from excelstream_spark.scope import checkpoint
 
 #: localCheckpoint cadence for the iterated words table: between
 #: checkpoints the lineage carries at most this many chained merge
@@ -98,29 +98,6 @@ def _merge_fold(syms: Column, left: str, right: str) -> Column:
     )
 
 
-def _ckpt(df: DataFrame):
-    """Eager localCheckpoint + the block ids THIS invocation owns (read
-    off the checkpointed Dataset's own LogicalRDD — the
-    components.py pattern; never a global storage-info diff)."""
-    out = df.localCheckpoint(eager=True)
-    try:
-        rid = out._jdf.queryExecution().analyzed().rdd().id()
-        return out, frozenset({rid})
-    except Exception:
-        return out, frozenset()
-
-
-def _free(spark: SparkSession, ids: frozenset) -> None:
-    try:
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        for rid in ids:
-            jrdd = jmap.get(rid)
-            if jrdd is not None:
-                jrdd.unpersist(True)
-    except Exception:
-        pass  # degrade to GC-eventually, never fail the computation
-
-
 def bpe_train(
     df: DataFrame,
     text_col: str = "text",
@@ -133,11 +110,11 @@ def bpe_train(
     pair reaches ``min_pair_count``.  Arg-max ties break
     deterministically by (count DESC, left ASC, right ASC) — binary
     UTF-8 order, which equals code-point order."""
-    spark = df.sparkSession
-    words = word_counts(df, text_col).select(
-        "cnt", _chars(F.col("word")).alias("syms")
+    words, free = checkpoint(
+        word_counts(df, text_col).select(
+            "cnt", _chars(F.col("word")).alias("syms")
+        )
     )
-    words, live = _ckpt(words)
     merges: list[tuple[int, str, str, int]] = []
     since_ckpt = 0
     for rank in range(num_merges):
@@ -167,10 +144,10 @@ def bpe_train(
         words = words.select("cnt", _merge_fold(F.col("syms"), left, right).alias("syms"))
         since_ckpt += 1
         if since_ckpt >= _CKPT_EVERY:
-            new_words, new_live = _ckpt(words)
-            _free(spark, live)
-            words, live, since_ckpt = new_words, new_live, 0
-    _free(spark, live)
+            new_words, new_free = checkpoint(words)
+            free()
+            words, free, since_ckpt = new_words, new_free, 0
+    free()
     return merges
 
 
@@ -182,21 +159,17 @@ def encode_words(
     every ``_CKPT_EVERY`` merges to bound the expression tree; the
     intermediate checkpoint blocks are freed eagerly and the FINAL
     plan is left lazy (standard scope-release boundary)."""
-    from excelstream_spark.operators.dedup import _scoped_release
-
-    spark = words.sparkSession
     out = words.withColumn("pieces", _chars(F.col("word")))
-    live: frozenset = frozenset()
+    free = None
     for i, (_, left, right, _n) in enumerate(sorted(merges)):
         out = out.withColumn(
             "pieces", _merge_fold(F.col("pieces"), left, right)
         )
         if (i + 1) % _CKPT_EVERY == 0:
-            new_out, new_live = _ckpt(out)
-            _free(spark, live)
-            out, live = new_out, new_live
-    if live:
-        _scoped_release(lambda ids=live: _free(spark, ids))
+            out, new_free = checkpoint(out)
+            if free is not None:
+                free()
+            free = new_free
     return out
 
 

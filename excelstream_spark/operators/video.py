@@ -87,6 +87,7 @@ from excelstream_spark.operators.multimodal import (
     _png_unfilter,
 )
 from excelstream_spark.partitioning import fan_out
+from excelstream_spark.scope import materialize, share
 
 #: fcTL body: seq, width, height, x_off, y_off, delay_num, delay_den,
 #: dispose_op, blend_op (APNG spec).
@@ -490,9 +491,7 @@ def video_increment_containment(
     n_new count, so it is scope-persisted (the
     neardup_increment_winnow convention) — without it the expensive
     Arrow scan executes twice per action."""
-    from excelstream_spark.operators.dedup import _scoped_persist
-
-    new_sets = _scoped_persist(
+    new_sets = share(
         video_fp_sets(
             new_frame_fps,
             fp_col=fp_col,
@@ -707,8 +706,6 @@ def dedup_video_containment(
     (sizes, both join sides), so it is scope-persisted (r10 advice #3,
     the video_increment_containment convention) — without it the
     decode-downstream prune executes three times per action."""
-    from excelstream_spark.operators.dedup import _scoped_persist
-
     # r13 optimization note: an eager localCheckpoint here (instead of
     # the lazy persist) was A/B-tested and kept NEUTRAL on the video
     # leg but REGRESSED the audio leg ~35%.  RE-TESTED r14 with the
@@ -720,7 +717,7 @@ def dedup_video_containment(
     # persist stays on wall-clock grounds; the duplicated CPU is the
     # price (see the verified close, where the shared tables are
     # eager because their consumers are the expensive stages).
-    sets = _scoped_persist(
+    sets = share(
         video_fp_sets(
             frame_fps,
             fp_col=fp_col,
@@ -826,9 +823,7 @@ def dedup_video_sequence(
     embedded UNCUT in a compilation still scores ~1 on its own side
     (its shingle run survives intact), so subset duplicates are kept —
     only order-breaking edits are separated."""
-    from excelstream_spark.operators.dedup import _scoped_persist
-
-    sh = _scoped_persist(
+    sh = share(
         video_sequence_shingles(
             frame_fps,
             n=n,
@@ -872,7 +867,6 @@ def dedup_video_containment_verified(
     max_fp_df: int | None = 10_000,
     max_sh_df: int | None = 10_000,
     quarantine_degenerate: bool = True,
-    eager_frames: bool = False,
 ) -> DataFrame:
     """:func:`dedup_video_containment` candidates with an ORDER-AWARE
     verify stage (r10 verdict #4): the candidate semantics are
@@ -889,7 +883,7 @@ def dedup_video_containment_verified(
     semi-join (bounded by the pair output, not the corpus), the
     pair-level shingle intersection joins back LEFT so zero-overlap
     candidates keep their row, and the shared ``frame_fps`` scan
-    feeds both stages through one scoped persist.  Note the
+    feeds both stages through one scoped materialization.  Note the
     ``max_sh_df`` document frequency is therefore counted over
     CANDIDATE vids, not the whole corpus — deliberately (a corpus-wide
     DF would cost the corpus-wide shingle pass this composition
@@ -901,38 +895,19 @@ def dedup_video_containment_verified(
 
     -> (vid_a, vid_b, inter, na, nb, containment, seq_inter,
     seq_containment, seq_verified)."""
-    from excelstream_spark.operators.dedup import (
-        _scoped_local_checkpoint,
-        _scoped_materialize,
-    )
-
-    # Materialization of the shared frame table is CALLER-SELECTED
-    # (r14, r13 verdict #1 — the round's one driver-measured
-    # regression on touched code).  It feeds both stages of the close
-    # (sets + candidate-restricted shingles); under the COMPOSED v6
-    # plan a lazy persist was raced by concurrent subtree builds and
-    # its nested InMemoryRelation inflated driver plan
-    # canonicalization, so v6 passes ``eager_frames=True``
-    # (r13 interleaved A/B: B-mins 16.9/20.4 vs A-mins 21.5/24.5).
-    # Standalone callers get the size-guarded eager materialization:
-    # the r14 32-vs-8-core stage profile showed EVERY lazily-persisted
-    # table in this close being recomputed per concurrent broadcast-
-    # exchange build (at 32 task slots all builds run simultaneously,
-    # none finds a populated cache; at 8 cores scarcity serializes
-    # them — v6's executor CPU read 161s at 32c vs 41s at 8c for the
-    # same work).  Batch-only either way: this operator never receives
-    # a streaming frame (the streaming gates consume STORED
+    # the shared frame table feeds both stages of the close (sets +
+    # candidate-restricted shingles) through several concurrent
+    # broadcast-exchange builds: materialize it once, eagerly (r14
+    # stage profile: every lazily-persisted table here was recomputed
+    # per build at 32 task slots).  Batch-only: this operator never
+    # receives a streaming frame (the streaming gates consume STORED
     # artifacts).
-    fps = (
-        _scoped_local_checkpoint(frame_fps)
-        if eager_frames
-        else _scoped_materialize(frame_fps)
-    )
+    fps = materialize(frame_fps)
     # cands and sh are metadata-scale (id pairs / id+shingle hashes)
     # and each feeds SEVERAL concurrent broadcast builds (cand_vids'
     # semi-join side, the two sizes lookups, the seq self-join) — the
     # r14 race finding above; materialize each exactly once, eagerly.
-    cands = _scoped_materialize(
+    cands = materialize(
         dedup_video_containment(
             fps,
             threshold=threshold,
@@ -947,7 +922,7 @@ def dedup_video_containment_verified(
         .unionAll(cands.select(F.col("vid_b").alias("vid")))
         .distinct()
     )
-    sh = _scoped_materialize(
+    sh = materialize(
         video_sequence_shingles(
             fps.join(
                 cand_vids.select(F.col("vid").alias(id_col)),
@@ -1077,10 +1052,8 @@ def video_increment_verified(
 
     -> (new_vid, corpus_vid, inter, n_new, n_corpus, containment,
     seq_inter, seq_containment, seq_verified)."""
-    from excelstream_spark.operators.dedup import _scoped_persist
-
-    fps = _scoped_persist(new_frame_fps)
-    cands = _scoped_persist(
+    fps = share(new_frame_fps)
+    cands = share(
         video_increment_containment(
             fps,
             corpus_sets,
@@ -1091,7 +1064,7 @@ def video_increment_verified(
             quarantine_degenerate=quarantine_degenerate,
         )
     )
-    new_sh = _scoped_persist(
+    new_sh = share(
         video_sequence_shingles(
             fps, n=n, fp_col=fp_col, id_col=id_col, max_sh_df=None
         )

@@ -525,7 +525,7 @@ def query(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):  # 
     SQL-expressible (the driver falls back to a rows-only check).
 
     Each registered callable first releases the scoped caches of the
-    PREVIOUS query (operators/dedup.release_persists): the dedup
+    PREVIOUS query (scope.release_persists): the dedup
     pipelines' persists are load-bearing within one query but must not
     accumulate across a 50-query correctness sweep or repeated bench
     runs (memory growth + "already cached" CacheManager spam)."""
@@ -535,7 +535,7 @@ def query(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):  # 
             raise ValueError(f"duplicate catalog query: {name}")
 
         def scoped(spark: SparkSession, sf_dir: str) -> DataFrame:
-            from excelstream_spark.operators.dedup import release_persists
+            from excelstream_spark.scope import release_persists
 
             release_persists()
             return fn(spark, sf_dir)

@@ -17,6 +17,7 @@ from excelstream_spark.operators import multimodal as MM
 from excelstream_spark.operators import similarity as SIM
 from excelstream_spark.plans import oracles as ORC
 from excelstream_spark.plans.catalog import query
+from excelstream_spark.scope import materialize, share
 from excelstream_spark.tables import load_table
 
 # Shared SQL fragments for the oracles (kept in lockstep with
@@ -1258,8 +1259,6 @@ def _v2_core(docs: DataFrame) -> DataFrame:
         dedup_keep_representatives,
     )
 
-    from excelstream_spark.operators.dedup import _scoped_persist
-
     subset = tuple(
         r for r in TXT.GOPHER_RULES if r[0] != "n_gopher_stopwords"
     )
@@ -1267,35 +1266,18 @@ def _v2_core(docs: DataFrame) -> DataFrame:
         QLo.gopher_quality_filter(docs, rules=subset)
     )
     red = gated.withColumn("text", TXT.redact_pii(F.col("text")))
-    # persist the rewritten corpus: it feeds BOTH the LSH pair stage and
-    # the keep-set join below — unpersisted those are two independent
-    # physical subtrees, each re-running the gates (incl. the Arrow
-    # n-gram pass), the PII regexes and the CDC rewrite end-to-end
-    # (measured: the leg halves).  Scoped like every dedup persist —
-    # released at the next catalog query / bench-leg boundary.
-    from excelstream_spark.operators.dedup import _scoped_materialize
-
-    # r13 optimization: the rewritten corpus is EAGERLY materialized
-    # (was a lazy persist).  It feeds the LSH pair stage — whose banded
-    # self-join builds several concurrent subtrees over it — and the
-    # keep-set join; as a persist the first action raced those builds
-    # (gates + PII + CDC re-ran per build thread) and nested one more
-    # InMemoryRelation under the composed plan.  Interleaved A/B at
-    # sf0.1: 12.51 -> 10.42s min, every run lower.  (The same swap was
-    # A/B-tested on v4 — persist kept, 13.34 vs 14.46: its classifier
-    # training loop materializes the feature table anyway, so the eager
-    # checkpoint only adds a barrier — and on v5 — persist kept, within
-    # noise at 8.56 vs 8.40 and the payload table is the class the
-    # checkpoint helper's contract says to keep off executor-local
-    # storage.)  r14 (r13 verdict #5): the rewritten corpus is
-    # document TEXT — payload-scale at production SF — so the
-    # materialization is SIZE-GUARDED: the lineage-truncating
-    # localCheckpoint below the configured bound (keeps the r13
-    # 60->6-Exchange win at bench scale, where the corpus is ~MBs),
-    # a recoverable DISK_ONLY persist + explicit materialization
-    # above it (a lost executor recomputes instead of failing the
-    # job; see _scoped_materialize's contract).
-    rewritten = _scoped_materialize(
+    # the rewritten corpus feeds BOTH the LSH pair stage (whose banded
+    # self-join builds several concurrent subtrees over it) and the
+    # keep-set join.  Unshared, each re-runs the gates, the PII regexes
+    # and the CDC rewrite (measured: the leg halves); as a lazy persist
+    # the first action raced those builds and nested one more
+    # InMemoryRelation under the composed plan, so it is materialized
+    # eagerly (r13 A/B at sf0.1: 12.51 -> 10.42 s min, every run lower;
+    # the same swap was kept out of v4 and v5, see their notes).  It is
+    # document TEXT — payload-scale at production SF — which is why the
+    # size guard matters here: above the bound a lost executor
+    # recomputes instead of failing the job (scope.materialize).
+    rewritten = materialize(
         DD.dedup_token_chunks_cdc(red, avg_tokens=16, min_df=2)
     )
     pairs = DD.dedup_minhash_lsh(rewritten, threshold=0.8)
@@ -1431,7 +1413,6 @@ def quality_classifier_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         select_top_quality,
         train_quality_classifier,
     )
-    from excelstream_spark.operators.dedup import _scoped_persist
 
     docs = _docs(spark, sf_dir).select("doc_id", "text")
     labeled = docs.withColumn(
@@ -1440,7 +1421,7 @@ def quality_classifier_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         .between(50, 100_000)
         .cast("int"),
     )
-    feat = _scoped_persist(hashed_doc_features(docs, n_buckets=1024))
+    feat = share(hashed_doc_features(docs, n_buckets=1024))
     model = train_quality_classifier(
         labeled, "y", n_buckets=1024, steps=4, lr=8.0, features=feat
     )
@@ -1672,7 +1653,6 @@ def video_increment_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB shape: with the artifact bucketed on fp only the
     increment's (vid, fp) rows shuffle; sizes join on the pair output,
     not the corpus (plan-pinned in tests/test_video.py)."""
-    from excelstream_spark.operators.dedup import _scoped_persist
     from excelstream_spark.operators.video import (
         synthesize_video_payloads,
         video_fp_sets,
@@ -1692,7 +1672,7 @@ def video_increment_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the corpus sets feed BOTH the fp join and the build-time sizes —
     # scope-persist so the corpus decode+hash scan runs once
-    sets = _scoped_persist(video_fp_sets(corpus_fps))
+    sets = share(video_fp_sets(corpus_fps))
     return vic_op(new_fps, sets, video_fp_sizes(sets), threshold=0.8)
 
 
@@ -1800,7 +1780,6 @@ def dedup_increment_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketed fingerprint artifact against the broadcast maybe set."""
     from excelstream_spark.operators import bloom as BL
     from excelstream_spark.operators import incremental as INC
-    from excelstream_spark.operators.dedup import _scoped_persist
 
     docs = _docs(spark, sf_dir)
     corpus = docs.filter(F.col("doc_id") % 2 == 0)
@@ -1810,7 +1789,7 @@ def dedup_increment_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(*docs.columns)
     new = docs.filter(F.col("doc_id") % 2 == 1).unionByName(redeliv)
 
-    fps = _scoped_persist(INC.corpus_fingerprints(corpus))
+    fps = share(INC.corpus_fingerprints(corpus))
     flagged = BL.bloom_flag_increment(new, BL.bloom_build(fps))
     present = fps.join(
         F.broadcast(flagged.where(F.col("maybe_dup")).select("fp")),
@@ -2149,7 +2128,6 @@ def _v4_core(docs: DataFrame) -> DataFrame:
         train_quality_classifier,
     )
     from excelstream_spark.operators.curation import shard_manifest
-    from excelstream_spark.operators.dedup import _scoped_persist
     from pyspark.sql import Window as W
 
     aug = docs.select(
@@ -2168,7 +2146,7 @@ def _v4_core(docs: DataFrame) -> DataFrame:
     # 14.46s ckpt min, interleaved) — the classifier training loop's
     # per-step collects materialize the feature table on first touch
     # anyway, so the eager checkpoint only adds an up-front barrier.
-    cleaned = _scoped_persist(
+    cleaned = share(
         QL.c4_quality_flags(ndf)
         .where(F.col("c4_pass"))
         .select("doc_id", TXT.redact_pii(F.col("c4_text")).alias("text"))
@@ -2179,7 +2157,7 @@ def _v4_core(docs: DataFrame) -> DataFrame:
         .between(80, 100_000)
         .cast("int"),
     )
-    feat = _scoped_persist(hashed_doc_features(cleaned, n_buckets=1024))
+    feat = share(hashed_doc_features(cleaned, n_buckets=1024))
     model = train_quality_classifier(
         labeled, "y", n_buckets=1024, steps=4, lr=8.0, features=feat
     )
@@ -2246,10 +2224,6 @@ def training_corpus_pipeline_v5(spark: SparkSession, sf_dir: str) -> DataFrame:
     from excelstream_spark.operators import image_hash as IH
     from excelstream_spark.operators.components import dedup_keep_best
     from excelstream_spark.operators.curation import shard_manifest
-    from excelstream_spark.operators.dedup import (
-        _scoped_materialize,
-        _scoped_persist,
-    )
 
     off = F.lit(ORC.V5_TWIN_OFFSET)
     docs = _docs(spark, sf_dir).where(F.col("doc_id").isNotNull())
@@ -2269,7 +2243,7 @@ def training_corpus_pipeline_v5(spark: SparkSession, sf_dir: str) -> DataFrame:
     # inside the ambient band) — and the payload table is exactly the
     # payload-scale class the checkpoint helper's contract keeps off
     # executor-local storage, so the persist stays.
-    pay = _scoped_persist(
+    pay = share(
         MM.synthesize_payloads(png).select("doc_id", "payload")
     )
     pay_all = pay.unionByName(
@@ -2285,7 +2259,7 @@ def training_corpus_pipeline_v5(spark: SparkSession, sf_dir: str) -> DataFrame:
     # each at sf0.1).  Eager size-guarded materialization runs the
     # Python chain exactly once; the payload persist above stays (the
     # decode reads it once while materializing).
-    fps = _scoped_materialize(IH.multimodal_fingerprints(pay_all))
+    fps = materialize(IH.multimodal_fingerprints(pay_all))
     pairs = IH.dedup_image_ahash(
         fps,
         hash_col="fp_a",
@@ -2335,7 +2309,7 @@ def training_corpus_pipeline_v6(spark: SparkSession, sf_dir: str) -> DataFrame:
     _cm_cell_sql convention) under the v5 closure/manifest chain.
 
     100 TB shape: decode+hash is zero-shuffle Arrow scan work shared
-    through one scoped persist per modality (base frames feed the
+    through one scoped materialization per modality (base frames feed the
     original + both twin derivations AND both stages of the verified
     close); the containment join moves one row per (id, distinct fp),
     the shingle verify is semi-restricted to candidate ids; components
@@ -2365,7 +2339,6 @@ def _v6_core(
     )
     from excelstream_spark.operators.components import dedup_keep_best
     from excelstream_spark.operators.curation import shard_manifest
-    from excelstream_spark.operators.dedup import _scoped_persist
     from excelstream_spark.operators.video import (
         dedup_video_containment_verified,
         synthesize_video_payloads,
@@ -2380,11 +2353,7 @@ def _v6_core(
     adocs = docs.where(F.col("doc_id") % 4 == 2)
 
     def with_twins(frame_fps: DataFrame) -> DataFrame:
-        from excelstream_spark.operators.dedup import (
-            _scoped_local_checkpoint,
-        )
-
-        # r13 optimization: eager localCheckpoint, not persist.  The
+        # r13 optimization: eager materialization, not persist.  The
         # decoded base feeds SIX subtrees (original + both twins, each
         # through both stages of the verified close) inside the round's
         # largest composed plan; as a lazy persist it was (a) raced by
@@ -2392,7 +2361,7 @@ def _v6_core(
         # executing 2-3x per action) and (b) a nested InMemoryRelation
         # whose canonicalization made driver planning quadratic.
         # Interleaved A/B at sf0.1: steady ~29s -> ~20s, cold 110 -> 38s.
-        base = _scoped_local_checkpoint(
+        base = materialize(
             frame_fps.select("doc_id", "frame_idx", "n_frames", "fp_a")
         )
         dup = base.select(
@@ -2412,13 +2381,7 @@ def _v6_core(
         frames = with_twins(fingerprints(synth))
         return (
             dedup_video_containment_verified(
-                # eager_frames: under THIS composed plan the frame
-                # table's lazy persist was raced by concurrent subtree
-                # builds (r13 A/B: checkpoint wins 16.9/20.4 vs
-                # 21.5/24.5); standalone callers keep the lazy persist
-                # (r14, r13 verdict #1 — see the operator's note)
-                frames, threshold=0.8, seq_threshold=0.8, n=2,
-                eager_frames=True,
+                frames, threshold=0.8, seq_threshold=0.8, n=2
             )
             .where(F.col("seq_verified"))
             .select(

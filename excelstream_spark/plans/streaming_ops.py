@@ -131,7 +131,7 @@ def streaming_user_tracker(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: and /tmp is tmpfs (RAM) here, so repeated bench/gate runs would
 #: accumulate unboundedly.  The previous run's result is already
 #: materialized by the time the next run starts (the same assumption
-#: dedup.release_persists makes), so clean eagerly at entry.
+#: scope.release_persists makes), so clean eagerly at entry.
 _SINK_SCRATCH: list[str] = []
 
 

@@ -115,9 +115,9 @@ def test_minhash_band_single_parse_byte_equal(spark):
     from excelstream_spark.operators.dedup import (
         band_entries,
         minhash_signatures,
-        release_persists,
         shingle_rows,
     )
+    from excelstream_spark.scope import release_persists
 
     docs = load_table(spark, SF_DIR, "documents").limit(100)
     sigs = minhash_signatures(docs)
@@ -1355,8 +1355,8 @@ def test_containment_catches_subset_duplicates_jaccard_misses(spark):
     from excelstream_spark.operators.dedup import (
         dedup_ngram_containment,
         dedup_ngram_jaccard,
-        release_persists,
     )
+    from excelstream_spark.scope import release_persists
 
     short = "alpha beta gamma delta epsilon zeta eta theta"
     filler = " ".join(f"tok{i}" for i in range(200))
@@ -1388,8 +1388,8 @@ def test_containment_max_shingle_df_prunes_before_set_sizes(spark):
     from excelstream_spark.operators.dedup import (
         dedup_ngram_containment,
         dedup_ngram_jaccard,
-        release_persists,
     )
+    from excelstream_spark.scope import release_persists
     from excelstream_spark.plans.oracles import (
         ngram_containment_oracle,
         ngram_jaccard_oracle,

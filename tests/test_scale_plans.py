@@ -231,7 +231,7 @@ def test_connected_components_releases_checkpoints(spark):
     leaked blocks from prior 10x-scale runs squatted on the unified
     memory pool (localCheckpoint blocks are non-evictable)."""
     from excelstream_spark.operators.components import connected_components
-    from excelstream_spark.operators.dedup import release_persists
+    from excelstream_spark.scope import release_persists
 
     sc = spark.sparkContext
     release_persists()
