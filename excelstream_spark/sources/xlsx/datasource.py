@@ -615,13 +615,10 @@ class XlsxStreamReader(DataSourceStreamReader):
         return parts
 
     def read(self, partition: XlsxPartition):
-        with WorkbookReader(partition.file) as wb:
-            first = self.header
-            for row in wb.iter_rows(partition.sheet):
-                if first:
-                    first = False
-                    continue
-                yield coerce_row(row, self.schema_)
+        # the batch reader's row path: each file's header realigns its
+        # columns to the schema per sheetSchemaMode, so a workbook whose
+        # column order differs is not coerced positionally
+        yield from XlsxReader(self.schema_, self.options)._read_rows(partition)
 
     def commit(self, end: dict) -> None:
         pass  # progress is fully encoded in the checkpointed offset

@@ -218,6 +218,38 @@ def test_xlsx_streaming_offset_compaction(tmp_path):
     assert parts3 == []
 
 
+def test_xlsx_stream_reader_realigns_swapped_header(tmp_path):
+    """A streamed workbook whose header order differs from the schema is
+    realigned by header name, as the batch reader does (unit-level, no
+    Spark query needed)."""
+    import os
+
+    from pyspark.sql import types as T
+
+    from excelstream_spark.sources.xlsx import WorkbookWriter
+    from excelstream_spark.sources.xlsx.datasource import XlsxStreamReader
+
+    watch = str(tmp_path / "w")
+    os.makedirs(watch)
+    with WorkbookWriter(f"{watch}/a.xlsx") as wb:
+        wb.add_sheet("S")
+        wb.write_row(["id", "name"])
+        wb.write_row([1, "x"])
+    with WorkbookWriter(f"{watch}/b.xlsx") as wb:
+        wb.add_sheet("S")
+        wb.write_row(["name", "id"])
+        wb.write_row(["y", 2])
+    schema = T.StructType(
+        [T.StructField("id", T.LongType()), T.StructField("name", T.StringType())]
+    )
+    rdr = XlsxStreamReader(schema, {"path": watch})
+    parts = rdr.partitions(rdr.initialOffset(), rdr.latestOffset())
+    rows = {
+        os.path.basename(p.file): [tuple(r) for r in rdr.read(p)] for p in parts
+    }
+    assert rows == {"a.xlsx": [(1, "x")], "b.xlsx": [(2, "y")]}
+
+
 def test_disabling_offset_compaction_fails_fast(tmp_path):
     """A compacted checkpoint must not be silently reinterpreted as an
     exact-mode one (would reprocess the whole directory)."""
