@@ -117,6 +117,8 @@ def write_sheets(
             if header:
                 wb.write_header(df.columns)
             n = 0
+            # rows, not one Arrow collect as sources/http.py does: there
+            # is no row bound here, so a collect would be unbounded
             for row in df.toLocalIterator():
                 wb.write_row(list(row))
                 n += 1

@@ -30,10 +30,13 @@ from __future__ import annotations
 import io
 import zipfile
 from collections.abc import Iterator
+from typing import TYPE_CHECKING
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+if TYPE_CHECKING:
+    import pandas as pd
 
 _LINES_PER_BATCH = 10_000
 
@@ -127,6 +130,11 @@ def read_csv_zip(
     )
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # imported here, not at module top: every Python worker that
+        # unpickles the xlsx source imports this package, and only this
+        # closure needs pandas
+        import pandas as pd
+
         for pdf in batches:
             for content in pdf["content"]:
                 with zipfile.ZipFile(io.BytesIO(bytes(content))) as z:

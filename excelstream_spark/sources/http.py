@@ -7,6 +7,22 @@ is the ONE deliberately driver-side small-result path in this repo: the
 result of an analytical query that a human downloads is bounded by
 ``max_rows`` (guarded, not implicit).
 
+A DataFrame with a scalar schema (batch_write.vectorizable — the rule
+the xlsx sink uses) is fetched ONCE as Arrow, ``df.limit(max_rows +
+1).toArrow()``: one Spark job, no per-row pickling, and the driver never
+holds more than ``max_rows + 1`` rows.  More than ``max_rows`` rows raise
+ResultTooLargeError.  Each Arrow batch is then encoded columnar — xlsx
+through WorkbookWriter.write_arrow_batches (the sink's encoder), csv by
+building each column's text in bulk for the stdlib csv writer — giving
+the same bytes the row path gives for the same rows.
+
+The row path (``toLocalIterator`` — one job per partition, rows streamed
+under the same guard, cells encoded one by one) serves everything else:
+array/map/struct/binary columns, any row source that is not a DataFrame
+(anything offering ``columns`` and ``toLocalIterator``), and a schema
+with a timestamp column when the driver process's time zone is not UTC
+(Rows carry that zone's wall clock; Arrow carries UTC instants).
+
 For big exports the pattern is IMPLEMENTED below (``export_presigned`` /
 ``serve_dataframe``): write distributed to object storage and hand out
 presigned part URLs — see the big-result section.
@@ -17,9 +33,19 @@ from __future__ import annotations
 import csv
 import gzip
 import io
+import time
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
+from pyspark.sql import types as T
 
+from excelstream_spark.sources.xlsx.batch_write import (
+    decimal_text,
+    vectorizable,
+    wall_clock,
+)
 from excelstream_spark.sources.xlsx.writer_core import WorkbookWriter
 
 XLSX_CONTENT_TYPE = (
@@ -34,18 +60,74 @@ class ResultTooLargeError(ValueError):
     pass
 
 
-def _iter_rows_bounded(df: DataFrame, max_rows: int):
-    """Stream rows to the driver partition-by-partition (toLocalIterator —
-    never materializes the whole result) with a hard row guard."""
+def _too_large(max_rows: int) -> ResultTooLargeError:
+    return ResultTooLargeError(
+        f"result exceeds max_rows={max_rows}; write to object storage "
+        "and serve a presigned URL instead"
+    )
+
+
+def _iter_rows_bounded(df, max_rows: int):
+    """Row path: stream rows to the driver partition-by-partition
+    (toLocalIterator — never materializes the whole result) with a hard
+    row guard."""
     n = 0
     for row in df.toLocalIterator():
         n += 1
         if n > max_rows:
-            raise ResultTooLargeError(
-                f"result exceeds max_rows={max_rows}; write to object storage "
-                "and serve a presigned URL instead"
-            )
+            raise _too_large(max_rows)
         yield row
+
+
+def _fetches_as_arrow(df) -> bool:
+    """Whether ``df`` takes the Arrow path (module docstring)."""
+    if not isinstance(df, DataFrame):
+        return False
+    fields = df.schema.fields
+    if not fields or not vectorizable(df.schema):
+        return False
+    local_is_utc = time.timezone == 0 and not time.daylight
+    return local_is_utc or not any(
+        isinstance(f.dataType, T.TimestampType) for f in fields
+    )
+
+
+def _arrow_batches(df, max_rows: int) -> list[pa.RecordBatch] | None:
+    """The whole result from one bounded Arrow fetch, or None when ``df``
+    takes the row path."""
+    if not _fetches_as_arrow(df):
+        return None
+    table = df.limit(max_rows + 1).toArrow()
+    if table.num_rows > max_rows:
+        raise _too_large(max_rows)
+    return table.to_batches()
+
+
+def _csv_text(col: pa.Array, dtype: T.DataType) -> list[str]:
+    """One column's cells as the text csv.writer makes of the row path's
+    values: ``str()`` of the Python value a Spark Row carries, "" for
+    null."""
+    if isinstance(dtype, T.BooleanType):
+        vals = pc.fill_null(col, False).to_numpy(zero_copy_only=False)
+        text = np.where(vals, "True", "False")
+    elif isinstance(dtype, (T.FloatType, T.DoubleType)):
+        # float32 widens to binary64 as in Spark's Row conversion; numpy's
+        # text of a float64 is its repr
+        text = pc.fill_null(col.cast(pa.float64()), 0.0).to_numpy().astype("U32")
+    elif isinstance(dtype, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
+        text = pc.fill_null(col.cast(pa.int64()), 0).to_numpy().astype("U20")
+    else:  # string, date, decimal, timestamp: Arrow's own text
+        if isinstance(dtype, T.DecimalType):
+            col = decimal_text(col)
+        elif isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
+            # str(datetime) drops an all-zero fraction; Arrow always prints it
+            col = pc.replace_substring_regex(
+                wall_clock(col).cast(pa.string()), r"\.000000$", ""
+            )
+        else:
+            col = col.cast(pa.string())
+        return pc.fill_null(col, "").to_numpy(zero_copy_only=False).tolist()
+    return np.where(col.is_null().to_numpy(zero_copy_only=False), "", text).tolist()
 
 
 def dataframe_to_xlsx_bytes(
@@ -55,14 +137,20 @@ def dataframe_to_xlsx_bytes(
     compression: int = 6,
     max_rows: int = DEFAULT_MAX_ROWS,
 ) -> bytes:
-    """Serialize a (bounded) DataFrame to xlsx bytes for an HTTP response."""
+    """Serialize a (bounded) DataFrame to xlsx bytes for an HTTP response:
+    one bounded Arrow fetch encoded by the sink's columnar encoder, or the
+    row path (module docstring)."""
+    batches = _arrow_batches(df, max_rows)
     buf = io.BytesIO()
     with WorkbookWriter(buf, compression=compression) as wb:
         wb.add_sheet(sheet_name)
         if header:
             wb.write_header(df.columns)
-        for row in _iter_rows_bounded(df, max_rows):
-            wb.write_row(list(row))
+        if batches is not None:
+            wb.write_arrow_batches(batches, df.schema)
+        else:
+            for row in _iter_rows_bounded(df, max_rows):
+                wb.write_row(list(row))
     return buf.getvalue()
 
 
@@ -74,13 +162,21 @@ def dataframe_to_csv_bytes(
     max_rows: int = DEFAULT_MAX_ROWS,
 ) -> bytes:
     """Serialize a (bounded) DataFrame to (optionally gzipped) CSV bytes
-    (RFC-4180 quoting via the stdlib csv writer)."""
+    (RFC-4180 quoting via the stdlib csv writer): one bounded Arrow fetch
+    whose batches are turned into text column by column, or the row path
+    (module docstring)."""
+    batches = _arrow_batches(df, max_rows)
     text = io.StringIO()
     w = csv.writer(text, delimiter=delimiter, quoting=csv.QUOTE_MINIMAL, lineterminator="\r\n")
     if header:
         w.writerow(df.columns)
-    for row in _iter_rows_bounded(df, max_rows):
-        w.writerow(["" if v is None else v for v in row])
+    if batches is not None:
+        types = [f.dataType for f in df.schema.fields]
+        for batch in batches:
+            w.writerows(zip(*map(_csv_text, batch.columns, types)))
+    else:
+        for row in _iter_rows_bounded(df, max_rows):
+            w.writerow(["" if v is None else v for v in row])
     data = text.getvalue().encode("utf-8")
     if gzip_compress:
         data = gzip.compress(data, compresslevel=6)
@@ -250,9 +346,9 @@ def serve_dataframe(
     **fmt_opts,
 ) -> ExportResult:
     """The one-call HTTP export: try the bounded in-memory path first
-    (no count job — the row guard trips mid-stream), fall back to the
-    distributed presigned-URL path when the result is too large and a
-    destination is configured."""
+    (no count job — the row guard reads at most ``max_inline_rows + 1``
+    rows), fall back to the distributed presigned-URL path when the
+    result is too large and a destination is configured."""
     try:
         if fmt == "xlsx":
             body = dataframe_to_xlsx_bytes(

@@ -27,11 +27,13 @@ test (tests/test_xlsx.py): same cell XML for every scalar type, same
 null cells, same escaping via the same ooxml.esc.
 
 Non-scalar columns (array/map/struct/binary) and shared-strings mode use
-the row writer instead — selected at plan time in datasource.writer().
+the row writer instead — selected at plan time in datasource.writer(),
+and per request in sources/http.py.
 """
 
 from __future__ import annotations
 
+from decimal import Decimal
 from itertools import chain, repeat
 
 import numpy as np
@@ -77,6 +79,52 @@ def _special_str_frag(ref: str, s_attr: str, v: str) -> str:
         f'<c r="{ref}"{s_attr} t="inlineStr"><is>'
         f'<t xml:space="preserve">{ooxml.esc(v)}</t></is></c>'
     )
+
+
+def _row_decimal_str(d: Decimal) -> str:
+    """``str()`` of the Decimal a Spark Row carries for ``d``.  The JVM
+    hands decimals to Python as ``BigDecimal.toEngineeringString()`` text,
+    which differs from the plain/scientific text only in E-notation: the
+    exponent moves to a multiple of 3 and the coefficient is padded
+    (1E-10 -> '100E-12' -> Decimal prints '1.00E-10')."""
+    sign, digits, exp = d.as_tuple()
+    coeff = "".join(map(str, digits))
+    adjusted = exp + len(coeff) - 1
+    sig = adjusted % 3 + 1
+    adjusted -= sig - 1
+    if not any(digits):  # Java's zero spellings
+        coeff = ("0", "0.00", "0.0")[sig - 1]
+        adjusted += 3 if sig > 1 else 0
+    elif sig >= len(coeff):
+        coeff += "0" * (sig - len(coeff))
+    else:
+        coeff = f"{coeff[:sig]}.{coeff[sig:]}"
+    return str(Decimal(f"{'-' if sign else ''}{coeff}E{adjusted}"))
+
+
+def decimal_text(col: pa.Array) -> pa.Array:
+    """Decimal column -> the text the row writer stringifies for it.
+    Arrow's cast agrees for plain text; the rare E-notation values (below
+    1e-6 in magnitude) are respelled one by one, as a Row carries them."""
+    text = col.cast(pa.string())
+    sci = pc.fill_null(pc.match_substring(text, "E"), False).to_numpy(
+        zero_copy_only=False
+    )
+    if not sci.any():
+        return text
+    out = text.to_pylist()
+    for i in np.flatnonzero(sci):
+        out[i] = _row_decimal_str(col[i].as_py())
+    return pa.array(out, pa.string())
+
+
+def wall_clock(col: pa.Array) -> pa.Array:
+    """Timestamp column -> naive wall-clock values: a tz-aware column is
+    localized to its own zone (the row path receives local wall-clock
+    datetimes, not UTC instants); a naive one is returned as is."""
+    if getattr(col.type, "tz", None):
+        return pc.local_timestamp(col)
+    return col
 
 
 def _null_mask(col: pa.Array) -> np.ndarray:
@@ -165,9 +213,8 @@ def _append_column(
         vals = pc.fill_null(col.cast(pa.float64()), 0.0).to_numpy()
         out.cell(letter, f'"{s_attr}><v>', vals.astype("U32").tolist(), nulls, "</v></c>")
     elif isinstance(dtype, T.DecimalType):
-        # the row writer stringifies Decimal and writes an inline string;
-        # Arrow's decimal->utf8 cast preserves scale digits identically
-        _append_column(out, col.cast(pa.string()), T.StringType(), letter, style)
+        # the row writer stringifies Decimal and writes an inline string
+        _append_column(out, decimal_text(col), T.StringType(), letter, style)
     elif isinstance(dtype, T.DateType):
         days = pc.fill_null(col.cast(pa.int32()), 0).to_numpy().astype(np.int64)
         serial = days + EPOCH_1970_SERIAL
@@ -177,12 +224,10 @@ def _append_column(
         s = f' s="{style}"' if style is not None else f' s="{ooxml.STYLE_DATE}"'
         out.cell(letter, f'"{s}><v>', serial.astype("U32").tolist(), nulls, "</v></c>")
     elif isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
-        # tz-aware columns: the row path receives session-local wall-clock
-        # datetimes, so serialize the LOCAL timestamp, not the UTC instant
-        # (equal under the library default UTC session, divergent otherwise)
-        if getattr(col.type, "tz", None):
-            col = pc.local_timestamp(col)
-        micros = pc.fill_null(col.cast(pa.int64()), 0).to_numpy()
+        # tz-aware columns: serialize the LOCAL timestamp, not the UTC
+        # instant (equal under the library default UTC session, divergent
+        # otherwise)
+        micros = pc.fill_null(wall_clock(col).cast(pa.int64()), 0).to_numpy()
         serial, in_day = _serial_parts(micros)
         body = serial.astype("U32").tolist()
         if style is not None:  # explicit style (0 included) — row-path parity

@@ -700,31 +700,6 @@ class _XlsxWriteOptions:
             n += 1
         return n
 
-    def _write_arrow_batches(self, wb: WorkbookWriter, iterator) -> int:
-        """Shared Arrow write loop: slices batches at the auto-split
-        sheet boundary (identical behavior to the row path)."""
-        from excelstream_spark.sources.xlsx.batch_write import batch_to_rows_xml
-
-        n = 0
-        for batch in iterator:
-            offset = 0
-            while offset < batch.num_rows:
-                if wb.rows_remaining() <= 0:
-                    wb.advance_sheet_for_split()
-                take = min(wb.rows_remaining(), batch.num_rows - offset)
-                chunk = batch.slice(offset, take)
-                xml = batch_to_rows_xml(
-                    chunk,
-                    self.schema_,
-                    wb.next_row_index,
-                    col_styles=self.col_styles,
-                    row_height=self.row_height,
-                )
-                wb.write_rows_xml(xml, take)
-                offset += take
-                n += take
-        return n
-
 
 class XlsxWriter(_XlsxWriteOptions, DataSourceWriter):
     def __init__(self, schema: T.StructType, options, overwrite: bool):
@@ -875,7 +850,7 @@ class XlsxStreamArrowWriter(XlsxStreamWriter, DataSourceStreamArrowWriter):
     def write(self, iterator) -> XlsxCommitMessage:
         tmp, pid = self._tmp_target()
         with self._open_workbook(tmp) as wb:
-            n = self._write_arrow_batches(wb, iterator)
+            n = wb.write_arrow_batches(iterator, self.schema_, self.col_styles)
         if n == 0:
             os.remove(tmp)
             return XlsxCommitMessage(file="", rows=0, pid=pid)
@@ -892,7 +867,7 @@ class XlsxArrowWriter(XlsxWriter, DataSourceArrowWriter):
     def write(self, iterator) -> XlsxCommitMessage:
         target = self._target_path()
         with self._open_workbook(target) as wb:
-            n = self._write_arrow_batches(wb, iterator)
+            n = wb.write_arrow_batches(iterator, self.schema_, self.col_styles)
         return XlsxCommitMessage(file=target, rows=n)
 
 

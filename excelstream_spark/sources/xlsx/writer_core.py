@@ -33,6 +33,9 @@ from excelstream_spark.sources.xlsx.reader_core import ExcelError
 
 EXCEL_MAX_ROWS = 1_048_576
 
+#: every member's modification time: the earliest a ZIP header can hold
+ZIP_EPOCH = (1980, 1, 1, 0, 0, 0)
+
 #: memoized column-letter byte strings — col_letter() is on the per-cell
 #: hot path (profiled at ~16% of write time before caching)
 _COL_BYTES: list[bytes] = [ooxml.col_letter(i).encode() for i in range(64)]
@@ -138,9 +141,7 @@ class WorkbookWriter:
             raise ValueError(f"duplicate sheet name: {name!r}")
         self._sheet_names.append(name)
         entry = f"xl/worksheets/sheet{len(self._sheet_names)}.xml"
-        # open by NAME so the member inherits the archive's deflate settings
-        # (a bare ZipInfo would silently default to ZIP_STORED)
-        self._sheet_stream = self._zip.open(entry, "w")
+        self._sheet_stream = self._zip.open(self._member(entry), "w")
         head = (
             '<?xml version="1.0" encoding="UTF-8" standalone="yes"?>\n'
             f'<worksheet xmlns="{ooxml.XLSX_NS}">'
@@ -255,6 +256,33 @@ class WorkbookWriter:
         self._sheet_stream.write(xml)
         self._row_index += n_rows
 
+    def write_arrow_batches(self, batches, schema, col_styles=None) -> int:
+        """Append Arrow RecordBatches of a scalar ``schema`` (see
+        batch_write.vectorizable) through batch_write.batch_to_rows_xml,
+        slicing each batch at the auto-split sheet boundary — the same
+        rows, sheets and bytes as write_row per row.  Returns the number
+        of rows written."""
+        from excelstream_spark.sources.xlsx.batch_write import batch_to_rows_xml
+
+        n = 0
+        for batch in batches:
+            offset = 0
+            while offset < batch.num_rows:
+                if self.rows_remaining() <= 0:
+                    self.advance_sheet_for_split()
+                take = min(self.rows_remaining(), batch.num_rows - offset)
+                xml = batch_to_rows_xml(
+                    batch.slice(offset, take),
+                    schema,
+                    self._row_index,
+                    col_styles=col_styles,
+                    row_height=self._row_height,
+                )
+                self.write_rows_xml(xml, take)
+                offset += take
+                n += take
+        return n
+
     def write_header(self, names) -> None:
         """Bold header row (reference K4 ``write_header_bold``); repeated
         automatically at the top of every auto-split continuation sheet."""
@@ -310,6 +338,15 @@ class WorkbookWriter:
 
     # -- finalize ----------------------------------------------------------
 
+    def _member(self, name: str) -> zipfile.ZipInfo:
+        """Header for one archive member: the archive's deflate settings (a
+        bare ZipInfo would default to ZIP_STORED) and a fixed timestamp,
+        so the same rows give the same workbook bytes whenever written."""
+        info = zipfile.ZipInfo(name, date_time=ZIP_EPOCH)
+        info.compress_type = self._zip.compression
+        info._compresslevel = self._zip.compresslevel  # as ZipFile.open(name) sets it
+        return info
+
     def close(self) -> None:
         """Emit workbook scaffolding and finalize the ZIP (reference K6)."""
         if self._closed:
@@ -318,19 +355,21 @@ class WorkbookWriter:
             self.add_sheet()
         self._end_sheet()
         n = len(self._sheet_names)
-        z = self._zip
-        z.writestr("[Content_Types].xml", ooxml.content_types_xml(n))
-        z.writestr("_rels/.rels", ooxml.PACKAGE_RELS_XML)
-        z.writestr("xl/workbook.xml", ooxml.workbook_xml(self._sheet_names))
-        z.writestr("xl/_rels/workbook.xml.rels", ooxml.workbook_rels_xml(n))
-        z.writestr("xl/styles.xml", ooxml.STYLES_XML)
-        z.writestr(
-            "xl/sharedStrings.xml",
-            self._sst.to_xml() if self._sst else ooxml.EMPTY_SST_XML,
-        )
-        z.writestr("docProps/app.xml", ooxml.APP_XML)
-        z.writestr("docProps/core.xml", ooxml.CORE_XML)
-        z.close()
+        members = {
+            "[Content_Types].xml": ooxml.content_types_xml(n),
+            "_rels/.rels": ooxml.PACKAGE_RELS_XML,
+            "xl/workbook.xml": ooxml.workbook_xml(self._sheet_names),
+            "xl/_rels/workbook.xml.rels": ooxml.workbook_rels_xml(n),
+            "xl/styles.xml": ooxml.STYLES_XML,
+            "xl/sharedStrings.xml": (
+                self._sst.to_xml() if self._sst else ooxml.EMPTY_SST_XML
+            ),
+            "docProps/app.xml": ooxml.APP_XML,
+            "docProps/core.xml": ooxml.CORE_XML,
+        }
+        for name, data in members.items():
+            self._zip.writestr(self._member(name), data)
+        self._zip.close()
         self._closed = True
 
     def __enter__(self):

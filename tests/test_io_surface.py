@@ -83,6 +83,149 @@ def test_http_max_rows_guard(spark):
         assert "presigned" in str(e)
 
 
+class _RowSource:
+    """Offers only ``columns`` and ``toLocalIterator`` — what a traced
+    wrapper around a DataFrame offers — so the export takes the row
+    path over the same rows."""
+
+    def __init__(self, df):
+        self._df = df
+        self.columns = df.columns
+        self.rows = 0
+
+    def toLocalIterator(self):
+        for row in self._df.toLocalIterator():
+            self.rows += 1
+            yield row
+
+
+def _sheet_xml(body: bytes) -> bytes:
+    with zipfile.ZipFile(io.BytesIO(body)) as z:
+        return z.read("xl/worksheets/sheet1.xml")
+
+
+def _typed_frame(spark):
+    """Ordered, multi-partition, every scalar type the Arrow path encodes,
+    with nulls and the values whose text is easy to get wrong."""
+    import datetime as dt
+    from decimal import Decimal
+
+    from pyspark.sql import types as T
+
+    schema = T.StructType([
+        T.StructField("id", T.IntegerType()),
+        T.StructField("s", T.StringType()),
+        T.StructField("d", T.DateType()),
+        T.StructField("ts", T.TimestampType()),
+        T.StructField("ntz", T.TimestampNTZType()),
+        T.StructField("b", T.BooleanType()),
+        T.StructField("f32", T.FloatType()),
+        T.StructField("f64", T.DoubleType()),
+        T.StructField("dec", T.DecimalType(20, 10)),
+        T.StructField("small", T.ShortType()),
+        T.StructField("big", T.LongType()),
+    ])
+    strings = ["plain", "a & <b> \"q\" 'x'", "=SUM(A1:A2)", "line\nbreak, comma", "", None]
+    stamps = [
+        dt.datetime(2024, 3, 10, 0, 0, 0),
+        dt.datetime(2024, 3, 10, 12, 34, 56, 789000),
+        dt.datetime(1969, 7, 20, 20, 17, 40),
+        dt.datetime(2024, 11, 3, 1, 30, 0, 5),
+        None,
+    ]
+    decimals = [Decimal("0E-10"), Decimal("1E-10"), Decimal("-12345.6789000000"), Decimal("7"), None]
+    floats = [1.1, -0.0, 1e16, 0.0001, float("nan"), None, 123456.789]
+    rows = [
+        (
+            i,
+            strings[i % len(strings)],
+            None if i % 7 == 3 else dt.date(1899 + i * 5, 1 + i % 12, 1 + i % 28),
+            stamps[i % len(stamps)],
+            stamps[(i + 2) % len(stamps)],
+            None if i % 5 == 4 else i % 2 == 0,
+            floats[i % len(floats)],
+            floats[(i + 3) % len(floats)],
+            decimals[i % len(decimals)],
+            None if i % 6 == 5 else (-1) ** i * i,
+            None if i % 4 == 3 else (-1) ** i * 2**62 // (i + 1),
+        )
+        for i in range(40)
+    ]
+    return spark.createDataFrame(rows, schema).repartition(3).orderBy("id")
+
+
+@pytest.mark.parametrize("tz", ["UTC", "America/New_York"])
+def test_http_arrow_export_matches_row_path(spark, tz):
+    """The one-fetch Arrow path writes exactly the row path's sheet XML
+    and csv bytes for the same ordered rows, under either session zone."""
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", tz)
+    try:
+        df = _typed_frame(spark)
+        assert http._fetches_as_arrow(df)
+        arrow_x = http.dataframe_to_xlsx_bytes(df)
+        rows_x = http.dataframe_to_xlsx_bytes(_RowSource(df))
+        assert _sheet_xml(arrow_x) == _sheet_xml(rows_x)
+        assert arrow_x == rows_x  # member timestamps are fixed too
+        arrow_c = http.dataframe_to_csv_bytes(df, delimiter=";")
+        assert arrow_c == http.dataframe_to_csv_bytes(_RowSource(df), delimiter=";")
+        assert arrow_c.count(b"\r\n") > 40  # header + rows (one cell holds a newline)
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev)
+
+
+def test_http_arrow_guard_serves_exactly_max_rows(spark):
+    df = spark.range(0, 25, numPartitions=4).withColumnRenamed("id", "n")
+    body = http.dataframe_to_csv_bytes(df, max_rows=25)
+    assert body.decode().split("\r\n")[1:-1] == [str(i) for i in range(25)]
+    rows = list(WorkbookReader(http.dataframe_to_xlsx_bytes(df, max_rows=25)).iter_rows(0))
+    assert len(rows) == 26
+    for fmt in ("xlsx", "csv"):
+        with pytest.raises(http.ResultTooLargeError):
+            http.serve_dataframe(df, f"n.{fmt}", fmt=fmt, max_inline_rows=24)
+    empty = df.where("n < 0")
+    assert http.dataframe_to_csv_bytes(empty) == b"n\r\n"
+    assert http.dataframe_to_xlsx_bytes(empty) == http.dataframe_to_xlsx_bytes(_RowSource(empty))
+
+
+def test_http_non_scalar_frame_stays_on_row_path(spark):
+    """Array and struct columns, and a frame with no columns, are not
+    Arrow-encoded: the export is the row path's, cell text included."""
+    df = spark.sql(
+        "SELECT 1 AS id, array(1, 2) AS xs, named_struct('a', 1, 'b', 'x') AS st"
+    )
+    assert not http._fetches_as_arrow(df)
+    body = http.dataframe_to_csv_bytes(df)
+    assert body == b'id,xs,st\r\n1,"[1, 2]","Row(a=1, b=\'x\')"\r\n'
+    assert http.dataframe_to_xlsx_bytes(df) == http.dataframe_to_xlsx_bytes(_RowSource(df))
+    no_columns = spark.range(3).select()
+    assert not http._fetches_as_arrow(no_columns)
+    assert http.dataframe_to_csv_bytes(no_columns) == b"\r\n" * 4
+
+
+def test_http_row_source_is_served(spark):
+    """An object with only ``columns`` and ``toLocalIterator`` is served
+    through the row path, guard included."""
+    src = _RowSource(load_table(spark, SF_DIR, "region"))
+    res = http.serve_dataframe(src, "r.csv", fmt="csv")
+    assert res.inline and src.rows == 5
+    assert res.body.decode().splitlines()[0] == "r_regionkey,r_name"
+    with pytest.raises(http.ResultTooLargeError):
+        http.serve_dataframe(_RowSource(load_table(spark, SF_DIR, "region")), "r.xlsx", max_inline_rows=4)
+
+
+def test_http_timestamps_take_row_path_off_utc(spark, monkeypatch):
+    """Rows carry the driver zone's wall clock, Arrow carries UTC: a
+    timestamp column leaves the Arrow path unless that zone is UTC."""
+    ts = spark.sql("SELECT 1 AS id, timestamp'2024-01-01 00:00:00' AS ts")
+    ntz = spark.sql("SELECT 1 AS id, timestamp_ntz'2024-01-01 00:00:00' AS ts")
+    assert http._fetches_as_arrow(ts) and http._fetches_as_arrow(ntz)
+    monkeypatch.setattr(http.time, "timezone", 18000)
+    monkeypatch.setattr(http.time, "daylight", 1)
+    assert not http._fetches_as_arrow(ts)
+    assert http._fetches_as_arrow(ntz)
+
+
 class _FakeS3:
     """Minimal boto3-shaped client: paginated listing + URL formatting —
     enough to strategy-test the presign path without cloud access."""
@@ -371,6 +514,20 @@ def test_csv_zstd_roundtrip(spark, tmp_path):
     assert files, "expected .csv.zst part files"
     back = spark.read.schema(src.schema).options(header=True).csv(out)
     assert sorted(map(tuple, back.collect())) == sorted(map(tuple, src.collect()))
+
+
+def test_xlsx_source_import_leaves_pandas_out():
+    """Python workers import the package to unpickle the xlsx source; only
+    the csv.zip reader's executor closure needs pandas."""
+    import subprocess
+    import sys
+
+    code = (
+        "import sys; import excelstream_spark.sources.xlsx.datasource; "
+        "sys.exit('pandas' in sys.modules)"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    subprocess.run([sys.executable, "-c", code], cwd=root, check=True)
 
 
 def test_csv_zip_roundtrip(spark, tmp_path):

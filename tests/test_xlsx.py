@@ -257,6 +257,63 @@ def test_excel_row_ceiling_autosplit(tmp_path):
         assert total == 250
 
 
+def test_workbook_bytes_do_not_depend_on_the_clock(monkeypatch):
+    """Every ZIP member carries a fixed timestamp: the same rows written
+    seconds apart give the same bytes."""
+    import io
+    import time
+
+    def write(now):
+        monkeypatch.setattr(time, "time", lambda: now)
+        buf = io.BytesIO()
+        with WorkbookWriter(buf) as wb:
+            wb.add_sheet("S")
+            wb.write_header(["a", "b"])
+            wb.write_row([1, "x"])
+        return buf.getvalue()
+
+    first = write(1_700_000_000.0)
+    assert write(1_700_000_007.0) == first
+    with zipfile.ZipFile(io.BytesIO(first)) as z:
+        assert {i.date_time for i in z.infolist()} == {(1980, 1, 1, 0, 0, 0)}
+        assert {i.compress_type for i in z.infolist()} == {zipfile.ZIP_DEFLATED}
+
+
+def test_write_arrow_batches_splits_like_write_row():
+    """The shared Arrow write loop slices batches at the sheet boundary,
+    re-emits the header and gives the row path's bytes."""
+    import io
+
+    import pyarrow as pa
+
+    schema = T.StructType([T.StructField("n", T.LongType()), T.StructField("s", T.StringType())])
+    batches = [
+        pa.record_batch([pa.array(range(k, k + 4), pa.int64()), pa.array([f"v{k}"] * 4)], names=["n", "s"])
+        for k in (0, 4)
+    ]
+
+    def workbook(fill):
+        buf = io.BytesIO()
+        with WorkbookWriter(buf, max_rows_per_sheet=3, row_height=15) as wb:
+            wb.add_sheet("S")
+            wb.write_header(["n", "s"])
+            fill(wb)
+        return buf.getvalue()
+
+    def by_row(wb):
+        for b in batches:
+            for r in b.to_pylist():
+                wb.write_row([r["n"], r["s"]], styles=[None, ooxml.STYLE_NAMES["percent"]])
+
+    written = []
+    arrow = workbook(lambda wb: written.append(wb.write_arrow_batches(
+        batches, schema, col_styles=[None, ooxml.STYLE_NAMES["percent"]])))
+    assert written == [8]
+    assert arrow == workbook(by_row)
+    with WorkbookReader(arrow) as rb:
+        assert len(rb.sheet_names()) == 4  # 2 data rows under each header
+
+
 def test_max_rows_per_sheet_option_roundtrip(spark, tmp_path):
     """maxRowsPerSheet is honored by the sink, continuation sheets repeat
     the header, and an allSheets read reassembles every row exactly."""
