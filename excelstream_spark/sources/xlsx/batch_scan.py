@@ -15,14 +15,22 @@ large ``</row>``-aligned chunks and processes them COLUMNARLY:
    date-styled serials via vectorized numpy arithmetic (identical
    semantics to dates.serial_to_datetime, 1900-leap-bug included).
 
-Anything the scanner cannot prove it handled — cell-count mismatch
-(formulas, rich text, unusual attribute order), non-rectangular rows,
-values Arrow's strict casts reject — falls back per CHUNK to an
-ElementTree fragment parse with the exact per-cell semantics of
-reader_core (and per COLUMN to scalar typing), so the fast path is a
-pure optimization: byte-identical results, verified by
-tests/test_xlsx.py::test_batch_reader_matches_row_reader and the
-driver's xlsx_roundtrip_lineitem oracle.
+There is one cell-typing rule, ``reader_core.WorkbookReader.cell_value``;
+this module only decides when it can apply that rule to a whole column
+at once.  Anything the scanner cannot prove it handled falls back:
+
+- per CHUNK (cell-count mismatch from formulas, rich text or unusual
+  attribute order; non-rectangular rows): the chunk's ``<row>`` elements
+  are parsed with ElementTree under the spreadsheetml namespace (plus the
+  worksheet's prefixes) and typed by reader_core's row parser, then
+  columnized by ``rows_to_batch`` — the row reader's own code;
+- per COLUMN (mixed cell kinds, cell kinds without a bulk conversion,
+  values Arrow's strict casts reject): each cell goes through
+  ``cell_value`` and reader_core's lenient coercion.
+
+So the fast path is a pure optimization, checked by
+tests/test_xlsx.py::test_batch_reader_matches_row_reader, the fallback
+equivalence tests and the xlsx_roundtrip_lineitem catalog oracle.
 
 Measured (local[32], sf0.1 lineitem, 600k rows over 32 part files):
 single-thread 21k -> 68k rows/s (3.2x); Spark-level warm read
@@ -43,10 +51,18 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import types as T
 
+from excelstream_spark.sources.xlsx import ooxml
 from excelstream_spark.sources.xlsx.dates import (
     EPOCH_1970_SERIAL as _EPOCH_1970_SERIAL,
     MAX_SERIAL,
     US_PER_DAY as _US_PER_DAY,
+)
+from excelstream_spark.sources.xlsx.reader_core import (
+    ROW_TAG,
+    _coerce,
+    parse_row,
+    resolve_header_remap,
+    rows_to_batch,
 )
 
 #: One token per cell.  Groups: 0 column letters, 1 remaining attrs blob,
@@ -68,29 +84,40 @@ _T_ATTR_RE = re.compile(r' t="([^"]+)"')
 _S_ATTR_RE = re.compile(r' s="(\d+)"')
 _ROW_OPEN_RE = re.compile(r"<row[ />]")  # \b alone would skip <row/> vs <rowBreaks>
 _ROW_SELFCLOSE_RE = re.compile(r"<row\b[^>]*/>")
+_ROOT_RE = re.compile(r"<(?:[\w.-]+:)?worksheet\b([^>]*)>")
+_PREFIX_DECL_RE = re.compile(r"""xmlns:[\w.-]+=(["']).*?\1""")
+
+#: Spark types whose bulk Arrow cast from cell text equals the scalar path
+_NUMERIC = (T.LongType, T.IntegerType, T.ShortType, T.ByteType, T.DoubleType, T.FloatType)
+
+_ARROW_TYPES = {
+    T.LongType(): pa.int64(),
+    T.IntegerType(): pa.int32(),
+    T.ShortType(): pa.int16(),
+    T.ByteType(): pa.int8(),
+    T.DoubleType(): pa.float64(),
+    T.FloatType(): pa.float32(),
+    T.BooleanType(): pa.bool_(),
+    T.StringType(): pa.string(),
+    T.DateType(): pa.date32(),
+    T.TimestampNTZType(): pa.timestamp("us"),
+    T.TimestampType(): pa.timestamp("us", tz="UTC"),
+    T.BinaryType(): pa.binary(),
+}
 
 
 def to_arrow_schema(schema: T.StructType) -> pa.Schema:
-    """Spark schema -> pyarrow schema for RecordBatch-yielding readers."""
-    mapping = {
-        T.LongType(): pa.int64(),
-        T.IntegerType(): pa.int32(),
-        T.DoubleType(): pa.float64(),
-        T.FloatType(): pa.float32(),
-        T.BooleanType(): pa.bool_(),
-        T.StringType(): pa.string(),
-        T.DateType(): pa.date32(),
-        T.TimestampNTZType(): pa.timestamp("us"),
-        T.TimestampType(): pa.timestamp("us", tz="UTC"),
-        T.BinaryType(): pa.binary(),
-    }
+    """Spark schema -> pyarrow schema of the reader's RecordBatches;
+    raises ValueError naming the first column the reader cannot type."""
     fields = []
     for f in schema.fields:
-        pa_t = mapping.get(f.dataType)
+        pa_t = _ARROW_TYPES.get(f.dataType)
         if pa_t is None:
+            readable = ", ".join(t.simpleString() for t in _ARROW_TYPES)
             raise ValueError(
-                f"xlsx arrow reader: unsupported column type {f.dataType} "
-                f"for {f.name!r}; set arrowBatches=false"
+                f"xlsx reader: unsupported column type "
+                f"{f.dataType.simpleString()} for {f.name!r}; readable "
+                f"column types: {readable}"
             )
         fields.append(pa.field(f.name, pa_t, nullable=True))
     return pa.schema(fields)
@@ -129,12 +156,14 @@ def _serials_to_us(vals: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
 
 
 class _Kind(typing.NamedTuple):
-    """Resolved cell kind for one attrs blob: (t attribute, date-styled).
-    Value equality matters: one column's cells may carry different attr
-    blobs (varying s= indices) that resolve to the same kind."""
+    """Resolved cell kind for one attrs blob: (t attribute, date-styled,
+    s attribute).  A column is uniform when its live cells agree on
+    ``(t, is_date)`` — its cells may carry different s= indices that
+    resolve alike; ``s`` is what the scalar path hands ``cell_value``."""
 
     t: str | None
     is_date: bool
+    s: str | None
 
 
 class BatchSheetReader:
@@ -160,6 +189,10 @@ class BatchSheetReader:
         self.pa_schema = to_arrow_schema(schema)
         self._kind_cache: dict[str, _Kind] = {}
         self._col_of: dict[str, int] = {}
+        #: namespace declarations wrapped around each fallback chunk: its
+        #: unprefixed elements read as spreadsheetml (the tags parse_row
+        #: compares), plus the worksheet's prefixes (x14ac:dyDescent=...)
+        self._xmlns = f'xmlns="{ooxml.XLSX_NS}"'
         self._sst_pa: pa.Array | None = None
         #: source-column index for each schema field (None until the
         #: header row resolves it; identity when headers match positions).
@@ -175,12 +208,10 @@ class BatchSheetReader:
             t = m.group(1) if m else None
             if t == "n":  # explicit numeric == untyped (reader_core parity)
                 t = None
-            is_date = False
-            if t is None:
-                ms = _S_ATTR_RE.search(blob)
-                if ms and int(ms.group(1)) in self.wb.date_styles:
-                    is_date = True
-            k = _Kind(t, is_date)
+            ms = _S_ATTR_RE.search(blob)
+            s = ms.group(1) if ms else None
+            is_date = t is None and s is not None and int(s) in self.wb.date_styles
+            k = _Kind(t, is_date, s)
             self._kind_cache[blob] = k
         return k
 
@@ -202,6 +233,9 @@ class BatchSheetReader:
             chunk_bytes = min(chunk_bytes, max(64 << 10, remaining * 512))
         with self.wb.open_entry(entry) as fh:
             for text in _iter_xml_chunks(fh, chunk_bytes):
+                if first and (root := _ROOT_RE.search(text)):
+                    for m in _PREFIX_DECL_RE.finditer(root.group(1)):
+                        self._xmlns += " " + m.group(0)
                 batch = self._chunk_to_batch(text, skip_header=first and self.header)
                 first = False
                 if batch is None or not batch.num_rows:
@@ -227,10 +261,15 @@ class BatchSheetReader:
         if len(cells) == n_cells and n_cells % n_rows == 0:
             ncol = n_cells // n_rows
             columns = self._columnize_rectangular(cells, n_rows, ncol)
-        if columns is None:
-            rows = self._rows_via_et(text)
-            return self._batch_from_rows(rows, skip_header)
-        return self._batch_from_columns(columns, n_rows, text, skip_header)
+        if columns is not None:
+            return self._batch_from_columns(columns, n_rows, text, skip_header)
+        rows = self._rows_via_et(text)
+        if skip_header and rows:
+            self._resolve_remap(rows[0])
+            rows = rows[1:]
+        if not rows:
+            return None
+        return rows_to_batch(rows, self.schema, self.pa_schema, self._remap)
 
     def _columnize_rectangular(self, cells, n_rows: int, ncol: int):
         """Split the flat cell-token list into per-column slices; None if
@@ -262,12 +301,8 @@ class BatchSheetReader:
     def _batch_from_columns(self, columns, n_rows, text, skip_header):
         has_amp = "&" in text
         if skip_header:
-            header_vals = []
-            for blobs, scs, vs, ts in columns:
-                k = self._kind(blobs[0])
-                v = ts[0] if k.t == "inlineStr" else vs[0]
-                header_vals.append(unescape(v) if has_amp and "&" in v else v)
-            self._resolve_remap(header_vals)
+            heads = [[part[0] for part in col] for col in columns]
+            self._resolve_remap(list(self._typed_cells(*zip(*heads), has_amp)))
             columns = [
                 (blobs[1:], scs[1:], vs[1:], ts[1:])
                 for blobs, scs, vs, ts in columns
@@ -285,14 +320,14 @@ class BatchSheetReader:
             blobs, scs, vs, ts = columns[si]
             # kind over LIVE cells only: self-closed (null) cells carry a
             # bare/attr-less blob that would otherwise mix kinds
-            kinds = {self._kind(b) for b, sc in zip(blobs, scs) if not sc}
+            live = {b for b, sc in zip(blobs, scs) if not sc}
             arr = None
-            if not kinds:  # every cell self-closed -> all-null column
+            if not live:  # every cell self-closed -> all-null column
                 arrays.append(pa.nulls(n_rows, type=self.pa_schema.field(fi).type))
                 continue
-            if len(kinds) == 1:
+            if len({self._kind(b)[:2] for b in live}) == 1:
                 arr = self._convert_uniform(
-                    next(iter(kinds)), scs, vs, ts, field.dataType,
+                    self._kind(next(iter(live))), scs, vs, ts, field.dataType,
                     self.pa_schema.field(fi).type, has_amp,
                 )
             if arr is None:  # mixed kinds or strict-cast failure: scalar path
@@ -322,7 +357,7 @@ class BatchSheetReader:
                     # coercion to numeric/string/date targets must go
                     # through the scalar path (e.g. long target -> None)
                     return None
-                if isinstance(dtype, (T.LongType, T.IntegerType, T.DoubleType, T.FloatType)):
+                if isinstance(dtype, _NUMERIC):
                     return pa.array(vals, type=pa.string()).cast(pa_type)
                 return None  # string/bool targets keep scalar formatting
             if kind.t == "s":  # shared strings
@@ -330,7 +365,7 @@ class BatchSheetReader:
                 strs = pc.take(self._sst_array(), idx)
                 if isinstance(dtype, T.StringType):
                     return strs
-                if isinstance(dtype, (T.LongType, T.IntegerType, T.DoubleType, T.FloatType)):
+                if isinstance(dtype, _NUMERIC):
                     return strs.cast(pa_type)
                 return None
             if kind.t in ("inlineStr", "str"):
@@ -340,7 +375,7 @@ class BatchSheetReader:
                     ]
                 if isinstance(dtype, T.StringType):
                     return pa.array(vals, type=pa.string())
-                if isinstance(dtype, (T.LongType, T.IntegerType, T.DoubleType, T.FloatType)):
+                if isinstance(dtype, _NUMERIC):
                     return pa.array(
                         [v if v else None for v in vals], type=pa.string()
                     ).cast(pa_type)
@@ -357,64 +392,35 @@ class BatchSheetReader:
             return None
 
     def _convert_scalar(self, blobs, scs, vs, ts, dtype, fi, has_amp):
-        """Per-cell fallback with reader_core semantics (typed value ->
-        lenient coerce); used for mixed-kind columns and values Arrow's
-        strict casts reject."""
-        from excelstream_spark.sources.xlsx.reader_core import _coerce
+        """Per-cell fallback for mixed-kind columns and values Arrow's
+        strict casts reject: reader_core's typing rule, then its lenient
+        coercion."""
+        return pa.array(
+            [_coerce(v, dtype) for v in self._typed_cells(blobs, scs, vs, ts, has_amp)],
+            type=self.pa_schema.field(fi).type,
+        )
 
-        out = []
+    def _typed_cells(self, blobs, scs, vs, ts, has_amp):
+        """Type regex-extracted cells with ``WorkbookReader.cell_value``,
+        each cell's attributes resolved once per blob by ``_kind``."""
+        kind, cell_value = self._kind, self.wb.cell_value
         for blob, sc, v, t in zip(blobs, scs, vs, ts):
-            k = self._kind(blob)
-            raw = ts_v = t if k.t == "inlineStr" else v
             if sc:
-                typed = None
-            else:
-                if has_amp and ts_v and "&" in ts_v:
-                    raw = unescape(ts_v)
-                typed = self._typed(raw, k)
-            out.append(_coerce(typed, dtype))
-        return pa.array(out, type=self.pa_schema.field(fi).type)
-
-    def _typed(self, raw: str, k: _Kind):
-        """Scalar typing identical to reader_core._typed_value, driven by
-        a resolved kind."""
-        wb = self.wb
-        if k.t == "s":
-            try:
-                return wb.sst[int(raw)]
-            except (ValueError, IndexError):
-                return raw
-        if k.t in ("inlineStr", "str"):
-            return raw
-        if k.t == "b":
-            return raw.strip() == "1"
-        if k.t == "e":
-            from excelstream_spark.sources.xlsx.reader_core import ExcelError
-
-            return ExcelError(raw)
-        if raw == "":
-            return None
-        try:
-            num = float(raw)
-        except ValueError:
-            return raw
-        if k.is_date:
-            from excelstream_spark.sources.xlsx.dates import serial_to_datetime
-
-            converted = serial_to_datetime(num)
-            if converted is not None:
-                return converted
-        if num.is_integer() and "." not in raw and "e" not in raw.lower():
-            return int(raw)
-        return num
+                yield None
+                continue
+            k = kind(blob)
+            raw = v or t  # the regex captures at most one of them
+            if has_amp and "&" in raw:
+                raw = unescape(raw)
+            yield cell_value(raw, k.t, k.s)
 
     # -- ET fragment fallback ----------------------------------------------
 
     def _rows_via_et(self, text: str) -> list[list]:
         """Chunk-level fallback: parse the chunk's <row> elements with
-        ElementTree and type per cell — exact reader_core.iter_rows
-        semantics for shapes the regex scanner doesn't cover (formulas,
-        rich text, attribute reordering, missing cells)."""
+        ElementTree and type them with reader_core's row parser — the
+        row reader's semantics for shapes the regex scanner doesn't cover
+        (formulas, rich text, attribute reordering, missing cells)."""
         m_start = _ROW_OPEN_RE.search(text)
         if m_start is None:
             return []
@@ -426,75 +432,15 @@ class BatchSheetReader:
             endpos = max(endpos, m.end())
         if endpos < 0:
             return []
-        root = ET.fromstring("<R>" + text[m_start.start() : endpos] + "</R>")
-        from excelstream_spark.sources.xlsx import ooxml
-
-        wb = self.wb
-        col_cache: dict[str, int] = {}
-        rows: list[list] = []
-        for relem in root:
-            if relem.tag.rsplit("}", 1)[-1] != "row":
-                continue
-            row: list = []
-            for c in relem:
-                if c.tag.rsplit("}", 1)[-1] != "c":
-                    continue
-                ref = c.get("r")
-                if ref is None:
-                    cell_col = len(row)
-                else:
-                    letters = ref.rstrip("0123456789")
-                    cell_col = col_cache.get(letters)
-                    if cell_col is None:
-                        cell_col = ooxml.letter_to_index(letters)
-                        col_cache[letters] = cell_col
-                value_parts = []
-                is_text_run = False
-                for child in c.iter():
-                    tag = child.tag.rsplit("}", 1)[-1]
-                    if tag == "v":
-                        if child.text is not None:
-                            value_parts.append(child.text)
-                    elif tag == "t":
-                        is_text_run = True
-                        if child.text is not None:
-                            value_parts.append(child.text)
-                while len(row) < cell_col:
-                    row.append(None)
-                row.append(
-                    wb.typed_value(
-                        "".join(value_parts), c.get("t"), c.get("s"),
-                        had_text_run=is_text_run,
-                    )
-                )
-            rows.append(row)
-        return rows
-
-    def _batch_from_rows(self, rows: list[list], skip_header: bool):
-        from excelstream_spark.sources.xlsx.reader_core import coerce_row
-
-        if skip_header and rows:
-            self._resolve_remap([None if v is None else str(v) for v in rows[0]])
-            rows = rows[1:]
-        if not rows:
-            return None
-        remap = self._remap
-        n = len(self.schema.fields)
-        cols: list[list] = [[] for _ in range(n)]
-        for row in rows:
-            if remap is not None:
-                row = [
-                    row[i] if i is not None and i < len(row) else None
-                    for i in remap
-                ]
-            out = coerce_row(row, self.schema)
-            for i in range(n):
-                cols[i].append(out[i])
-        arrays = [
-            pa.array(c, type=self.pa_schema.field(i).type)
-            for i, c in enumerate(cols)
+        root = ET.fromstring(
+            f"<R {self._xmlns}>" + text[m_start.start() : endpos] + "</R>"
+        )
+        cell_value = self.wb.cell_value
+        return [
+            parse_row(relem, cell_value, self._col_of)
+            for relem in root
+            if relem.tag == ROW_TAG
         ]
-        return pa.RecordBatch.from_arrays(arrays, schema=self.pa_schema)
 
     # -- header realignment ------------------------------------------------
 
@@ -502,8 +448,6 @@ class BatchSheetReader:
         """Match datasource._read_rows: realign this sheet's columns to
         the global schema by header name, under the same sheetSchemaMode
         policy (reader_core.resolve_header_remap)."""
-        from excelstream_spark.sources.xlsx.reader_core import resolve_header_remap
-
         self._remap = resolve_header_remap(
             header_vals, self.schema, self.schema_mode
         )

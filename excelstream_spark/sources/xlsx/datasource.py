@@ -13,19 +13,23 @@ Write path (reference K1-K8): each partition streams one part-workbook
 ``singleFile=true`` + a single partition (coalesce(1)) emits exactly the
 target path as one workbook — the Excel-openable mode.
 
-Options (read):  sheetName | sheetIndex, header (default true),
+Options (read):  path, sheetName | sheetIndex | allSheets (default
+  false — one partition per sheet of every file), header (default true),
   inferSchema (default true), samplingRows (default 200),
   sheetSchemaMode (realign | union | strict, default realign — policy
   for sheets whose headers don't match the schema: realign by name when
   fully resolvable, union-by-name with null-fill + widened inference,
   or fail fast; see reader_core.resolve_header_remap),
-  batchReader (default true — columnar regex+Arrow scan with exact
-  per-chunk fallback; false forces the per-cell row reader),
-  arrowBatches (default true), arrowBatchSize (row-reader batching),
   columns ("a,b" — prune the scan to the named columns; Spark 4.1's
   Python DS API has no pruneColumns hook, so pruning is an explicit
   option), limitRows (N — each partition stops scanning after N data
-  rows; the early-stop analogue of limit pushdown for df.limit(N))
+  rows; the early-stop analogue of limit pushdown for df.limit(N)),
+  pushdown (default false, see below), maxFileAgeSec (stream reads).
+  Readable column types: bigint, int, smallint, tinyint, double, float,
+  boolean, string, date, timestamp, timestamp_ntz, binary; any other
+  declared type fails on the driver.  Every read goes through the
+  columnar scanner (batch_scan.py) unless filters were pushed, which the
+  row reader evaluates per row.
 
 The source also implements a STREAM reader: ``spark.readStream
 .format("xlsx")`` watches a directory and processes each new workbook
@@ -47,7 +51,9 @@ cached filtered scan for a later filterless query on the same DataFrame
 frames.  Requires ``spark.sql.python.filterPushdown.enabled=true`` (set
 by register_xlsx).
 Options (write): sheetName, header (default true), compression (0-9,
-  default 6), useSharedStrings, sheetProtectPassword, singleFile,
+  default 6), useSharedStrings (takes the row writer, as a non-scalar
+  schema does; every other write is columnar), sheetProtectPassword,
+  singleFile,
   maxRowsPerSheet (default 1,048,576 -> auto-split),
   columnWidths ("20,12,8" positional, blank to skip a column),
   rowHeight (points) — widths/heights actually emitted, unlike the
@@ -59,9 +65,11 @@ Options (write): sheetName, header (default true), compression (0-9,
 from __future__ import annotations
 
 import glob
+import itertools
 import os
 import re
 import uuid
+import warnings
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -91,10 +99,10 @@ from pyspark.sql import types as T
 
 from excelstream_spark.sources.xlsx.reader_core import (
     WorkbookReader,
-    coerce_row,
     infer_schema,
     merge_schemas,
     resolve_header_remap,
+    rows_to_batch,
 )
 from excelstream_spark.sources.xlsx.writer_core import WorkbookWriter
 
@@ -271,13 +279,6 @@ class XlsxPartition(InputPartition):
         self.predicates = predicates or []
 
 
-def _to_arrow_schema(schema: T.StructType):
-    """Spark schema -> pyarrow schema for RecordBatch-yielding readers."""
-    from excelstream_spark.sources.xlsx.batch_scan import to_arrow_schema
-
-    return to_arrow_schema(schema)
-
-
 class XlsxDataSource(DataSource):
     @classmethod
     def name(cls) -> str:
@@ -327,37 +328,35 @@ class XlsxDataSource(DataSource):
     def streamReader(self, schema: T.StructType) -> "XlsxStreamReader":
         return XlsxStreamReader(schema, self.options)
 
-    def streamWriter(self, schema: T.StructType, overwrite: bool) -> "XlsxStreamWriter":
+    def _columnar_sink(self, schema: T.StructType) -> bool:
+        """Columnar write path (batch_write.py: Arrow batches in, numpy-
+        vectorized XML out) for every scalar schema; the row sinks take
+        non-scalar columns and shared-strings mode (stateful dedup)."""
         from excelstream_spark.sources.xlsx.batch_write import vectorizable
 
-        if (
-            _truthy(self.options.get("batchwriter"), True)
-            and not _truthy(self.options.get("usesharedstrings"), False)
-            and vectorizable(schema)
-        ):
-            return XlsxStreamArrowWriter(schema, self.options, truncate=overwrite)
-        return XlsxStreamWriter(schema, self.options, truncate=overwrite)
+        return vectorizable(schema) and not _truthy(
+            self.options.get("usesharedstrings"), False
+        )
+
+    def streamWriter(self, schema: T.StructType, overwrite: bool) -> "XlsxStreamWriter":
+        cls = XlsxStreamArrowWriter if self._columnar_sink(schema) else XlsxStreamWriter
+        return cls(schema, self.options, truncate=overwrite)
 
     def writer(self, schema: T.StructType, overwrite: bool) -> "XlsxWriter":
-        from excelstream_spark.sources.xlsx.batch_write import vectorizable
-
-        # columnar write path (batch_write.py): Arrow batches in, numpy-
-        # vectorized XML out.  Row path when the schema has non-scalar
-        # columns, for shared-strings mode (stateful dedup), or on
-        # batchWriter=false.
-        if (
-            _truthy(self.options.get("batchwriter"), True)
-            and not _truthy(self.options.get("usesharedstrings"), False)
-            and vectorizable(schema)
-        ):
-            return XlsxArrowWriter(schema, self.options, overwrite)
-        return XlsxWriter(schema, self.options, overwrite)
+        cls = XlsxArrowWriter if self._columnar_sink(schema) else XlsxWriter
+        return cls(schema, self.options, overwrite)
 
 
 class XlsxReader(DataSourceReader):
     def __init__(self, schema: T.StructType, options):
+        from excelstream_spark.sources.xlsx.batch_scan import to_arrow_schema
+
+        # built here, on the driver, so an unreadable declared column type
+        # fails the query before any task runs
+        self.pa_schema = to_arrow_schema(schema)
         self.schema_ = schema
         self.options = options
+        self.mode = options.get("sheetschemamode", "realign").lower()
         self.path = options.get("path")
         self.header = _truthy(options.get("header"), True)
         self.sheet_name = options.get("sheetname")
@@ -411,51 +410,41 @@ class XlsxReader(DataSourceReader):
 
     def partitions(self):
         preds, self._predicates = self._predicates, []  # bind to this scan
+        return self._partitions(_list_xlsx_files(self.path), preds)
+
+    def _partitions(self, files: list[str], predicates=None) -> list[XlsxPartition]:
+        """One partition per (file, sheet): the named sheet, every sheet
+        with allSheets, else the sheetIndex-th (default first) sheet."""
         parts = []
-        for f in _list_xlsx_files(self.path):
+        for f in files:
             if self.sheet_name:
-                parts.append(XlsxPartition(f, self.sheet_name, preds))
-            elif self.all_sheets:
-                with WorkbookReader(f) as wb:
-                    for s in wb.sheet_names():
-                        parts.append(XlsxPartition(f, s, preds))
+                names = [self.sheet_name]
             else:
                 with WorkbookReader(f) as wb:
                     names = wb.sheet_names()
-                    idx = int(self.sheet_index) if self.sheet_index else 0
-                    parts.append(XlsxPartition(f, names[idx], preds))
+                if not self.all_sheets:
+                    names = [names[int(self.sheet_index) if self.sheet_index else 0]]
+            parts.extend(XlsxPartition(f, s, predicates) for s in names)
         return parts
 
     def read(self, partition: XlsxPartition):
-        """Yields pyarrow RecordBatches (columnar transfer into the JVM —
-        measurably faster than per-row pickling); set arrowBatches=false
-        to fall back to tuple rows.
+        """Yields pyarrow RecordBatches.  The columnar scanner
+        (batch_scan.py, ~4x the row reader) reads every partition without
+        pushed predicates; predicates need per-row evaluation, so those
+        partitions take the row reader.  When the scanner fails before its
+        first batch, or finds no rows where the row reader finds some
+        (e.g. a namespace-prefixed worksheet), the row reader's rows are
+        served and a RuntimeWarning names the file, sheet and cause."""
+        from excelstream_spark.sources.xlsx.batch_scan import BatchSheetReader
 
-        Default fast path: the columnar batch scanner (batch_scan.py) —
-        regex cell extraction + per-column vectorized typing, ~4x the
-        per-cell row reader — with chunk-level fallback to exact per-cell
-        semantics.  ``batchReader=false`` forces the row reader (also used
-        automatically when pushed predicates need per-row evaluation)."""
-        if not _truthy(self.options.get("arrowbatches"), True):
-            yield from self._read_rows(partition)
-            return
-        import pyarrow as pa
-
-        if not partition.predicates and _truthy(self.options.get("batchreader"), True):
-            from excelstream_spark.sources.xlsx.batch_scan import BatchSheetReader
-
+        cause = None
+        if not partition.predicates:
             yielded = False
             try:
                 with WorkbookReader(partition.file) as wb:
                     reader = BatchSheetReader(
-                        wb,
-                        partition.sheet,
-                        self.schema_,
-                        self.header,
-                        schema_mode=self.options.get(
-                            "sheetschemamode", "realign"
-                        ).lower(),
-                        limit=self.limit,
+                        wb, partition.sheet, self.schema_, self.header,
+                        schema_mode=self.mode, limit=self.limit,
                         init_remap=self._init_remap,
                     )
                     for batch in reader.batches():
@@ -463,63 +452,56 @@ class XlsxReader(DataSourceReader):
                         yield batch
                 if yielded:
                     return
-                # zero rows: re-verify with the row reader (cheap when the
-                # sheet is truly empty; catches scanner-invisible layouts
-                # such as namespace-prefixed worksheets)
-            except Exception:
+                cause = "found no rows"
+            except Exception as e:
                 if yielded:
                     raise
-                # pre-yield failure: fall through to the exact row reader
-
-        pa_schema = _to_arrow_schema(self.schema_)
-        batch_size = int(self.options.get("arrowbatchsize", 4096))
-        cols: list[list] = [[] for _ in self.schema_.fields]
-        n = 0
-        for out in self._read_rows(partition):
-            for i, v in enumerate(out):
-                cols[i].append(v)
-            n += 1
-            if n >= batch_size:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(c, type=f.type) for c, f in zip(cols, pa_schema)],
-                    schema=pa_schema,
-                )
-                cols = [[] for _ in self.schema_.fields]
-                n = 0
-        if n:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(c, type=f.type) for c, f in zip(cols, pa_schema)],
-                schema=pa_schema,
-            )
+                _warn_fallback(partition, f"failed before its first batch: {e!r}")
+        for batch in self._read_rows(partition):
+            if cause is not None:
+                _warn_fallback(partition, cause)
+                cause = None
+            yield batch
 
     def _read_rows(self, partition: XlsxPartition):
-        preds = partition.predicates
-        mode = self.options.get("sheetschemamode", "realign").lower()
-        n_out = 0
+        """The row reader: ``iter_rows`` typed rows, realigned, coerced and
+        filtered by ``rows_to_batch`` in batches of up to 4,096 rows,
+        stopping after ``limitRows`` output rows."""
+        remaining = self.limit
         with WorkbookReader(partition.file) as wb:
-            first = self.header
+            rows = wb.iter_rows(partition.sheet)
             remap = self._init_remap
-            for row in wb.iter_rows(partition.sheet):
-                if first:
-                    first = False
-                    # realign THIS sheet's columns to the global schema by
-                    # header name — sheets/files whose column order differs
-                    # from the schema-inference sheet would otherwise be
-                    # coerced positionally and silently mis-typed (policy
-                    # per sheetSchemaMode; see resolve_header_remap)
-                    remap = resolve_header_remap(row, self.schema_, mode)
-                    continue
-                if remap is not None:
-                    row = [
-                        row[i] if i is not None and i < len(row) else None
-                        for i in remap
-                    ]
-                out = coerce_row(row, self.schema_)
-                if all(p(out) is True for p in preds):
-                    yield out
-                    n_out += 1
-                    if self.limit is not None and n_out >= self.limit:
-                        return
+            if self.header:
+                head = next(rows, None)
+                if head is None:
+                    return
+                # realign THIS sheet's columns to the global schema by
+                # header name — sheets/files whose column order differs
+                # from the schema-inference sheet would otherwise be
+                # coerced positionally and silently mis-typed (policy
+                # per sheetSchemaMode; see resolve_header_remap)
+                remap = resolve_header_remap(head, self.schema_, self.mode)
+            while remaining is None or remaining > 0:
+                n = 4096 if remaining is None else min(4096, remaining)
+                chunk = list(itertools.islice(rows, n))
+                if not chunk:
+                    return
+                batch = rows_to_batch(
+                    chunk, self.schema_, self.pa_schema, remap, partition.predicates
+                )
+                if batch.num_rows:
+                    yield batch
+                if remaining is not None:
+                    remaining -= batch.num_rows
+
+
+def _warn_fallback(partition: XlsxPartition, cause: str) -> None:
+    warnings.warn(
+        f"xlsx batch scanner {cause} on {partition.file!r} sheet "
+        f"{partition.sheet!r}; serving the row reader's rows (~4x slower)",
+        RuntimeWarning,
+        stacklevel=2,
+    )
 
 
 class XlsxStreamReader(DataSourceStreamReader):
@@ -550,13 +532,9 @@ class XlsxStreamReader(DataSourceStreamReader):
     """
 
     def __init__(self, schema: T.StructType, options):
-        self.schema_ = schema
-        self.options = options
+        #: each new file is read exactly as a batch read of it would be
+        self._reader = XlsxReader(schema, options)
         self.path = options.get("path")
-        self.header = _truthy(options.get("header"), True)
-        self.sheet_name = options.get("sheetname")
-        self.sheet_index = options.get("sheetindex")
-        self.all_sheets = _truthy(options.get("allsheets"), False)
         age = options.get("maxfileagesec")
         self.max_age = float(age) if age is not None else None
 
@@ -599,26 +577,13 @@ class XlsxStreamReader(DataSourceStreamReader):
         new_files = sorted(
             set(end.get("seen") or end.get("recent") or []) - processed
         )
-        parts = []
-        for f in new_files:
-            if self.sheet_name:
-                parts.append(XlsxPartition(f, self.sheet_name))
-            elif self.all_sheets:
-                with WorkbookReader(f) as wb:
-                    for s in wb.sheet_names():
-                        parts.append(XlsxPartition(f, s))
-            else:
-                with WorkbookReader(f) as wb:
-                    names = wb.sheet_names()
-                    idx = int(self.sheet_index) if self.sheet_index else 0
-                    parts.append(XlsxPartition(f, names[idx]))
-        return parts
+        return self._reader._partitions(new_files)
 
     def read(self, partition: XlsxPartition):
-        # the batch reader's row path: each file's header realigns its
-        # columns to the schema per sheetSchemaMode, so a workbook whose
-        # column order differs is not coerced positionally
-        yield from XlsxReader(self.schema_, self.options)._read_rows(partition)
+        # each file's header realigns its columns to the schema per
+        # sheetSchemaMode, so a workbook whose column order differs is not
+        # coerced positionally
+        yield from self._reader.read(partition)
 
     def commit(self, end: dict) -> None:
         pass  # progress is fully encoded in the checkpointed offset

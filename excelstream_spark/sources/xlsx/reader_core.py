@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import datetime as dt
 import functools
+import itertools
 import re
 import zipfile
 from collections.abc import Iterator
@@ -33,6 +34,11 @@ from excelstream_spark.sources.xlsx import ooxml
 from excelstream_spark.sources.xlsx.dates import serial_to_datetime
 
 _NS = "{" + ooxml.XLSX_NS + "}"
+#: worksheet tags as ElementTree spells them under the main namespace
+ROW_TAG = _NS + "row"
+_C_TAG = _NS + "c"
+_V_TAG = _NS + "v"
+_T_TAG = _NS + "t"
 
 class ExcelError(str):
     """Marker type for error cells (t="e"): behaves as its string payload
@@ -188,68 +194,29 @@ class WorkbookReader:
         """Open a ZIP member as a decompressing binary stream."""
         return self._zip.open(entry)
 
-    def typed_value(self, raw: str, t: str | None, s: str | None, had_text_run: bool = False):
-        return self._typed_value(raw, t, s, had_text_run=had_text_run)
-
     # -- row streaming -----------------------------------------------------
 
     def iter_rows(self, sheet: str | int = 0) -> Iterator[list]:
         """Stream one sheet's rows as lists of typed Python values
         (str | int | float | bool | datetime | ExcelError | None), gaps
-        filled with None (reference parse_row gap-filling,
-        streaming_reader.rs:630-633)."""
+        filled with None."""
         entry = self.resolve_sheet(sheet)
         # End-events on <row> only: per-cell work happens via C-level
         # child traversal of the completed row element instead of Python-
-        # level event dispatch per <c>/<v>/<t> (2x on the profile).  The
-        # column-letter cache exploits that refs repeat every row.
-        row_tag = _NS + "row"
-        c_tag = _NS + "c"
-        v_tag = _NS + "v"
-        t_tag = _NS + "t"
+        # level event dispatch per <c>/<v>/<t> (2x on the profile).
         col_cache: dict[str, int] = {}
-        typed = self._typed_value
         with self._zip.open(entry) as stream:
             for _event, elem in iterparse(stream, events=("end",)):
-                if elem.tag != row_tag:
+                if elem.tag != ROW_TAG:
                     continue
-                row: list = []
-                for c in elem:
-                    if c.tag != c_tag:
-                        continue
-                    ref = c.get("r")
-                    if ref is None:
-                        cell_col = len(row)
-                    else:
-                        letters = ref.rstrip("0123456789")
-                        cell_col = col_cache.get(letters)
-                        if cell_col is None:
-                            cell_col = ooxml.letter_to_index(letters)
-                            col_cache[letters] = cell_col
-                    value_parts = []
-                    is_text_run = False
-                    for child in c.iter():
-                        if child.tag == v_tag:
-                            if child.text is not None:
-                                value_parts.append(child.text)
-                        elif child.tag == t_tag:
-                            is_text_run = True
-                            if child.text is not None:
-                                value_parts.append(child.text)
-                    while len(row) < cell_col:
-                        row.append(None)
-                    row.append(
-                        typed(
-                            "".join(value_parts), c.get("t"), c.get("s"),
-                            had_text_run=is_text_run,
-                        )
-                    )
-                yield row
+                yield parse_row(elem, self.cell_value, col_cache)
                 elem.clear()
 
-    def _typed_value(self, raw: str, t: str | None, s: str | None, had_text_run: bool):
-        """Cell typing rules (reference parse_row, streaming_reader.rs:636-717,
-        with real numFmt-based date detection instead of style sniffing)."""
+    def cell_value(self, raw: str, t: str | None, s: str | None, had_text_run: bool = False):
+        """The one cell-typing rule, shared by the row reader and the
+        columnar scanner (reference parse_row, streaming_reader.rs:636-717,
+        with real numFmt-based date detection instead of style sniffing).
+        ``raw`` is the cell's <v>/<t> text, ``t``/``s`` its attributes."""
         if t == "s":  # shared string
             try:
                 return self._sst[int(raw)]
@@ -297,6 +264,46 @@ class WorkbookReader:
 
     def __exit__(self, *exc):
         self.close()
+
+
+def parse_row(elem, cell_value, col_cache: dict[str, int]) -> list:
+    """One parsed ``<row>`` element -> its typed cell values, gaps filled
+    with None (reference parse_row gap-filling, streaming_reader.rs:630-633).
+
+    Used by ``iter_rows`` and by the batch scanner's per-chunk fallback.
+    ``cell_value`` is ``WorkbookReader.cell_value``; ``col_cache`` maps
+    column letters to indices and persists across rows, because refs
+    repeat every row."""
+    c_tag, v_tag, t_tag = _C_TAG, _V_TAG, _T_TAG
+    row: list = []
+    for c in elem:
+        if c.tag != c_tag:
+            continue
+        ref = c.get("r")
+        if ref is None:
+            cell_col = len(row)
+        else:
+            letters = ref.rstrip("0123456789")
+            cell_col = col_cache.get(letters)
+            if cell_col is None:
+                cell_col = ooxml.letter_to_index(letters)
+                col_cache[letters] = cell_col
+        value_parts = []
+        is_text_run = False
+        for child in c.iter():
+            if child.tag == v_tag:
+                if child.text is not None:
+                    value_parts.append(child.text)
+            elif child.tag == t_tag:
+                is_text_run = True
+                if child.text is not None:
+                    value_parts.append(child.text)
+        while len(row) < cell_col:
+            row.append(None)
+        row.append(
+            cell_value("".join(value_parts), c.get("t"), c.get("s"), is_text_run)
+        )
+    return row
 
 
 # -- header realignment ----------------------------------------------------
@@ -445,15 +452,30 @@ def _parse_type(name: str) -> T.DataType:
     }[name]
 
 
-def coerce_row(row: list, schema: T.StructType) -> tuple:
-    """Pad/truncate + cast a typed-value row onto the declared schema
-    (lenient casts: reference CellValue::as_* semantics, types.rs:101-152)."""
-    out = []
-    n = len(schema.fields)
-    for ci in range(n):
-        v = row[ci] if ci < len(row) else None
-        out.append(_coerce(v, schema.fields[ci].dataType))
-    return tuple(out)
+def rows_to_batch(rows: list[list], schema: T.StructType, pa_schema, remap=None, predicates=()):
+    """Typed-value rows -> one Arrow RecordBatch on the declared schema:
+    realign by a header ``remap`` (schema field -> source column, None =
+    positional), pad/truncate, cast each cell leniently (reference
+    CellValue::as_* semantics, types.rs:101-152), and keep only the rows
+    every pushed predicate accepts.  The one rows->Arrow step of the row
+    reader and of the batch scanner's chunk fallback."""
+    import pyarrow as pa
+
+    cols = []
+    for fi, field in enumerate(schema.fields):
+        si = fi if remap is None else remap[fi]
+        dtype = field.dataType
+        cols.append([
+            _coerce(r[si] if si is not None and si < len(r) else None, dtype)
+            for r in rows
+        ])
+    if predicates:
+        keep = [all(p(row) is True for p in predicates) for row in zip(*cols)]
+        cols = [list(itertools.compress(c, keep)) for c in cols]
+    return pa.RecordBatch.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, pa_schema)],
+        schema=pa_schema,
+    )
 
 
 _TRUE_WORDS = {"true", "yes", "1", "y", "t"}
@@ -469,7 +491,7 @@ def _coerce(v, dtype: T.DataType):
         if isinstance(v, dt.datetime):
             return v.isoformat(sep=" ")
         return str(v)
-    if isinstance(dtype, T.LongType) or isinstance(dtype, T.IntegerType):
+    if isinstance(dtype, (T.LongType, T.IntegerType, T.ShortType, T.ByteType)):
         if isinstance(v, bool):
             return int(v)
         if isinstance(v, (int, float)):
@@ -478,7 +500,7 @@ def _coerce(v, dtype: T.DataType):
             return int(float(str(v).strip()))
         except ValueError:
             return None
-    if isinstance(dtype, T.DoubleType) or isinstance(dtype, T.FloatType):
+    if isinstance(dtype, (T.DoubleType, T.FloatType)):
         if isinstance(v, (int, float)):
             return float(v)
         try:

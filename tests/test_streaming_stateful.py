@@ -221,8 +221,11 @@ def test_xlsx_streaming_offset_compaction(tmp_path):
 def test_xlsx_stream_reader_realigns_swapped_header(tmp_path):
     """A streamed workbook whose header order differs from the schema is
     realigned by header name, as the batch reader does (unit-level, no
-    Spark query needed)."""
+    Spark query needed); the batch scanner reads both files, with no
+    fallback warning."""
+    import datetime as dt
     import os
+    import warnings
 
     from pyspark.sql import types as T
 
@@ -231,23 +234,31 @@ def test_xlsx_stream_reader_realigns_swapped_header(tmp_path):
 
     watch = str(tmp_path / "w")
     os.makedirs(watch)
+    t1, t2 = dt.datetime(2024, 1, 2, 3, 4, 5), dt.datetime(2023, 5, 6)
     with WorkbookWriter(f"{watch}/a.xlsx") as wb:
         wb.add_sheet("S")
-        wb.write_row(["id", "name"])
-        wb.write_row([1, "x"])
+        wb.write_row(["id", "name", "ts"])
+        wb.write_row([1, "x", t1])
     with WorkbookWriter(f"{watch}/b.xlsx") as wb:
         wb.add_sheet("S")
-        wb.write_row(["name", "id"])
-        wb.write_row(["y", 2])
-    schema = T.StructType(
-        [T.StructField("id", T.LongType()), T.StructField("name", T.StringType())]
-    )
+        wb.write_row(["ts", "name", "id"])
+        wb.write_row([t2, "y", 2])
+    schema = T.StructType([
+        T.StructField("id", T.LongType()),
+        T.StructField("name", T.StringType()),
+        T.StructField("ts", T.TimestampNTZType()),
+    ])
     rdr = XlsxStreamReader(schema, {"path": watch})
     parts = rdr.partitions(rdr.initialOffset(), rdr.latestOffset())
-    rows = {
-        os.path.basename(p.file): [tuple(r) for r in rdr.read(p)] for p in parts
-    }
-    assert rows == {"a.xlsx": [(1, "x")], "b.xlsx": [(2, "y")]}
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        rows = {
+            os.path.basename(p.file): [
+                tuple(d.values()) for b in rdr.read(p) for d in b.to_pylist()
+            ]
+            for p in parts
+        }
+    assert rows == {"a.xlsx": [(1, "x", t1)], "b.xlsx": [(2, "y", t2)]}
 
 
 def test_disabling_offset_compaction_fails_fast(tmp_path):
@@ -283,10 +294,10 @@ def test_xlsx_stream_sink_roundtrip(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     os.makedirs(src)
 
-    def run_once(batch_writer="true"):
+    def run_once(shared_strings="false"):
         st = spark.readStream.schema("id long, v string").parquet(src)
         q = (st.writeStream.format("xlsx")
-             .option("batchWriter", batch_writer)
+             .option("useSharedStrings", shared_strings)
              .option("checkpointLocation", ckpt).option("path", out)
              .trigger(availableNow=True).start())
         q.awaitTermination(120)
@@ -300,7 +311,7 @@ def test_xlsx_stream_sink_roundtrip(spark, tmp_path):
 
     spark.createDataFrame([(3, "c")], "id long, v string") \
         .coalesce(1).write.mode("append").parquet(src)
-    run_once(batch_writer="false")  # second batch through the row path
+    run_once(shared_strings="true")  # second batch through the row path
     back = spark.read.format("xlsx").load(out)
     assert sorted(tuple(r) for r in back.collect()) == [(1, "a"), (2, "b"), (3, "c")]
     run_once()  # no new data: nothing added

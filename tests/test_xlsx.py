@@ -580,22 +580,22 @@ def test_no_pushdown_no_cross_query_leak(spark, tmp_path):
 
 # --- columnar batch scanner vs row reader (batch_scan.py) ------------------
 
+def _batch_rows(batches):
+    return [tuple(d.values()) for b in batches for d in b.to_pylist()]
+
+
 def _rows_via_row_reader(path, sheet, schema, header):
     from excelstream_spark.sources.xlsx.datasource import XlsxPartition, XlsxReader
 
     r = XlsxReader(schema, {"path": path, "header": str(header).lower()})
-    return [tuple(row) for row in r._read_rows(XlsxPartition(path, sheet))]
+    return _batch_rows(r._read_rows(XlsxPartition(path, sheet)))
 
 
 def _rows_via_batch(path, sheet, schema, header):
     from excelstream_spark.sources.xlsx.batch_scan import BatchSheetReader
 
-    out = []
     with WorkbookReader(path) as wb:
-        for batch in BatchSheetReader(wb, sheet, schema, header).batches():
-            cols = batch.to_pydict()
-            out.extend(zip(*(cols[n] for n in batch.schema.names)))
-    return [tuple(r) for r in out]
+        return _batch_rows(BatchSheetReader(wb, sheet, schema, header).batches())
 
 
 def test_batch_reader_matches_row_reader(tmp_path):
@@ -630,7 +630,7 @@ def test_batch_reader_matches_row_reader(tmp_path):
         assert b == a, f"use_sst={use_sst}"
 
 
-def _craft_xlsx(path, sheet_xml, sst_items=None, date_xf=False):
+def _craft_xlsx(path, sheet_xml, sst_items=None, date_xf=False, root_attrs=""):
     ns = "http://schemas.openxmlformats.org/spreadsheetml/2006/main"
     with zipfile.ZipFile(path, "w") as z:
         z.writestr(
@@ -651,7 +651,7 @@ def _craft_xlsx(path, sheet_xml, sst_items=None, date_xf=False):
             )
         z.writestr(
             "xl/worksheets/sheet1.xml",
-            f'<worksheet xmlns="{ns}"><sheetData>' + sheet_xml
+            f'<worksheet xmlns="{ns}"{root_attrs}><sheetData>' + sheet_xml
             + "</sheetData></worksheet>",
         )
 
@@ -721,9 +721,54 @@ def test_batch_reader_fallback_equivalence(tmp_path):
     assert got[1] == (2, None, dt.datetime(1900, 2, 28))  # leap-bug serial 60
     assert got[4] == (None, None, None)  # self-closed <row/>
 
+    # a rectangular chunk, so its t="d" date-styled cells take the
+    # per-column scalar fallback rather than the chunk-level parse
+    p2 = str(tmp_path / "t_d.xlsx")
+    _craft_xlsx(
+        p2,
+        '<row r="1"><c r="A1" t="d" s="1"><v>44562.25</v></c></row>'
+        '<row r="2"><c r="A2" t="d" s="1"><v>44562.5</v></c></row>',
+        date_xf=True,
+    )
+    schema2 = T.StructType([T.StructField("a", T.StringType())])
+    got = _rows_via_batch(p2, "S", schema2, header=False)
+    assert got == _rows_via_row_reader(p2, "S", schema2, header=False)
+    assert got == [("2022-01-01 06:00:00",), ("2022-01-01 12:00:00",)]
+
+
+def test_batch_reader_fallback_chunk_keeps_worksheet_prefixes(tmp_path):
+    """A chunk-level fallback after the first batch parses rows carrying a
+    prefixed attribute declared only on the worksheet root (Excel's
+    x14ac:dyDescent) and matches the row reader."""
+    from excelstream_spark.sources.xlsx.batch_scan import BatchSheetReader
+
+    pad = "p" * 2000  # ~2 KB rows: a 100-row limit reads 64 KB chunks
+    rows = []
+    for i in range(1, 101):
+        cells = f'<c r="A{i}"><v>{i}</v></c>'
+        if i != 60:  # one ragged row, past the first chunk
+            cells += f'<c r="B{i}" t="inlineStr"><is><t>{pad}</t></is></c>'
+        rows.append(f'<row r="{i}" x14ac:dyDescent="0.25">{cells}</row>')
+    p = str(tmp_path / "x14ac.xlsx")
+    _craft_xlsx(
+        p, "".join(rows),
+        root_attrs=' xmlns:x14ac="http://schemas.microsoft.com/office/'
+        'spreadsheetml/2009/9/ac"',
+    )
+    schema = T.StructType([
+        T.StructField("a", T.LongType()), T.StructField("b", T.StringType()),
+    ])
+    with WorkbookReader(p) as wb:
+        batches = list(BatchSheetReader(wb, "S", schema, False, limit=100).batches())
+    assert len(batches) > 1
+    got = _batch_rows(batches)
+    assert got == _rows_via_row_reader(p, "S", schema, header=False)
+    assert len(got) == 100 and got[59] == (60, None)
+
 
 def test_batch_reader_spark_surface(spark, tmp_path):
-    """spark.read xlsx: batchReader default and =false agree."""
+    """spark.read xlsx (the batch scanner) agrees with the row reader on
+    the written part file."""
     schema = "s string, n long, d double, t timestamp_ntz"
     df = spark.createDataFrame(
         [("a&b", 1, 1.5, dt.datetime(2020, 5, 17, 1, 2, 3)),
@@ -733,13 +778,106 @@ def test_batch_reader_spark_surface(spark, tmp_path):
     )
     out = str(tmp_path / "surface")
     df.coalesce(1).write.mode("overwrite").format("xlsx").save(out)
-    fast = sorted([tuple(r) for r in
-                   spark.read.format("xlsx").load(out).collect()], key=repr)
-    slow = sorted([tuple(r) for r in
-                   spark.read.format("xlsx").option("batchReader", "false")
-                   .load(out).collect()], key=repr)
+    back = spark.read.format("xlsx").load(out)
+    fast = sorted([tuple(r) for r in back.collect()], key=repr)
+    import glob as g
+
+    [part] = g.glob(out + "/part-*.xlsx")
+    slow = sorted(
+        _rows_via_row_reader(part, "Sheet1", back.schema, header=True), key=repr
+    )
     assert fast == slow
     assert len(fast) == 3
+
+
+def test_unreadable_declared_type_fails_on_driver(spark, tmp_path):
+    """A declared column type the reader cannot produce fails at planning,
+    naming the column and the readable types, before any task runs;
+    short columns read through the scanner."""
+    p = str(tmp_path / "small.xlsx")
+    with WorkbookWriter(p) as wb:
+        wb.add_sheet("S")
+        wb.write_row(["b", "c"])
+        wb.write_row([3, "x"])
+        wb.write_row([4, "y"])
+    sc = spark.sparkContext
+    sc.setJobGroup("xlsx-unreadable-type", "declared decimal column")
+    try:
+        with pytest.raises(
+            Exception, match=r"unsupported column type decimal\(10,2\) for 'a'"
+        ):
+            spark.read.format("xlsx").schema("a decimal(10,2), c string").load(p).collect()
+        assert sc.statusTracker().getJobIdsForGroup("xlsx-unreadable-type") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    got = spark.read.format("xlsx").schema("b short, c string").load(p)
+    assert sorted(r.b for r in got.collect()) == [3, 4]
+
+
+def test_scanner_fallbacks_warn_with_rows_unchanged(tmp_path, monkeypatch):
+    """The row reader re-reads a sheet, with a RuntimeWarning naming the
+    file, sheet and cause, when the scanner finds no rows (a prefixed
+    worksheet) or fails before its first batch; the rows are the row
+    reader's.  A writer-generated workbook reads without a warning."""
+    import re
+    import warnings
+
+    from excelstream_spark.sources.xlsx import batch_scan
+    from excelstream_spark.sources.xlsx.datasource import XlsxPartition, XlsxReader
+
+    schema = T.StructType([
+        T.StructField("id", T.LongType()),
+        T.StructField("name", T.StringType()),
+        T.StructField("x", T.DoubleType()),
+    ])
+    foreign = str(tmp_path / "foreign.xlsx")
+    _foreign_workbook(foreign)
+    reader = XlsxReader(schema, {"path": foreign})
+    with pytest.warns(
+        RuntimeWarning,
+        match=re.escape(f"found no rows on {foreign!r} sheet 'Data'"),
+    ):
+        got = _batch_rows(reader.read(XlsxPartition(foreign, "Data")))
+    assert got == _rows_via_row_reader(foreign, "Data", schema, header=True)
+    assert got == [(1, None, 1.5), (2, "ab", 2.5), (3, "rich", 3.5)]
+
+    own = str(tmp_path / "own.xlsx")
+    with WorkbookWriter(own) as wb:
+        wb.add_sheet("Data")
+        wb.write_row(["id", "name", "x"])
+        wb.write_row([1, "a&b", 0.5])
+        wb.write_row([2, None, 1.5])
+    expected = [(1, "a&b", 0.5), (2, None, 1.5)]
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        assert _batch_rows(reader.read(XlsxPartition(own, "Data"))) == expected
+
+    def boom(*a, **k):
+        raise ValueError("boom")
+
+    monkeypatch.setattr(batch_scan.BatchSheetReader, "_chunk_to_batch", boom)
+    with pytest.warns(
+        RuntimeWarning,
+        match=re.escape(
+            f"failed before its first batch: ValueError('boom') on {own!r} "
+            "sheet 'Data'"
+        ),
+    ):
+        assert _batch_rows(reader.read(XlsxPartition(own, "Data"))) == expected
+
+
+def test_every_option_is_documented():
+    """Each option key the data source reads is named in its module
+    docstring (case-insensitive)."""
+    import re
+
+    from excelstream_spark.sources.xlsx import datasource
+
+    with open(datasource.__file__) as f:
+        keys = set(re.findall(r"""options\.get\(\s*["'](\w+)["']""", f.read()))
+    assert {"allsheets", "limitrows", "usesharedstrings"} <= keys
+    doc = datasource.__doc__.lower()
+    assert sorted(k for k in keys if not re.search(rf"\b{k}\b", doc)) == []
 
 
 # --- sheetSchemaMode policies ---------------------------------------------
@@ -882,7 +1020,7 @@ def test_batch_writer_float_repr_parity():
 
 
 def test_arrow_writer_spark_roundtrip_matches_row_writer(spark, tmp_path):
-    """format('xlsx') default (Arrow batch write) and batchWriter=false
+    """format('xlsx') default (Arrow batch write) and useSharedStrings
     (row write) produce equal data; read-back equals the source."""
     df = spark.createDataFrame(
         [(i, f"name{i}" + ("&<>" if i % 7 == 0 else ""),
@@ -893,7 +1031,7 @@ def test_arrow_writer_spark_roundtrip_matches_row_writer(spark, tmp_path):
     )
     a, b = str(tmp_path / "arrow"), str(tmp_path / "rows")
     df.repartition(2).write.format("xlsx").mode("overwrite").save(a)
-    df.repartition(2).write.format("xlsx").option("batchWriter", "false").mode("overwrite").save(b)
+    df.repartition(2).write.format("xlsx").option("useSharedStrings", "true").mode("overwrite").save(b)
     da = spark.read.format("xlsx").load(a)
     db = spark.read.format("xlsx").load(b)
     assert da.schema == db.schema
@@ -924,26 +1062,30 @@ def test_arrow_writer_autosplit_at_max_rows(spark, tmp_path):
 
 
 def test_arrow_writer_column_styles_and_height(spark, tmp_path):
-    """columnStyles / rowHeight options render identically on both write
-    paths."""
-    out_a = str(tmp_path / "a")
-    out_b = str(tmp_path / "b")
-    df = spark.createDataFrame(
-        [(1.5, "x"), (2.5, "y")], "amount double, label string"
-    )
-    for out, bw in ((out_a, "true"), (out_b, "false")):
+    """columnStyles / rowHeight options render on both write paths
+    exactly as WorkbookWriter.write_row renders them (the Arrow sink by
+    default, the row sink with useSharedStrings)."""
+    import glob as g
+    import io
+
+    rows = [(1.5, "x"), (2.5, "y")]
+    df = spark.createDataFrame(rows, "amount double, label string")
+    for sst in (False, True):
+        out = str(tmp_path / f"sst_{sst}")
         (df.coalesce(1).write.format("xlsx").mode("overwrite")
-         .option("batchWriter", bw)
+         .option("useSharedStrings", sst)
          .option("columnStyles", "currency,")
          .option("rowHeight", "18").save(out))
-    import glob as g
-
-    [fa] = g.glob(out_a + "/part-*.xlsx")
-    [fb] = g.glob(out_b + "/part-*.xlsx")
-    xa = zipfile.ZipFile(fa).read("xl/worksheets/sheet1.xml")
-    xb = zipfile.ZipFile(fb).read("xl/worksheets/sheet1.xml")
-    assert xa == xb
-    assert b'ht="18"' in xa and b's="' in xa
+        [f] = g.glob(out + "/part-*.xlsx")
+        ref = io.BytesIO()
+        with WorkbookWriter(ref, use_shared_strings=sst, row_height=18.0) as wb:
+            wb.add_sheet("Sheet1")
+            wb.write_header(["amount", "label"])
+            for r in rows:
+                wb.write_row(list(r), styles=[ooxml.STYLE_NAMES["currency"], None])
+        xa = zipfile.ZipFile(f).read("xl/worksheets/sheet1.xml")
+        assert xa == zipfile.ZipFile(ref).read("xl/worksheets/sheet1.xml"), sst
+        assert b'ht="18"' in xa and b's="' in xa
 
 
 # --- columns pruning + limitRows early-stop -------------------------------
@@ -980,18 +1122,19 @@ def test_columns_pruning_headerless(spark, tmp_path):
 
 
 def test_limit_rows_early_stop(spark, tmp_path):
-    """limitRows stops each partition's scan after N rows — on both the
-    batch scanner and the row reader."""
+    """limitRows stops each partition's scan after N rows — on the batch
+    scanner, and on the row reader (pushed filters), where it counts the
+    rows the filter keeps."""
     out = str(tmp_path / "lim")
     spark.range(10000).select(
         F.col("id"), (F.col("id") % 7).alias("m")
     ).coalesce(1).write.format("xlsx").mode("overwrite").save(out)
-    for batch in ("true", "false"):
-        got = (spark.read.format("xlsx").option("limitRows", 5)
-               .option("batchReader", batch).load(out))
-        rows = got.collect()
-        assert len(rows) == 5
-        assert sorted(r.id for r in rows) == [0, 1, 2, 3, 4]
+    rows = spark.read.format("xlsx").option("limitRows", 5).load(out).collect()
+    assert sorted(r.id for r in rows) == [0, 1, 2, 3, 4]
+    pushed = (spark.read.format("xlsx").option("limitRows", 5)
+              .option("pushdown", True).load(out).filter(F.col("m") == 3))
+    # a post-scan filter would see only ids 0-4 and keep [3]
+    assert sorted(r.id for r in pushed.collect()) == [3, 10, 17, 24, 31]
 
 
 def test_property_batch_writer_equals_row_writer():
@@ -1065,13 +1208,14 @@ def test_property_batch_writer_equals_row_writer():
 
 def test_header_consumes_sheet_raises_not_spins(spark, tmp_path):
     """maxRowsPerSheet=1 with a header cannot make progress after a
-    split; both write paths must raise, not loop forever."""
+    split; both write paths (Arrow by default, rows with
+    useSharedStrings) must raise, not loop forever."""
     df = spark.range(5).select(F.col("id"))
-    for bw in ("true", "false"):
-        out = str(tmp_path / f"tiny_{bw}")
+    for sst in ("false", "true"):
+        out = str(tmp_path / f"tiny_{sst}")
         with pytest.raises(Exception, match="maxRowsPerSheet|no room"):
             (df.coalesce(1).write.format("xlsx").mode("overwrite")
-             .option("batchWriter", bw)
+             .option("useSharedStrings", sst)
              .option("maxRowsPerSheet", 1).save(out))
 
 
@@ -1172,12 +1316,14 @@ def test_foreign_writer_shapes(spark, tmp_path):
     assert rows[1] == [1, None, 1.5]          # gap -> None
     assert rows[2] == [2, "ab", 2.5]          # cached formula value
     assert rows[3] == [3, "rich", 3.5]        # sequential cells + runs
-    # Spark surface, both reader paths
-    for batch in ("true", "false"):
-        df = (spark.read.format("xlsx").option("batchReader", batch).load(p))
-        got = sorted(tuple(r) for r in df.collect())
-        assert got == [(1, None, 1.5), (2, "ab", 2.5), (3, "rich", 3.5)]
-        assert df.schema.simpleString() == "struct<id:bigint,name:string,x:double>"
+    # Spark surface: the scanner (which falls back to the row reader on
+    # this prefixed sheet) and the row reader proper (a pushed filter)
+    df = spark.read.format("xlsx").load(p)
+    assert df.schema.simpleString() == "struct<id:bigint,name:string,x:double>"
+    pushed = spark.read.format("xlsx").option("pushdown", True).load(p)
+    for got in (df, pushed.filter(F.col("id") > 0)):
+        rows = sorted(tuple(r) for r in got.collect())
+        assert rows == [(1, None, 1.5), (2, "ab", 2.5), (3, "rich", 3.5)]
 
 
 # --- error-message quality (reference integration_test.rs:330-354) --------
