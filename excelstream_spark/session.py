@@ -24,8 +24,6 @@ _DEFAULT_CONFS: dict[str, str] = {
     # parquet scans: keep row-group pruning + vectorized reader on
     "spark.sql.parquet.filterPushdown": "true",
     "spark.sql.parquet.aggregatePushdown": "true",
-    # let Python Data Sources (our xlsx reader) receive pushFilters()
-    "spark.sql.python.filterPushdown.enabled": "true",
     # 32 MB broadcast threshold: dimension tables (region/nation/customer/
     # supplier/part at any SF we test) broadcast instead of shuffling.
     "spark.sql.autoBroadcastJoinThreshold": str(32 * 1024 * 1024),

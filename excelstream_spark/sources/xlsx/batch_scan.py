@@ -20,7 +20,8 @@ this module only decides when it can apply that rule to a whole column
 at once.  Anything the scanner cannot prove it handled falls back:
 
 - per CHUNK (cell-count mismatch from formulas, rich text or unusual
-  attribute order; non-rectangular rows): the chunk's ``<row>`` elements
+  attribute order; non-rectangular rows; an inline cell not spelled
+  ``t="inlineStr"><is>``): the chunk's ``<row>`` elements
   are parsed with ElementTree under the spreadsheetml namespace (plus the
   worksheet's prefixes) and typed by reader_core's row parser, then
   columnized by ``rows_to_batch`` — the row reader's own code;
@@ -258,7 +259,16 @@ class BatchSheetReader:
         cells = _CELL_RE.findall(text)
         n_cells = text.count("<c ") + text.count("<c>")
         columns = None
-        if len(cells) == n_cells and n_cells % n_rows == 0:
+        # a cell's kind comes from its t= attribute and its text from the
+        # <v> or the <is> group, so an untyped <is> cell or a t="inlineStr"
+        # cell holding <v> would read empty: unless every inline cell is
+        # spelled t="inlineStr"><is>, as our writers spell them, the chunk
+        # takes the fallback
+        if len(cells) == n_cells and n_cells % n_rows == 0 and (
+            text.count("<is>")
+            == text.count('t="inlineStr"><is>')
+            == text.count('t="inlineStr"')
+        ):
             ncol = n_cells // n_rows
             columns = self._columnize_rectangular(cells, n_rows, ncol)
         if columns is not None:

@@ -23,13 +23,12 @@ Options (read):  path, sheetName | sheetIndex | allSheets (default
   columns ("a,b" — prune the scan to the named columns; Spark 4.1's
   Python DS API has no pruneColumns hook, so pruning is an explicit
   option), limitRows (N — each partition stops scanning after N data
-  rows; the early-stop analogue of limit pushdown for df.limit(N)),
-  pushdown (default false, see below), maxFileAgeSec (stream reads).
+  rows; an early stop for df.limit(N), which Spark still applies),
+  maxFileAgeSec (stream reads).
   Readable column types: bigint, int, smallint, tinyint, double, float,
   boolean, string, date, timestamp, timestamp_ntz, binary; any other
   declared type fails on the driver.  Every read goes through the
-  columnar scanner (batch_scan.py) unless filters were pushed, which the
-  row reader evaluates per row.
+  columnar scanner (batch_scan.py); Spark applies filters after the scan.
 
 The source also implements a STREAM reader: ``spark.readStream
 .format("xlsx")`` watches a directory and processes each new workbook
@@ -41,15 +40,6 @@ files invisible to readers).  Note
 Spark's PythonMicroBatchStream executes availableNow as a single batch
 per run — incremental pickup across restarts is exact either way.
 
-The reader implements ``pushFilters`` (Spark 4.1 Python Data Source
-filter pushdown): with ``option("pushdown", true)``, comparison / null /
-IN / string-match predicates are evaluated during row parsing, so
-filtered-out rows never cross the Arrow boundary — the xlsx analogue of
-parquet PushedFilters.  OPT-IN because Spark's planner can reuse a
-cached filtered scan for a later filterless query on the same DataFrame
-(see XlsxReader.pushFilters); enable it for write-once-read-once ETL
-frames.  Requires ``spark.sql.python.filterPushdown.enabled=true`` (set
-by register_xlsx).
 Options (write): sheetName, header (default true), compression (0-9,
   default 6), useSharedStrings (takes the row writer, as a non-scalar
   schema does; every other write is columnar), sheetProtectPassword,
@@ -60,6 +50,7 @@ Options (write): sheetName, header (default true), compression (0-9,
   reference's no-op stubs (writer.rs:375-412),
   columnStyles ("currency,,percent" positional style names from the
   fixed style table — reference K4 write_row_styled semantics)
+Any other option key is ignored with a UserWarning naming it.
 """
 
 from __future__ import annotations
@@ -79,20 +70,7 @@ from pyspark.sql.datasource import (
     DataSourceStreamReader,
     DataSourceStreamWriter,
     DataSourceWriter,
-    EqualTo,
-    Filter,
-    GreaterThan,
-    GreaterThanOrEqual,
-    In,
     InputPartition,
-    IsNotNull,
-    IsNull,
-    LessThan,
-    LessThanOrEqual,
-    Not,
-    StringContains,
-    StringEndsWith,
-    StringStartsWith,
     WriterCommitMessage,
 )
 from pyspark.sql import types as T
@@ -105,6 +83,17 @@ from excelstream_spark.sources.xlsx.reader_core import (
     rows_to_batch,
 )
 from excelstream_spark.sources.xlsx.writer_core import WorkbookWriter
+
+#: every option key the source and sink read
+OPTIONS = frozenset({
+    "path", "sheetName", "sheetIndex", "allSheets", "header", "inferSchema",
+    "samplingRows", "sheetSchemaMode", "columns", "limitRows", "maxFileAgeSec",
+    "compression", "useSharedStrings", "sheetProtectPassword", "singleFile",
+    "maxRowsPerSheet", "columnWidths", "rowHeight", "columnStyles",
+})
+#: keys Spark itself passes (load() of several paths; a stream sink's
+#: checkpoint) are known too; any other key draws a warning
+_KNOWN_KEYS = {k.lower() for k in OPTIONS | {"paths", "checkpointLocation"}}
 
 
 def _truthy(value: str | bool | None, default: bool = False) -> bool:
@@ -156,86 +145,6 @@ def _list_xlsx_files(path: str) -> list[str]:
     return files
 
 
-#: Filter classes the xlsx reader can evaluate worker-side.  Pushing these
-#: into the scan avoids materializing + Arrow-shipping rows Spark would
-#: immediately drop — the xlsx analogue of parquet PushedFilters (SURVEY §4:
-#: "optional niceties (a)/(b)").  Evaluation uses SQL three-valued logic so
-#: accepted filters are EXACTLY as strict as Spark's own post-scan filter.
-_COMPARISONS = {
-    EqualTo: lambda a, b: a == b,
-    GreaterThan: lambda a, b: a > b,
-    GreaterThanOrEqual: lambda a, b: a >= b,
-    LessThan: lambda a, b: a < b,
-    LessThanOrEqual: lambda a, b: a <= b,
-}
-
-
-def _compile_filter(flt: Filter, col_idx: dict[str, int]):
-    """-> row-predicate returning True/False/None (SQL unknown), or None
-    if the filter is not supported and must be left to Spark."""
-    if isinstance(flt, Not):
-        inner = _compile_filter(flt.child, col_idx)
-        if inner is None:
-            return None
-        return lambda row: (lambda v: None if v is None else not v)(inner(row))
-
-    attr = getattr(flt, "attribute", None)
-    if attr is None or len(attr) != 1 or attr[0] not in col_idx:
-        return None
-    i = col_idx[attr[0]]
-
-    if isinstance(flt, IsNull):
-        return lambda row: row[i] is None
-    if isinstance(flt, IsNotNull):
-        return lambda row: row[i] is not None
-
-    if type(flt) in _COMPARISONS:
-        op, val = _COMPARISONS[type(flt)], flt.value
-        if val is None:
-            return None
-
-        def cmp(row, op=op, val=val):
-            v = row[i]
-            if v is None:
-                return None
-            try:
-                return op(v, val)
-            except TypeError:  # incomparable types: let Spark decide
-                return None
-
-        return cmp
-
-    if isinstance(flt, In):
-        vals = tuple(v for v in flt.value if v is not None)
-        has_null = len(vals) != len(flt.value)
-        def contains(row):
-            v = row[i]
-            if v is None:
-                return None
-            if v in vals:
-                return True
-            return None if has_null else False
-        return contains
-
-    if isinstance(flt, (StringStartsWith, StringEndsWith, StringContains)):
-        val = flt.value
-        fn = {
-            StringStartsWith: str.startswith,
-            StringEndsWith: str.endswith,
-            StringContains: str.__contains__,
-        }[type(flt)]
-        def strpred(row):
-            v = row[i]
-            if v is None:
-                return None
-            if not isinstance(v, str):
-                return None
-            return fn(v, val)
-        return strpred
-
-    return None
-
-
 def _prune_schema(schema: T.StructType, columns: str | None) -> T.StructType:
     """column-pruned scan via option("columns", "a,b"): only the named
     columns survive inference, in the requested order, and the scan never
@@ -273,13 +182,24 @@ def _positional_remap(schema: T.StructType) -> list[int | None] | None:
 
 
 class XlsxPartition(InputPartition):
-    def __init__(self, file: str, sheet: str, predicates=None):
+    def __init__(self, file: str, sheet: str):
         self.file = file
         self.sheet = sheet
-        self.predicates = predicates or []
 
 
 class XlsxDataSource(DataSource):
+    def __init__(self, options):
+        # Spark builds the source once per load or save, batch or stream
+        super().__init__(options)
+        unknown = sorted(k for k in options if k.lower() not in _KNOWN_KEYS)
+        if unknown:
+            warnings.warn(
+                f"xlsx: ignoring unknown option(s) {unknown}; known options: "
+                f"{sorted(OPTIONS, key=str.lower)}",
+                UserWarning,
+                stacklevel=2,
+            )
+
     @classmethod
     def name(cls) -> str:
         return "xlsx"
@@ -362,15 +282,6 @@ class XlsxReader(DataSourceReader):
         self.sheet_name = options.get("sheetname")
         self.sheet_index = options.get("sheetindex")
         self.all_sheets = _truthy(options.get("allsheets"), False)
-        # OPT-IN: Spark's Python-datasource planning caches the worker's
-        # scan blob per relation and can reuse a FILTERED scan for a later
-        # filterless query on the same DataFrame (observed on 4.1.2: an
-        # unfiltered count returning the previous query's filtered count).
-        # Pushdown is therefore only armed when the user asks for it —
-        # safe for write-once-read-once ETL frames, where it saves the
-        # Arrow transfer of every dropped row.
-        self.pushdown = _truthy(options.get("pushdown"), False)
-        self._predicates = []
         lim = options.get("limitrows")
         #: per-partition row cap (option("limitRows", N)): each partition
         #: stops SCANNING after N data rows — a sound upper bound for
@@ -383,36 +294,10 @@ class XlsxReader(DataSourceReader):
             else None
         )
 
-    def pushFilters(self, filters):
-        """Accept every filter we can evaluate exactly; yield the rest back
-        to Spark.  (Spark removes accepted filters from its post-scan
-        Filter, so acceptance is a correctness contract, not a hint.)
-
-        Lifecycle: Spark reuses ONE reader instance across every query on
-        the same DataFrame, calling pushFilters only for plans that have
-        filters, then partitions(), then pickling the lot for executors.
-        Predicate state must therefore bind to the SCAN, not the reader:
-        pushFilters stages them, partitions() moves them into the
-        partition objects and clears the staging — otherwise one query's
-        filters leak into the next (observed: an unfiltered count on the
-        same DataFrame returning the previous query's filtered count)."""
-        self._predicates = []
-        if not self.pushdown:
-            yield from filters
-            return
-        col_idx = {f.name: i for i, f in enumerate(self.schema_.fields)}
-        for flt in filters:
-            pred = _compile_filter(flt, col_idx)
-            if pred is None:
-                yield flt
-            else:
-                self._predicates.append(pred)
-
     def partitions(self):
-        preds, self._predicates = self._predicates, []  # bind to this scan
-        return self._partitions(_list_xlsx_files(self.path), preds)
+        return self._partitions(_list_xlsx_files(self.path))
 
-    def _partitions(self, files: list[str], predicates=None) -> list[XlsxPartition]:
+    def _partitions(self, files: list[str]) -> list[XlsxPartition]:
         """One partition per (file, sheet): the named sheet, every sheet
         with allSheets, else the sheetIndex-th (default first) sheet."""
         parts = []
@@ -424,39 +309,37 @@ class XlsxReader(DataSourceReader):
                     names = wb.sheet_names()
                 if not self.all_sheets:
                     names = [names[int(self.sheet_index) if self.sheet_index else 0]]
-            parts.extend(XlsxPartition(f, s, predicates) for s in names)
+            parts.extend(XlsxPartition(f, s) for s in names)
         return parts
 
     def read(self, partition: XlsxPartition):
-        """Yields pyarrow RecordBatches.  The columnar scanner
-        (batch_scan.py, ~4x the row reader) reads every partition without
-        pushed predicates; predicates need per-row evaluation, so those
-        partitions take the row reader.  When the scanner fails before its
-        first batch, or finds no rows where the row reader finds some
+        """Yields pyarrow RecordBatches from the columnar scanner
+        (batch_scan.py, ~4x the row reader).  When the scanner fails before
+        its first batch, or finds no rows where the row reader finds some
         (e.g. a namespace-prefixed worksheet), the row reader's rows are
-        served and a RuntimeWarning names the file, sheet and cause."""
+        served and a RuntimeWarning names the file, sheet and cause.  On
+        either path ``limitRows`` counts scanned data rows."""
         from excelstream_spark.sources.xlsx.batch_scan import BatchSheetReader
 
         cause = None
-        if not partition.predicates:
-            yielded = False
-            try:
-                with WorkbookReader(partition.file) as wb:
-                    reader = BatchSheetReader(
-                        wb, partition.sheet, self.schema_, self.header,
-                        schema_mode=self.mode, limit=self.limit,
-                        init_remap=self._init_remap,
-                    )
-                    for batch in reader.batches():
-                        yielded = True
-                        yield batch
-                if yielded:
-                    return
-                cause = "found no rows"
-            except Exception as e:
-                if yielded:
-                    raise
-                _warn_fallback(partition, f"failed before its first batch: {e!r}")
+        yielded = False
+        try:
+            with WorkbookReader(partition.file) as wb:
+                reader = BatchSheetReader(
+                    wb, partition.sheet, self.schema_, self.header,
+                    schema_mode=self.mode, limit=self.limit,
+                    init_remap=self._init_remap,
+                )
+                for batch in reader.batches():
+                    yielded = True
+                    yield batch
+            if yielded:
+                return
+            cause = "found no rows"
+        except Exception as e:
+            if yielded:
+                raise
+            _warn_fallback(partition, f"failed before its first batch: {e!r}")
         for batch in self._read_rows(partition):
             if cause is not None:
                 _warn_fallback(partition, cause)
@@ -464,10 +347,9 @@ class XlsxReader(DataSourceReader):
             yield batch
 
     def _read_rows(self, partition: XlsxPartition):
-        """The row reader: ``iter_rows`` typed rows, realigned, coerced and
-        filtered by ``rows_to_batch`` in batches of up to 4,096 rows,
-        stopping after ``limitRows`` output rows."""
-        remaining = self.limit
+        """The row reader: ``iter_rows`` typed rows, realigned and coerced
+        by ``rows_to_batch`` in batches of up to 4,096 rows, stopping after
+        ``limitRows`` scanned data rows."""
         with WorkbookReader(partition.file) as wb:
             rows = wb.iter_rows(partition.sheet)
             remap = self._init_remap
@@ -481,18 +363,9 @@ class XlsxReader(DataSourceReader):
                 # coerced positionally and silently mis-typed (policy
                 # per sheetSchemaMode; see resolve_header_remap)
                 remap = resolve_header_remap(head, self.schema_, self.mode)
-            while remaining is None or remaining > 0:
-                n = 4096 if remaining is None else min(4096, remaining)
-                chunk = list(itertools.islice(rows, n))
-                if not chunk:
-                    return
-                batch = rows_to_batch(
-                    chunk, self.schema_, self.pa_schema, remap, partition.predicates
-                )
-                if batch.num_rows:
-                    yield batch
-                if remaining is not None:
-                    remaining -= batch.num_rows
+            rows = itertools.islice(rows, self.limit)  # None: no cap
+            while chunk := list(itertools.islice(rows, 4096)):
+                yield rows_to_batch(chunk, self.schema_, self.pa_schema, remap)
 
 
 def _warn_fallback(partition: XlsxPartition, cause: str) -> None:
@@ -846,13 +719,6 @@ def register_xlsx(spark) -> None:
     address for an already-registered one."""
     if getattr(spark, "_esspark_xlsx_registered", False):
         return
-    # the reader implements pushFilters(), which Spark REJECTS (hard
-    # error, not a fallback) unless this conf is on — set it here so a
-    # caller-provided bare session works, not just our get_spark ones
-    try:
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    except Exception:
-        pass
     try:
         spark.dataSource.register(XlsxDataSource)
         spark._esspark_xlsx_registered = True

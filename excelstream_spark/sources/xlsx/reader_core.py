@@ -22,7 +22,6 @@ from __future__ import annotations
 
 import datetime as dt
 import functools
-import itertools
 import re
 import zipfile
 from collections.abc import Iterator
@@ -452,13 +451,12 @@ def _parse_type(name: str) -> T.DataType:
     }[name]
 
 
-def rows_to_batch(rows: list[list], schema: T.StructType, pa_schema, remap=None, predicates=()):
+def rows_to_batch(rows: list[list], schema: T.StructType, pa_schema, remap=None):
     """Typed-value rows -> one Arrow RecordBatch on the declared schema:
     realign by a header ``remap`` (schema field -> source column, None =
-    positional), pad/truncate, cast each cell leniently (reference
-    CellValue::as_* semantics, types.rs:101-152), and keep only the rows
-    every pushed predicate accepts.  The one rows->Arrow step of the row
-    reader and of the batch scanner's chunk fallback."""
+    positional), pad/truncate and cast each cell leniently (reference
+    CellValue::as_* semantics, types.rs:101-152).  The one rows->Arrow
+    step of the row reader and of the batch scanner's chunk fallback."""
     import pyarrow as pa
 
     cols = []
@@ -469,9 +467,6 @@ def rows_to_batch(rows: list[list], schema: T.StructType, pa_schema, remap=None,
             _coerce(r[si] if si is not None and si < len(r) else None, dtype)
             for r in rows
         ])
-    if predicates:
-        keep = [all(p(row) is True for p in predicates) for row in zip(*cols)]
-        cols = [list(itertools.compress(c, keep)) for c in cols]
     return pa.RecordBatch.from_arrays(
         [pa.array(c, type=f.type) for c, f in zip(cols, pa_schema)],
         schema=pa_schema,

@@ -364,9 +364,9 @@ def test_workbook_reader_lazy_sst(tmp_path):
 
 
 def test_filter_pushdown_matches_post_scan(spark, tmp_path):
-    """Accepted pushFilters must be EXACTLY as strict as Spark's own
-    filter (acceptance removes the post-scan Filter) — compare xlsx-with-
-    pushdown against the parquet original for every supported shape."""
+    """Spark's own filter over the scanner equals the parquet original for
+    every filter shape, on ONE reused frame with an unfiltered count
+    between cases (the reuse pattern that leaked pushed filters)."""
     from pyspark.sql import functions as F
 
     src = spark.read.parquet(f"{SF_DIR}/orders.parquet").limit(500)
@@ -381,34 +381,14 @@ def test_filter_pushdown_matches_post_scan(spark, tmp_path):
         lambda t: t.filter(F.col("o_totalprice") > 100000),
         lambda t: t.filter(F.col("o_orderdate") > "1995-06-01"),
         lambda t: t.filter(F.col("o_totalprice").isNotNull()),
-        # mixed pushable + residual expression
+        # a filter Spark could push beside one it could not
         lambda t: t.filter((F.col("o_totalprice") > 100000) & (F.length("o_orderpriority") > 3)),
     ]
-    # pushdown is OPT-IN (see datasource.py); a FRESH frame per filter
-    # sidesteps Spark's cached-scan reuse — the supported usage pattern
+    df = spark.read.format("xlsx").load(p)
+    n_all = src.count()
     for i, fn in enumerate(cases):
-        fresh = spark.read.format("xlsx").option("pushdown", True).load(p)
-        assert fn(fresh).count() == fn(src).count(), f"case {i} diverged"
-
-
-def test_push_filters_residual_split(spark):
-    """Unsupported filters must be yielded back to Spark untouched."""
-    from pyspark.sql.datasource import EqualTo, IsNotNull, StringStartsWith
-    from pyspark.sql import types as T
-    from excelstream_spark.sources.xlsx.datasource import XlsxReader
-
-    schema = T.StructType(
-        [T.StructField("a", T.LongType()), T.StructField("s", T.StringType())]
-    )
-    r = XlsxReader(schema, {"path": "/nonexistent", "pushdown": "true"})
-    f_ok = [EqualTo(("a",), 1), IsNotNull(("s",)), StringStartsWith(("s",), "x")]
-    f_bad = [EqualTo(("nope",), 1), EqualTo(("a", "nested"), 2)]
-    residual = list(r.pushFilters(f_ok + f_bad))
-    assert residual == f_bad
-    assert len(r._predicates) == 3
-    # three-valued logic: NULL input -> filtered out, not inverted
-    assert r._predicates[0]((None, "xy")) is None
-    assert r._predicates[2]((1, "xy")) is True
+        assert fn(df).count() == fn(src).count(), f"case {i} diverged"
+        assert df.count() == n_all, f"count after case {i}"
 
 
 def test_column_widths_and_row_height(spark, tmp_path):
@@ -563,19 +543,25 @@ def test_column_styles_option(spark, tmp_path):
 
 
 def test_no_pushdown_no_cross_query_leak(spark, tmp_path):
-    """Regression: with default options, interleaving filtered and
-    unfiltered queries on the SAME DataFrame must never leak one query's
-    filters into another (Spark's python-datasource planner reuses the
-    cached scan blob — the reason pushdown is opt-in)."""
+    """Regression: interleaving filtered and unfiltered queries on the
+    SAME DataFrame never leaks one query's filters into another (Spark's
+    python-datasource planner reuses the reader, so a reader that kept
+    pushed filters served a later unfiltered query the filtered rows)."""
     src = spark.read.parquet(f"{SF_DIR}/orders.parquet").limit(400)
     p = str(tmp_path / "leak_x")
     src.write.format("xlsx").mode("overwrite").save(p)
-    df = spark.read.format("xlsx").load(p)
-    n_all = df.count()
-    n_o = df.filter(F.col("o_orderstatus") == "O").count()
-    assert df.count() == n_all  # the leak made this return n_o
-    assert n_o == src.filter(F.col("o_orderstatus") == "O").count()
-    assert df.count() == n_all
+    n_o_src = src.filter(F.col("o_orderstatus") == "O").count()
+    # the unknown "pushdown" key is ignored: that frame reads as the default
+    for df in (spark.read.format("xlsx").load(p),
+               spark.read.format("xlsx").option("pushdown", True).load(p)):
+        n_all = df.count()
+        assert n_all == 400
+        n_o = df.filter(F.col("o_orderstatus") == "O").count()
+        assert df.count() == n_all  # the leak made this return n_o
+        assert n_o == n_o_src
+        n_f = len(df.filter(F.col("o_orderstatus") == "F").collect())
+        assert n_f == src.filter(F.col("o_orderstatus") == "F").count()
+        assert len(df.collect()) == n_all
 
 
 # --- columnar batch scanner vs row reader (batch_scan.py) ------------------
@@ -735,6 +721,25 @@ def test_batch_reader_fallback_equivalence(tmp_path):
     assert got == _rows_via_row_reader(p2, "S", schema2, header=False)
     assert got == [("2022-01-01 06:00:00",), ("2022-01-01 12:00:00",)]
 
+    # inline strings without t="inlineStr" (empty and numeric) and
+    # t="inlineStr" cells holding <v>: the row reader reads their text,
+    # so the scanner takes the chunk fallback
+    p3 = str(tmp_path / "untyped_is.xlsx")
+    _craft_xlsx(
+        p3,
+        '<row r="1"><c r="A1"><is><t/></is></c><c r="B1"><is><t>7</t></is></c>'
+        '<c r="C1" t="inlineStr"><v>x</v></c></row>'
+        '<row r="2"><c r="A2"><is><t/></is></c><c r="B2"><is><t>8</t></is></c>'
+        '<c r="C2" t="inlineStr"><v>y</v></c></row>',
+    )
+    schema3 = T.StructType([
+        T.StructField("a", T.StringType()), T.StructField("b", T.LongType()),
+        T.StructField("c", T.StringType()),
+    ])
+    got = _rows_via_batch(p3, "S", schema3, header=False)
+    assert got == _rows_via_row_reader(p3, "S", schema3, header=False)
+    assert got == [("", 7, "x"), ("", 8, "y")]
+
 
 def test_batch_reader_fallback_chunk_keeps_worksheet_prefixes(tmp_path):
     """A chunk-level fallback after the first batch parses rows carrying a
@@ -867,17 +872,43 @@ def test_scanner_fallbacks_warn_with_rows_unchanged(tmp_path, monkeypatch):
 
 
 def test_every_option_is_documented():
-    """Each option key the data source reads is named in its module
-    docstring (case-insensitive)."""
+    """The option keys the data source reads are exactly its declared
+    ``OPTIONS``, and each is named in its module docstring
+    (case-insensitive)."""
     import re
 
     from excelstream_spark.sources.xlsx import datasource
 
     with open(datasource.__file__) as f:
         keys = set(re.findall(r"""options\.get\(\s*["'](\w+)["']""", f.read()))
-    assert {"allsheets", "limitrows", "usesharedstrings"} <= keys
+    assert keys == {k.lower() for k in datasource.OPTIONS}
+    assert len(keys) == 19
     doc = datasource.__doc__.lower()
     assert sorted(k for k in keys if not re.search(rf"\b{k}\b", doc)) == []
+
+
+def test_unknown_option_keys_warn():
+    """Deleted and misspelt option keys draw one UserWarning naming them
+    and listing the known keys; documented keys, in any case, and the
+    keys Spark passes itself draw none."""
+    import warnings
+
+    from excelstream_spark.sources.xlsx.datasource import XlsxDataSource
+
+    with pytest.warns(UserWarning) as record:
+        XlsxDataSource({"path": "/x", "pushdown": "true", "sheetNmae": "S",
+                        "batchReader": "false", "arrowBatches": "false",
+                        "arrowBatchSize": "10", "batchWriter": "false"})
+    assert len(record) == 1
+    msg = str(record[0].message)
+    assert ("['arrowBatchSize', 'arrowBatches', 'batchReader', "
+            "'batchWriter', 'pushdown', 'sheetNmae']") in msg
+    assert "'sheetName'" in msg and "'limitRows'" in msg
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        XlsxDataSource({"path": "/x", "sheetName": "S", "LIMITROWS": "5",
+                        "samplingrows": "10", "paths": '["/x"]',
+                        "checkpointLocation": "/ck"})
 
 
 # --- sheetSchemaMode policies ---------------------------------------------
@@ -1122,19 +1153,26 @@ def test_columns_pruning_headerless(spark, tmp_path):
 
 
 def test_limit_rows_early_stop(spark, tmp_path):
-    """limitRows stops each partition's scan after N rows — on the batch
-    scanner, and on the row reader (pushed filters), where it counts the
-    rows the filter keeps."""
+    """limitRows stops each partition's scan after N data rows — on the
+    batch scanner and on the row reader, where it also spans the row
+    reader's 4,096-row batches; a filter applies after the capped scan."""
+    import glob
+
+    from excelstream_spark.sources.xlsx.datasource import XlsxPartition, XlsxReader
+
     out = str(tmp_path / "lim")
     spark.range(10000).select(
         F.col("id"), (F.col("id") % 7).alias("m")
     ).coalesce(1).write.format("xlsx").mode("overwrite").save(out)
-    rows = spark.read.format("xlsx").option("limitRows", 5).load(out).collect()
-    assert sorted(r.id for r in rows) == [0, 1, 2, 3, 4]
-    pushed = (spark.read.format("xlsx").option("limitRows", 5)
-              .option("pushdown", True).load(out).filter(F.col("m") == 3))
-    # a post-scan filter would see only ids 0-4 and keep [3]
-    assert sorted(r.id for r in pushed.collect()) == [3, 10, 17, 24, 31]
+    df = spark.read.format("xlsx").option("limitRows", 5).load(out)
+    assert sorted(r.id for r in df.collect()) == [0, 1, 2, 3, 4]
+    # the filter sees only ids 0-4 and keeps [3]
+    assert [r.id for r in df.filter(F.col("m") == 3).collect()] == [3]
+    [part] = glob.glob(out + "/part-*.xlsx")
+    for limit, n in ((5, 5), (4100, 4100), (None, 10000)):
+        opts = {"path": part} if limit is None else {"path": part, "limitrows": str(limit)}
+        got = _batch_rows(XlsxReader(df.schema, opts)._read_rows(XlsxPartition(part, "Sheet1")))
+        assert got == [(i, i % 7) for i in range(n)], limit
 
 
 def test_property_batch_writer_equals_row_writer():
@@ -1317,13 +1355,12 @@ def test_foreign_writer_shapes(spark, tmp_path):
     assert rows[2] == [2, "ab", 2.5]          # cached formula value
     assert rows[3] == [3, "rich", 3.5]        # sequential cells + runs
     # Spark surface: the scanner (which falls back to the row reader on
-    # this prefixed sheet) and the row reader proper (a pushed filter)
+    # this prefixed sheet); then the row reader proper, in-process
     df = spark.read.format("xlsx").load(p)
     assert df.schema.simpleString() == "struct<id:bigint,name:string,x:double>"
-    pushed = spark.read.format("xlsx").option("pushdown", True).load(p)
-    for got in (df, pushed.filter(F.col("id") > 0)):
-        rows = sorted(tuple(r) for r in got.collect())
-        assert rows == [(1, None, 1.5), (2, "ab", 2.5), (3, "rich", 3.5)]
+    expected = [(1, None, 1.5), (2, "ab", 2.5), (3, "rich", 3.5)]
+    assert sorted(tuple(r) for r in df.collect()) == expected
+    assert _rows_via_row_reader(p, "Data", df.schema, header=True) == expected
 
 
 # --- error-message quality (reference integration_test.rs:330-354) --------
