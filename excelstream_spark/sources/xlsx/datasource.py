@@ -13,7 +13,9 @@ Write path (reference K1-K8): each partition streams one part-workbook
 ``singleFile=true`` + a single partition (coalesce(1)) emits exactly the
 target path as one workbook — the Excel-openable mode.
 
-Options (read):  path, sheetName | sheetIndex | allSheets (default
+Options (read):  path (a file, directory or glob; ``load([a, b])`` reads
+  every path — Spark passes the list as ``paths``, a JSON array, and the
+  schema comes from the first file), sheetName | sheetIndex | allSheets (default
   false — one partition per sheet of every file), header (default true),
   inferSchema (default true), samplingRows (default 200),
   sheetSchemaMode (realign | union | strict, default realign — policy
@@ -57,6 +59,7 @@ from __future__ import annotations
 
 import glob
 import itertools
+import json
 import os
 import re
 import uuid
@@ -124,6 +127,17 @@ def _local_path(path: str) -> str:
             f"or write locally and replicate (sources/cloud.py)"
         )
     return path
+
+
+def _input_files(options) -> list[str]:
+    """Every workbook to read: under ``path``, then under each entry of
+    ``paths``, the JSON array Spark passes when ``load()`` gets a list."""
+    paths = [options["path"]] if options.get("path") is not None else []
+    if "paths" in options:  # set by Spark, not a user option
+        paths += json.loads(options["paths"])
+    if not paths:
+        raise ValueError("xlsx source requires a path")
+    return [f for path in paths for f in _list_xlsx_files(path)]
 
 
 def _list_xlsx_files(path: str) -> list[str]:
@@ -205,10 +219,7 @@ class XlsxDataSource(DataSource):
         return "xlsx"
 
     def schema(self):
-        path = self.options.get("path")
-        if path is None:
-            raise ValueError("xlsx source requires a path")
-        files = _list_xlsx_files(path)
+        files = _input_files(self.options)
         n_sample = int(self.options.get("samplingrows", 200))
         header = _truthy(self.options.get("header"), True)
         infer = _truthy(self.options.get("inferschema"), True)
@@ -277,7 +288,6 @@ class XlsxReader(DataSourceReader):
         self.schema_ = schema
         self.options = options
         self.mode = options.get("sheetschemamode", "realign").lower()
-        self.path = options.get("path")
         self.header = _truthy(options.get("header"), True)
         self.sheet_name = options.get("sheetname")
         self.sheet_index = options.get("sheetindex")
@@ -295,7 +305,7 @@ class XlsxReader(DataSourceReader):
         )
 
     def partitions(self):
-        return self._partitions(_list_xlsx_files(self.path))
+        return self._partitions(_input_files(self.options))
 
     def _partitions(self, files: list[str]) -> list[XlsxPartition]:
         """One partition per (file, sheet): the named sheet, every sheet
@@ -407,13 +417,12 @@ class XlsxStreamReader(DataSourceStreamReader):
     def __init__(self, schema: T.StructType, options):
         #: each new file is read exactly as a batch read of it would be
         self._reader = XlsxReader(schema, options)
-        self.path = options.get("path")
         age = options.get("maxfileagesec")
         self.max_age = float(age) if age is not None else None
 
     def _current_files(self) -> list[str]:
         try:
-            return _list_xlsx_files(self.path)
+            return _input_files(self._reader.options)
         except FileNotFoundError:
             return []
 

@@ -136,6 +136,23 @@ def test_partitioned_stream_roundtrip(spark, tmp_path):
     assert back.agg(F.sum("Value")).first()[0] == sum(i * 100 for i in range(1000))
 
 
+def test_load_several_paths(spark, tmp_path):
+    """load([a, b]) reads the workbooks under every path (Spark passes the
+    list as the JSON option ``paths``); load(a) still reads one."""
+    dirs = []
+    for name, ids in (("a", range(3)), ("b", range(10, 12))):
+        out = str(tmp_path / name)
+        spark.createDataFrame([(i, f"n{i}") for i in ids], "id long, s string") \
+            .coalesce(1).write.mode("overwrite").format("xlsx").save(out)
+        dirs.append(out)
+    both = spark.read.format("xlsx").load(dirs)
+    assert both.schema.simpleString() == "struct<id:bigint,s:string>"
+    assert sorted(tuple(r) for r in both.collect()) == [
+        (0, "n0"), (1, "n1"), (2, "n2"), (10, "n10"), (11, "n11"),
+    ]
+    assert sorted(r.id for r in spark.read.format("xlsx").load(dirs[1]).collect()) == [10, 11]
+
+
 # --- F5: multi-sheet ------------------------------------------------------
 
 def test_multi_sheet_workbook(tmp_path):
@@ -635,10 +652,11 @@ def _craft_xlsx(path, sheet_xml, sst_items=None, date_xf=False, root_attrs=""):
                 f'<styleSheet xmlns="{ns}"><cellXfs count="2">'
                 '<xf numFmtId="0"/><xf numFmtId="14"/></cellXfs></styleSheet>',
             )
+        # surrogateescape: a lone surrogate \udcXX writes the raw byte XX
         z.writestr(
             "xl/worksheets/sheet1.xml",
-            f'<worksheet xmlns="{ns}"{root_attrs}><sheetData>' + sheet_xml
-            + "</sheetData></worksheet>",
+            (f'<worksheet xmlns="{ns}"{root_attrs}><sheetData>' + sheet_xml
+             + "</sheetData></worksheet>").encode("utf-8", "surrogateescape"),
         )
 
 
@@ -678,7 +696,7 @@ def test_batch_reader_fast_path_semantics(tmp_path, monkeypatch):
 
 
 def test_batch_reader_fallback_equivalence(tmp_path):
-    """Shapes the regex scanner cannot prove (ragged rows, reversed
+    """Shapes the scanner cannot prove (ragged rows, reversed
     attribute order, formulas, empty/self-closed rows) fall back per
     chunk and still match the row reader exactly."""
     p = str(tmp_path / "gnarly.xlsx")
@@ -740,6 +758,47 @@ def test_batch_reader_fallback_equivalence(tmp_path):
     assert got == _rows_via_row_reader(p3, "S", schema3, header=False)
     assert got == [("", 7, "x"), ("", 8, "y")]
 
+    # rectangular rows that do not start at column A, with a single-quoted
+    # t=, and a character reference HTML reads differently (&#128;): the
+    # row reader places cells by their letters, reads t='s' as a shared
+    # string and &#128; as U+0080
+    p4 = str(tmp_path / "offset.xlsx")
+    _craft_xlsx(
+        p4,
+        '<row r="1"><c r="B1"><v>1</v></c><c r="C1" t=\'s\'><v>0</v></c></row>'
+        '<row r="2"><c r="B2"><v>2</v></c><c r="C2" t=\'s\'><v>1</v></c></row>',
+        sst_items=["<si><t>hello</t></si>", "<si><t>world</t></si>"],
+    )
+    p5 = str(tmp_path / "ref128.xlsx")
+    _craft_xlsx(
+        p5,
+        '<row r="1"><c r="A1" t="inlineStr"><is><t>&#128;</t></is></c></row>'
+        '<row r="2"><c r="A2" t="inlineStr"><is><t>a&#x80;</t></is></c></row>',
+    )
+    schema4 = T.StructType([
+        T.StructField("a", T.StringType()), T.StructField("b", T.LongType()),
+        T.StructField("c", T.StringType()),
+    ])
+    got = _rows_via_batch(p4, "S", schema4, header=False)
+    assert got == _rows_via_row_reader(p4, "S", schema4, header=False)
+    assert got == [(None, 1, "hello"), (None, 2, "world")]
+    got = _rows_via_batch(p5, "S", schema4, header=False)
+    assert got == _rows_via_row_reader(p5, "S", schema4, header=False)
+    assert got == [("\x80", None, None), ("a\x80", None, None)]
+
+    # a float column reads each value as a Python float, then float32: a
+    # text just above a float32 midpoint rounds to the midpoint first
+    p6 = str(tmp_path / "float32.xlsx")
+    _craft_xlsx(
+        p6,
+        '<row r="1"><c r="A1"><v>1.00000005960464478</v></c></row>'
+        '<row r="2"><c r="A2"><v>0.5</v></c></row>',
+    )
+    schema6 = T.StructType([T.StructField("f", T.FloatType())])
+    got = _rows_via_batch(p6, "S", schema6, header=False)
+    assert got == _rows_via_row_reader(p6, "S", schema6, header=False)
+    assert got == [(1.0,), (0.5,)]
+
 
 def test_batch_reader_fallback_chunk_keeps_worksheet_prefixes(tmp_path):
     """A chunk-level fallback after the first batch parses rows carrying a
@@ -769,6 +828,270 @@ def test_batch_reader_fallback_chunk_keeps_worksheet_prefixes(tmp_path):
     got = _batch_rows(batches)
     assert got == _rows_via_row_reader(p, "S", schema, header=False)
     assert len(got) == 100 and got[59] == (60, None)
+
+
+# --- scanner differential test: writer-shaped sheets and perturbations ----
+
+_DIFF_SST = ["<si><t>alpha</t></si>", "<si><t>b&amp;c</t></si>", "<si><t>7</t></si>"]
+#: column kinds as this package's writers spell them, and two schemas to
+#: read them with (the second sends most columns through other casts)
+_DIFF_KINDS = ("long", "double", "inline", "date", "bool", "shared")
+_DIFF_TYPES = (
+    {"long": T.LongType(), "double": T.DoubleType(), "inline": T.StringType(),
+     "date": T.TimestampNTZType(), "bool": T.BooleanType(), "shared": T.StringType()},
+    {"long": T.DoubleType(), "double": T.StringType(), "inline": T.StringType(),
+     "date": T.DateType(), "bool": T.LongType(), "shared": T.StringType()},
+)
+
+
+def _diff_cell(rng, kind, ref):
+    if rng.random() < 0.1:
+        return f'<c r="{ref}"/>'
+    if kind == "long":
+        return f'<c r="{ref}"><v>{rng.randint(-10**12, 10**12)}</v></c>'
+    if kind == "double":
+        v = rng.choice([rng.uniform(-1e6, 1e6), 0.5, -0.0, 1e-300, float("inf")])
+        return f'<c r="{ref}"><v>{v!r}</v></c>'
+    if kind == "inline":
+        v = rng.choice(["plain", "", "a&b", "<x>", "q\"'", "tab\tnl\n", "€ünï", " pad "])
+        return (f'<c r="{ref}" t="inlineStr"><is><t xml:space="preserve">'
+                f"{ooxml.esc(v)}</t></is></c>")
+    if kind == "date":
+        v = rng.choice([rng.uniform(1, 80_000), 60.0, 61.0, 44562.0])
+        return f'<c r="{ref}" s="1"><v>{v!r}</v></c>'
+    if kind == "bool":
+        return f'<c r="{ref}" t="b"><v>{rng.randint(0, 1)}</v></c>'
+    return f'<c r="{ref}" t="s"><v>{rng.randrange(len(_DIFF_SST))}</v></c>'
+
+
+def _with_attr(cell, attr):
+    """Insert ``attr`` right after the cell's r="..." attribute."""
+    ref_end = cell.index('"', len('<c r="'))
+    return cell[: ref_end + 1] + attr + cell[ref_end + 1:]
+
+
+def _text_of(cell, text):
+    """The cell with its <v>/<t> text replaced (a self-closed cell gets a <v>)."""
+    import re
+
+    if cell.endswith("/>") and "<is>" not in cell:
+        return cell[:-2] + f"><v>{text}</v></c>"
+    return re.sub(r"(<v>|<t[^>]*>)[^<]*(</v>|</t>)", rf"\g<1>{text}\g<2>", cell, count=1)
+
+
+#: cell perturbations: (name, cell xml, kind, ref) -> new cell xml
+_CELL_PERTURBATIONS = {
+    "attr_order": lambda c, k, r: (
+        f'<c s="0" r="{r}"/>' if c.endswith("/>")
+        else c.replace(f'<c r="{r}"', "<c", 1).replace(">", f' r="{r}">', 1)
+    ),
+    "attr_s_before_t": lambda c, k, r: _with_attr(c, ' s="0"'),
+    "t_plain": lambda c, k, r: c.replace('<t xml:space="preserve">', "<t>"),
+    "t_self": lambda c, k, r: f'<c r="{r}" t="inlineStr"><is><t/></is></c>',
+    "t_self_attr": lambda c, k, r: f'<c r="{r}" t="inlineStr"><is><t xml:space="preserve"/></is></c>',
+    "attr_gt": lambda c, k, r: _with_attr(c, ' foo="a>b"'),
+    "attr_slash": lambda c, k, r: _with_attr(c, ' foo="a/b"'),
+    "attr_slash_self": lambda c, k, r: f'<c r="{r}" foo="/"/>',
+    "attr_ref": lambda c, k, r: _with_attr(c, ' foo="&amp;"'),
+    "attr_newline": lambda c, k, r: _with_attr(c, '\n foo="x"'),
+    "attr_single_quote": lambda c, k, r: (
+        c.replace('t="', "t='", 1).replace('">', "'>", 1) if ' t="' in c
+        else _with_attr(c, " t='n'")
+    ),
+    "ws_before_gt": lambda c, k, r: c.replace(">", " >", 1),
+    "ws_in_v": lambda c, k, r: c.replace("<v>", "<v >", 1).replace("</v>", "</v >", 1),
+    "ws_in_end": lambda c, k, r: c.replace("</c>", "</c >"),
+    "t_tab": lambda c, k, r: c.replace("<t ", "<t\t"),
+    "t_n": lambda c, k, r: _with_attr(c, ' t="n"') if k in ("long", "double") else c,
+    "t_e": lambda c, k, r: f'<c r="{r}" t="e"><v>#DIV/0!</v></c>',
+    "t_str": lambda c, k, r: f'<c r="{r}" t="str"><v>12</v></c>',
+    "t_s": lambda c, k, r: f'<c r="{r}" t="s"><v>2</v></c>',
+    "t_s_bad": lambda c, k, r: f'<c r="{r}" t="s"><v>9</v></c>',
+    "t_b": lambda c, k, r: f'<c r="{r}" t="b"><v>1</v></c>',
+    "t_b_padded": lambda c, k, r: f'<c r="{r}" t="b"><v> 1</v></c>',
+    "t_d": lambda c, k, r: f'<c r="{r}" t="d"><v>2022-01-01T00:00:00</v></c>',
+    "date_style": lambda c, k, r: f'<c r="{r}" s="1"><v>44562.75</v></c>',
+    "date_out_of_range": lambda c, k, r: f'<c r="{r}" s="1"><v>0.5</v></c>',
+    "number_text": lambda c, k, r: _text_of(c, "1.0e3"),
+    "empty_v": lambda c, k, r: f'<c r="{r}"><v></v></c>',
+    "empty_c": lambda c, k, r: f'<c r="{r}"></c>',
+    "refs_v": lambda c, k, r: _text_of(c, "&#49;&#x32;"),
+    "refs_t": lambda c, k, r: f'<c r="{r}" t="inlineStr"><is><t>&amp;&lt;&gt;&quot;&apos;'
+    "&#10;&#x41;&#13;&#128;&#x1F600;</t></is></c>",
+    "ref_undefined": lambda c, k, r: f'<c r="{r}" t="inlineStr"><is><t>&nbsp;</t></is></c>',
+    "ref_invalid_char": lambda c, k, r: f'<c r="{r}" t="inlineStr"><is><t>&#1;</t></is></c>',
+    "untyped_is": lambda c, k, r: f'<c r="{r}"><is><t>5</t></is></c>',
+    "inline_v": lambda c, k, r: f'<c r="{r}" t="inlineStr"><v>x</v></c>',
+    "formula": lambda c, k, r: f'<c r="{r}"><f>1+1</f><v>2</v></c>',
+    "rich_text": lambda c, k, r: f'<c r="{r}" t="inlineStr"><is><r><t>a</t></r><r><t>b</t></r></is></c>',
+    "comment": lambda c, k, r: "<!-- note -->" + c,
+    "comment_in_v": lambda c, k, r: f'<c r="{r}"><v>1<!-- x --></v></c>',
+    "cdata": lambda c, k, r: f'<c r="{r}" t="inlineStr"><is><t><![CDATA[a<b&c]]></t></is></c>',
+    "crlf": lambda c, k, r: f'<c r="{r}" t="inlineStr"><is><t>a\r\nb\rc</t></is></c>',
+    "control_char": lambda c, k, r: f'<c r="{r}" t="inlineStr"><is><t>a\x01b</t></is></c>',
+    "invalid_utf8": lambda c, k, r: f'<c r="{r}" t="inlineStr"><is><t>a\udcffb</t></is></c>',
+}
+
+
+def _drop_a_cell(rng, row):
+    del row[rng.randrange(len(row))]
+
+
+#: row perturbations: (rng, list of cell xml) -> mutated in place, or the
+#: row xml that replaces the whole row
+_ROW_PERTURBATIONS = {
+    "ragged": _drop_a_cell,
+    "self_closed_row": lambda rng, row: "/>",
+    "empty_row": lambda rng, row: "></row>",
+    "swapped_cells": lambda rng, row: row.insert(0, row.pop(1)),
+}
+
+
+def _diff_sheet(rng, n_cols, n_rows, header, perturb):
+    kinds = [_DIFF_KINDS[i % len(_DIFF_KINDS)] for i in range(n_cols)]
+    rows = []
+    if header:
+        rows.append([f'<c r="{ooxml.col_letter(i)}1" t="inlineStr"><is><t>c{i}</t></is></c>'
+                     for i in range(n_cols)])
+    first = len(rows) + 1
+    for r in range(first, first + n_rows):
+        rows.append([_diff_cell(rng, k, f"{ooxml.col_letter(i)}{r}")
+                     for i, k in enumerate(kinds)])
+    tails = {}
+    if perturb in _CELL_PERTURBATIONS:
+        for _ in range(rng.randint(1, 3)):
+            r = rng.randrange(first - 1, len(rows))
+            i = rng.randrange(n_cols)
+            ref = f"{ooxml.col_letter(i)}{r + 1}"
+            rows[r][i] = _CELL_PERTURBATIONS[perturb](rows[r][i], kinds[i], ref)
+    elif perturb in _ROW_PERTURBATIONS:
+        r = rng.randrange(first - 1, len(rows))
+        tail = _ROW_PERTURBATIONS[perturb](rng, rows[r])
+        if tail:
+            tails[r] = tail
+    xml = "".join(
+        f'<row r="{r + 1}"' + (tails[r] if r in tails else ">" + "".join(cells) + "</row>")
+        for r, cells in enumerate(rows)
+    )
+    return xml, kinds
+
+
+@pytest.mark.parametrize("perturb", [None, *_CELL_PERTURBATIONS, *_ROW_PERTURBATIONS])
+def test_scanner_matches_row_reader_differential(tmp_path, monkeypatch, perturb):
+    """Seeded, Spark-free differential test of the scanner's index: sheets
+    of writer-shaped rows (nulls, escapes, every cell kind the writers
+    emit, columns past Z and past ZZ) and perturbed variants read to the
+    same rows through the scanner as through the row reader, with 4 MB
+    and with tiny chunks, under two schemas; a sheet the row reader cannot
+    parse makes the scanner raise too."""
+    import random
+    import xml.etree.ElementTree as ET
+
+    from excelstream_spark.sources.xlsx import batch_scan
+
+    layouts = [(8, 12, False), (30, 6, True)]
+    if perturb is None:
+        layouts.append((705, 3, True))  # ZZ -> AAA
+    if perturb is None:  # writer-shaped sheets never need the chunk parse
+        monkeypatch.setattr(
+            batch_scan.BatchSheetReader, "_rows_via_et",
+            lambda *a, **k: (_ for _ in ()).throw(AssertionError("ET fallback used")),
+        )
+    for seed, (n_cols, n_rows, header) in enumerate(layouts):
+        rng = random.Random(f"{perturb}-{seed}")
+        xml, kinds = _diff_sheet(rng, n_cols, n_rows, header, perturb)
+        p = str(tmp_path / f"d{seed}.xlsx")
+        _craft_xlsx(p, xml, sst_items=_DIFF_SST, date_xf=True)
+        for types in _DIFF_TYPES:
+            schema = T.StructType([
+                T.StructField(f"c{i}", types[k]) for i, k in enumerate(kinds)
+            ])
+            for chunk in (batch_scan._CHUNK_BYTES, 256):
+                monkeypatch.setattr(batch_scan, "_CHUNK_BYTES", chunk)
+                try:
+                    expected = _rows_via_row_reader(p, "S", schema, header)
+                except ET.ParseError:
+                    with pytest.raises((ET.ParseError, UnicodeDecodeError)):
+                        _rows_via_batch(p, "S", schema, header)
+                    continue
+                got = _rows_via_batch(p, "S", schema, header)
+                assert got == expected, (perturb, n_cols, chunk, types["long"])
+
+
+def test_scanner_fast_path_covers_sink_output(tmp_path, monkeypatch):
+    """A frame shaped like the benchmark's typed table, written by the
+    columnar sink (a header; 5% nulls in every column and one whole-null
+    row; 1% XML-special strings; long, double, string, date, timestamp and
+    bool columns), scans over several chunks with neither the chunk parse
+    nor the per-column scalar path, to the row reader's rows.  A silent
+    fallback would keep the answers but lose the scanner's speed."""
+    import glob
+    import random
+
+    import pyarrow as pa
+
+    from excelstream_spark.sources.xlsx import batch_scan
+    from excelstream_spark.sources.xlsx.datasource import XlsxArrowWriter, XlsxDataSource
+
+    rng = random.Random(8)
+    n = 3000
+    words = "spark batch part line column order value scan hash".split()
+
+    def column(make):
+        null = set(rng.sample(range(n), n // 20)) | {n // 2}  # a whole-null row
+        return [None if i in null else make(i) for i in range(n)]
+
+    def comment(i):
+        text = " ".join(rng.choice(words) for _ in range(4))
+        if rng.random() < 0.01:
+            text += " & <" + str(i) + "> \"q\" 'a'\tx\ny"
+        return text
+
+    schema = T.StructType([
+        T.StructField("id", T.LongType()), T.StructField("qty", T.LongType()),
+        T.StructField("price", T.DoubleType()), T.StructField("ratio", T.DoubleType()),
+        T.StructField("status", T.StringType()), T.StructField("comment", T.StringType()),
+        T.StructField("ship_date", T.DateType()),
+        T.StructField("updated_at", T.TimestampNTZType()),
+        T.StructField("is_open", T.BooleanType()),
+    ])
+    cols = [
+        column(lambda i: i),
+        column(lambda i: rng.randint(1, 50_000)),
+        column(lambda i: round(rng.uniform(1, 10_000), 2)),
+        column(lambda i: rng.gauss(0, 1)),
+        column(lambda i: rng.choice(["OPEN", "SHIPPED", "RETURNED"])),
+        column(comment),
+        column(lambda i: dt.date(1990, 1, 1) + dt.timedelta(days=rng.randrange(20_000))),
+        column(lambda i: dt.datetime(2001, 1, 1) + dt.timedelta(
+            microseconds=rng.randrange(10**15) if i % 7 else 0)),
+        column(lambda i: rng.random() < 0.5),
+    ]
+    pa_schema = batch_scan.to_arrow_schema(schema)
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, pa_schema)], schema=pa_schema
+    )
+    out = str(tmp_path / "typed")
+    XlsxArrowWriter(schema, {"path": out}, overwrite=True).write(
+        iter([batch.slice(i, 1000) for i in range(0, n, 1000)])
+    )
+    [part] = glob.glob(out + "/part-*.xlsx")
+    read_schema = XlsxDataSource({"path": out}).schema()
+    expected = _rows_via_row_reader(part, "Sheet1", read_schema, header=True)
+
+    def fallback(*a, **k):
+        raise AssertionError("scanner fallback used")
+
+    monkeypatch.setattr(batch_scan.BatchSheetReader, "_rows_via_et", fallback)
+    monkeypatch.setattr(batch_scan.BatchSheetReader, "_convert_scalar", fallback)
+    monkeypatch.setattr(batch_scan, "_CHUNK_BYTES", 64 << 10)
+    with WorkbookReader(part) as wb:
+        batches = list(
+            batch_scan.BatchSheetReader(wb, "Sheet1", read_schema, True).batches()
+        )
+    assert len(batches) > 3
+    assert _batch_rows(batches) == expected
+    assert len(expected) == n and expected[n // 2] == (None,) * len(schema.fields)
 
 
 def test_batch_reader_spark_surface(spark, tmp_path):
@@ -1343,7 +1666,7 @@ def _foreign_workbook(path: str) -> None:
 
 
 def test_foreign_writer_shapes(spark, tmp_path):
-    """Files from other xlsx producers read correctly: the regex fast
+    """Files from other xlsx producers read correctly: the scanner's fast
     path rejects unknown shapes and the exact fallback handles them."""
     p = str(tmp_path / "foreign.xlsx")
     _foreign_workbook(p)
