@@ -4,7 +4,7 @@ Reference parity: the reference has no text analysis (SURVEY.md §2.6);
 this implements the BASELINE.json extension surface.
 
 Everything here is a pure JVM-side column expression (codegen'd,
-vectorizable, no Python in the executor hot path).  Semantics are chosen
+no Python in the executor hot path).  Semantics are chosen
 to be ANSI-SQL-expressible so every derived metric can be oracle-checked
 against DuckDB with identical results (exact integer arithmetic; double
 division of the same integers).

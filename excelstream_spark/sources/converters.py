@@ -108,7 +108,6 @@ def write_sheets(
     path: str,
     header: bool = True,
     compression: int = 6,
-    max_rows_per_sheet: int | None = None,
 ) -> None:
     """Several DataFrames -> one multi-sheet workbook (driver-streamed)."""
     with WorkbookWriter(path, compression=compression) as wb:
@@ -116,11 +115,7 @@ def write_sheets(
             wb.add_sheet(name)
             if header:
                 wb.write_header(df.columns)
-            n = 0
             # rows, not one Arrow collect as sources/http.py does: there
             # is no row bound here, so a collect would be unbounded
             for row in df.toLocalIterator():
                 wb.write_row(list(row))
-                n += 1
-                if max_rows_per_sheet and n >= max_rows_per_sheet:
-                    break

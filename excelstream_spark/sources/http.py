@@ -7,21 +7,22 @@ is the ONE deliberately driver-side small-result path in this repo: the
 result of an analytical query that a human downloads is bounded by
 ``max_rows`` (guarded, not implicit).
 
-A DataFrame with a scalar schema (batch_write.vectorizable — the rule
-the xlsx sink uses) is fetched ONCE as Arrow, ``df.limit(max_rows +
+A DataFrame is fetched ONCE as Arrow, ``df.limit(max_rows +
 1).toArrow()``: one Spark job, no per-row pickling, and the driver never
 holds more than ``max_rows + 1`` rows.  More than ``max_rows`` rows raise
 ResultTooLargeError.  Each Arrow batch is then encoded columnar — xlsx
 through WorkbookWriter.write_arrow_batches (the sink's encoder), csv by
-building each column's text in bulk for the stdlib csv writer — giving
-the same bytes the row path gives for the same rows.
+building each column's text in bulk for the stdlib csv writer, with
+array/map/struct/binary columns as the text of their Row values
+(batch_write.row_text) — giving the same bytes the row path gives for
+the same rows.
 
 The row path (``toLocalIterator`` — one job per partition, rows streamed
-under the same guard, cells encoded one by one) serves everything else:
-array/map/struct/binary columns, any row source that is not a DataFrame
-(anything offering ``columns`` and ``toLocalIterator``), and a schema
-with a timestamp column when the driver process's time zone is not UTC
-(Rows carry that zone's wall clock; Arrow carries UTC instants).
+under the same guard, cells encoded one by one) serves only any row
+source that is not a DataFrame (anything offering ``columns`` and
+``toLocalIterator``), a frame with no columns, and a frame with a
+top-level timestamp column when the driver process's time zone is not
+UTC (Rows carry that zone's wall clock; Arrow carries UTC instants).
 
 For big exports the pattern is IMPLEMENTED below (``export_presigned`` /
 ``serve_dataframe``): write distributed to object storage and hand out
@@ -43,7 +44,7 @@ from pyspark.sql import types as T
 
 from excelstream_spark.sources.xlsx.batch_write import (
     decimal_text,
-    vectorizable,
+    row_text,
     wall_clock,
 )
 from excelstream_spark.sources.xlsx.writer_core import WorkbookWriter
@@ -81,14 +82,11 @@ def _iter_rows_bounded(df, max_rows: int):
 
 def _fetches_as_arrow(df) -> bool:
     """Whether ``df`` takes the Arrow path (module docstring)."""
-    if not isinstance(df, DataFrame):
-        return False
-    fields = df.schema.fields
-    if not fields or not vectorizable(df.schema):
+    if not isinstance(df, DataFrame) or not df.columns:
         return False
     local_is_utc = time.timezone == 0 and not time.daylight
     return local_is_utc or not any(
-        isinstance(f.dataType, T.TimestampType) for f in fields
+        isinstance(f.dataType, T.TimestampType) for f in df.schema.fields
     )
 
 
@@ -116,7 +114,7 @@ def _csv_text(col: pa.Array, dtype: T.DataType) -> list[str]:
         text = pc.fill_null(col.cast(pa.float64()), 0.0).to_numpy().astype("U32")
     elif isinstance(dtype, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
         text = pc.fill_null(col.cast(pa.int64()), 0).to_numpy().astype("U20")
-    else:  # string, date, decimal, timestamp: Arrow's own text
+    else:  # a text column: Arrow's own text, or the Row values' (row_text)
         if isinstance(dtype, T.DecimalType):
             col = decimal_text(col)
         elif isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
@@ -124,8 +122,10 @@ def _csv_text(col: pa.Array, dtype: T.DataType) -> list[str]:
             col = pc.replace_substring_regex(
                 wall_clock(col).cast(pa.string()), r"\.000000$", ""
             )
-        else:
+        elif isinstance(dtype, (T.StringType, T.DateType)):
             col = col.cast(pa.string())
+        else:
+            col = row_text(col, dtype)
         return pc.fill_null(col, "").to_numpy(zero_copy_only=False).tolist()
     return np.where(col.is_null().to_numpy(zero_copy_only=False), "", text).tolist()
 

@@ -21,14 +21,13 @@ column only — same output, still one join.  Combined with
 DataSourceArrowWriter feeding the sink Arrow batches (no per-row pickle
 across the JVM boundary), this is the write-side mirror of batch_scan.py.
 
-Semantics are exactly write_row's, by construction and by byte-equality
-test (tests/test_xlsx.py): same cell XML for every scalar type, same
-``r=`` refs (so batch_scan's rectangular fast read path applies), same
-null cells, same escaping via the same ooxml.esc.
-
-Non-scalar columns (array/map/struct/binary) and shared-strings mode use
-the row writer instead — selected at plan time in datasource.writer(),
-and per request in sources/http.py.
+Semantics are exactly write_row's over the Rows pyspark makes of the
+same batch, by construction and by byte-equality test (tests/
+test_xlsx.py): same cell XML for every type (array/map/struct/binary
+and the like as their Row values' text, ``row_text``), same ``r=``
+refs, same null cells, same escaping via the same ooxml.esc, and in
+shared-strings mode the same table.  Every sink and every DataFrame
+export encodes Arrow data through this module.
 """
 
 from __future__ import annotations
@@ -41,30 +40,17 @@ import pyarrow as pa
 import pyarrow.compute as pc
 
 from pyspark.sql import types as T
+from pyspark.sql.conversion import ArrowTableToRowsConversion
 
 from excelstream_spark.sources.xlsx import ooxml
 from excelstream_spark.sources.xlsx.dates import EPOCH_1970_SERIAL, US_PER_DAY
 
-#: Spark types the vectorized writer handles; anything else -> row writer
-VECTOR_TYPES = (
-    T.StringType,
-    T.BooleanType,
-    T.ByteType,
-    T.ShortType,
-    T.IntegerType,
-    T.LongType,
-    T.FloatType,
-    T.DoubleType,
-    T.DecimalType,
-    T.DateType,
-    T.TimestampType,
-    T.TimestampNTZType,
+#: Spark types write_row gives a cell kind of their own; a decimal or any
+#: other column is written as string cells of its text (``_as_cells``)
+_CELL_TYPES = (
+    T.StringType, T.BooleanType, T.ByteType, T.ShortType, T.IntegerType, T.LongType,
+    T.FloatType, T.DoubleType, T.DateType, T.TimestampType, T.TimestampNTZType,
 )
-
-
-def vectorizable(schema: T.StructType) -> bool:
-    return all(isinstance(f.dataType, VECTOR_TYPES) for f in schema.fields)
-
 
 #: strings needing per-element care: XML entities, control chars (incl.
 #: bare \r, escaped numerically), or a leading '=' (formula passthrough)
@@ -116,6 +102,42 @@ def decimal_text(col: pa.Array) -> pa.Array:
     for i in np.flatnonzero(sci):
         out[i] = _row_decimal_str(col[i].as_py())
     return pa.array(out, pa.string())
+
+
+def row_text(col: pa.Array, dtype: T.DataType) -> pa.Array:
+    """Column of any other type (array, map, struct, binary, void, UDT,
+    variant) -> ``str()`` of the value pyspark's Arrow-to-Row conversion
+    gives each cell (binary as bytes, its default); null stays null."""
+    one = T.StructType([T.StructField("c", dtype)])
+    rows = ArrowTableToRowsConversion.convert(
+        pa.table({"c": col}), one, return_as_tuples=True
+    )
+    return pa.array([None if v is None else str(v) for (v,) in rows], pa.string())
+
+
+def _as_cells(col: pa.Array, dtype: T.DataType) -> tuple[pa.Array, T.DataType]:
+    """The column as write_row types its values: a decimal or any type
+    without a cell kind of its own becomes a string column of its text."""
+    if isinstance(dtype, _CELL_TYPES):
+        return col, dtype
+    if isinstance(dtype, T.DecimalType):
+        return decimal_text(col), T.StringType()
+    return row_text(col, dtype), T.StringType()
+
+
+def _shared_indices(sst, cols: list[tuple[pa.Array, T.DataType]], n: int) -> list:
+    """Per string column, each cell's shared-string index (None for a
+    null, a formula or a string past the cap); ``index_for`` is called row
+    by row, left to right, as write_row calls it."""
+    texts = [c.to_pylist() if isinstance(t, T.StringType) else None for c, t in cols]
+    idx = [None if t is None else [None] * n for t in texts]
+    strings = [(idx[j], t) for j, t in enumerate(texts) if t is not None]
+    for r in range(n):
+        for out, t in strings:
+            v = t[r]
+            if v is not None and not v.startswith("="):
+                out[r] = sst.index_for(v)
+    return idx
 
 
 def wall_clock(col: pa.Array) -> pa.Array:
@@ -196,6 +218,7 @@ def _append_column(
     dtype: T.DataType,
     letter: str,
     style: int | None,
+    shared: list | None = None,
 ) -> None:
     s_attr = f' s="{style}"' if style else ""
     nulls = _null_mask(col)
@@ -212,9 +235,6 @@ def _append_column(
         # gets from Spark's Row conversion, so repr digits agree
         vals = pc.fill_null(col.cast(pa.float64()), 0.0).to_numpy()
         out.cell(letter, f'"{s_attr}><v>', vals.astype("U32").tolist(), nulls, "</v></c>")
-    elif isinstance(dtype, T.DecimalType):
-        # the row writer stringifies Decimal and writes an inline string
-        _append_column(out, decimal_text(col), T.StringType(), letter, style)
     elif isinstance(dtype, T.DateType):
         days = pc.fill_null(col.cast(pa.int32()), 0).to_numpy().astype(np.int64)
         serial = days + EPOCH_1970_SERIAL
@@ -239,7 +259,14 @@ def _append_column(
                 f'" s="{ooxml.STYLE_DATETIME}"><v>',
             ).tolist()
         out.cell(letter, mid, body, nulls, "</v></c>")
-    elif isinstance(dtype, T.StringType):
+    elif shared is not None:  # string cells, shared-strings mode
+        out.var([
+            f'<c r="{letter}{r}"/>' if v is None
+            else f'<c r="{letter}{r}"{s_attr} t="s"><v>{i}</v></c>' if i is not None
+            else _special_str_frag(f"{letter}{r}", s_attr, v)
+            for r, v, i in zip(out.rownum, col.to_pylist(), shared)
+        ])
+    else:  # string cells (_as_cells)
         special = pc.match_substring_regex(
             pc.fill_null(col, ""), _SPECIAL_RE
         ).to_numpy(zero_copy_only=False)
@@ -262,8 +289,6 @@ def _append_column(
             )
         ]
         out.var(frags)
-    else:  # pragma: no cover — writer() routes these to the row path
-        raise TypeError(f"batch writer cannot serialize {dtype}")
 
 
 def batch_to_rows_xml(
@@ -272,9 +297,12 @@ def batch_to_rows_xml(
     start_row: int,
     col_styles: list[int | None] | None = None,
     row_height: float | None = None,
+    sst=None,
 ) -> bytes:
     """Serialize a RecordBatch to `<row>...</row>` XML, first row numbered
-    ``start_row`` (1-based).  Byte-equivalent to write_row() per row."""
+    ``start_row`` (1-based).  Byte-equivalent to write_row() per row; with
+    ``sst`` (the writer's SharedStrings) string cells are table
+    references, as write_row writes them in shared-strings mode."""
     n = batch.num_rows
     if n == 0:
         return b""
@@ -286,10 +314,12 @@ def batch_to_rows_xml(
         out.const(f'" ht="{row_height:g}" customHeight="1">')
     else:
         out.const('">')
-    for ci, field in enumerate(schema.fields):
+    cols = [_as_cells(batch.column(ci), f.dataType) for ci, f in enumerate(schema.fields)]
+    shared = _shared_indices(sst, cols, n) if sst is not None else [None] * len(cols)
+    for ci, ((col, dtype), idx) in enumerate(zip(cols, shared)):
         style = None
         if col_styles is not None and ci < len(col_styles):
             style = col_styles[ci]
-        _append_column(out, batch.column(ci), field.dataType, ooxml.col_letter(ci), style)
+        _append_column(out, col, dtype, ooxml.col_letter(ci), style, idx)
     out.const("</row>")
     return out.render(n)

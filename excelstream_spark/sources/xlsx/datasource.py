@@ -10,6 +10,8 @@ Read path (reference S1-S5 semantics, Spark-shaped):
 
 Write path (reference K1-K8): each partition streams one part-workbook
 (``part-NNNNN.xlsx``) with constant memory; commit() writes _SUCCESS.
+The batch and the stream sink are Arrow writers: every column type and
+every option goes through the one columnar encoder (batch_write.py).
 ``singleFile=true`` + a single partition (coalesce(1)) emits exactly the
 target path as one workbook — the Excel-openable mode.
 
@@ -43,9 +45,9 @@ Spark's PythonMicroBatchStream executes availableNow as a single batch
 per run — incremental pickup across restarts is exact either way.
 
 Options (write): sheetName, header (default true), compression (0-9,
-  default 6), useSharedStrings (takes the row writer, as a non-scalar
-  schema does; every other write is columnar), sheetProtectPassword,
-  singleFile,
+  default 6), useSharedStrings (string cells reference a deduplicated
+  table, up to 100,000 distinct strings; later ones are written inline),
+  sheetProtectPassword, singleFile,
   maxRowsPerSheet (default 1,048,576 -> auto-split),
   columnWidths ("20,12,8" positional, blank to skip a column),
   rowHeight (points) — widths/heights actually emitted, unlike the
@@ -71,8 +73,6 @@ from pyspark.sql.datasource import (
     DataSourceReader,
     DataSourceStreamArrowWriter,
     DataSourceStreamReader,
-    DataSourceStreamWriter,
-    DataSourceWriter,
     InputPartition,
     WriterCommitMessage,
 )
@@ -259,23 +259,11 @@ class XlsxDataSource(DataSource):
     def streamReader(self, schema: T.StructType) -> "XlsxStreamReader":
         return XlsxStreamReader(schema, self.options)
 
-    def _columnar_sink(self, schema: T.StructType) -> bool:
-        """Columnar write path (batch_write.py: Arrow batches in, numpy-
-        vectorized XML out) for every scalar schema; the row sinks take
-        non-scalar columns and shared-strings mode (stateful dedup)."""
-        from excelstream_spark.sources.xlsx.batch_write import vectorizable
-
-        return vectorizable(schema) and not _truthy(
-            self.options.get("usesharedstrings"), False
-        )
-
     def streamWriter(self, schema: T.StructType, overwrite: bool) -> "XlsxStreamWriter":
-        cls = XlsxStreamArrowWriter if self._columnar_sink(schema) else XlsxStreamWriter
-        return cls(schema, self.options, truncate=overwrite)
+        return XlsxStreamWriter(schema, self.options, truncate=overwrite)
 
     def writer(self, schema: T.StructType, overwrite: bool) -> "XlsxWriter":
-        cls = XlsxArrowWriter if self._columnar_sink(schema) else XlsxWriter
-        return cls(schema, self.options, overwrite)
+        return XlsxWriter(schema, self.options, overwrite)
 
 
 class XlsxReader(DataSourceReader):
@@ -479,9 +467,8 @@ class XlsxCommitMessage(WriterCommitMessage):
 
 
 class _XlsxWriteOptions:
-    """Write-option parsing + workbook scaffolding shared by every xlsx
-    sink (batch row/Arrow, streaming row/Arrow) so all of them honor the
-    same documented option set."""
+    """Write-option parsing + workbook encoding shared by the batch and
+    the streaming sink, so both honor the same documented option set."""
 
     def _init_write_options(self, schema: T.StructType, options) -> None:
         self.schema_ = schema
@@ -525,8 +512,10 @@ class _XlsxWriteOptions:
         else:
             self.col_styles = None
 
-    def _open_workbook(self, target: str) -> WorkbookWriter:
-        wb = WorkbookWriter(
+    def _write_workbook(self, target: str, batches) -> int:
+        """One workbook at ``target`` from Spark's Arrow batches, through
+        the columnar encoder (batch_write.py); returns the rows written."""
+        with WorkbookWriter(
             target,
             compression=self.compression,
             use_shared_strings=self.use_sst,
@@ -534,21 +523,19 @@ class _XlsxWriteOptions:
             col_widths=self.col_widths,
             row_height=self.row_height,
             max_rows_per_sheet=self.max_rows_per_sheet,
-        )
-        wb.add_sheet(self.sheet_name)
-        if self.header:
-            wb.write_header([f.name for f in self.schema_.fields])
-        return wb
-
-    def _write_rows(self, wb: WorkbookWriter, iterator) -> int:
-        n = 0
-        for row in iterator:
-            wb.write_row(list(row), styles=self.col_styles)
-            n += 1
-        return n
+        ) as wb:
+            wb.add_sheet(self.sheet_name)
+            if self.header:
+                wb.write_header([f.name for f in self.schema_.fields])
+            return wb.write_arrow_batches(batches, self.schema_, self.col_styles)
 
 
-class XlsxWriter(_XlsxWriteOptions, DataSourceWriter):
+class XlsxWriter(_XlsxWriteOptions, DataSourceArrowWriter):
+    """Batch sink: Spark ships Arrow RecordBatches to the worker (no
+    per-row pickling) and each task streams them into one part-workbook;
+    maxRowsPerSheet auto-splits by slicing batches at the sheet
+    boundary."""
+
     def __init__(self, schema: T.StructType, options, overwrite: bool):
         self._init_write_options(schema, options)
         self.single_file = _truthy(options.get("singlefile"), False)
@@ -584,8 +571,7 @@ class XlsxWriter(_XlsxWriteOptions, DataSourceWriter):
 
     def write(self, iterator) -> XlsxCommitMessage:
         target = self._target_path()
-        with self._open_workbook(target) as wb:
-            n = self._write_rows(wb, iterator)
+        n = self._write_workbook(target, iterator)
         return XlsxCommitMessage(file=target, rows=n)
 
     def commit(self, messages) -> None:
@@ -605,7 +591,7 @@ class XlsxWriter(_XlsxWriteOptions, DataSourceWriter):
                 os.remove(m.file)
 
 
-class XlsxStreamWriter(_XlsxWriteOptions, DataSourceStreamWriter):
+class XlsxStreamWriter(_XlsxWriteOptions, DataSourceStreamArrowWriter):
     """Micro-batch xlsx sink: ``writeStream.format("xlsx")``.
 
     Each task streams its partition into a DOT-PREFIXED temp workbook
@@ -648,8 +634,7 @@ class XlsxStreamWriter(_XlsxWriteOptions, DataSourceStreamWriter):
 
     def write(self, iterator) -> XlsxCommitMessage:
         tmp, pid = self._tmp_target()
-        with self._open_workbook(tmp) as wb:
-            n = self._write_rows(wb, iterator)
+        n = self._write_workbook(tmp, iterator)
         if n == 0:  # empty partition: no part file
             os.remove(tmp)
             return XlsxCommitMessage(file="", rows=0, pid=pid)
@@ -686,36 +671,6 @@ class XlsxStreamWriter(_XlsxWriteOptions, DataSourceStreamWriter):
                 continue
             if os.path.exists(m.file):
                 os.remove(m.file)
-
-
-class XlsxStreamArrowWriter(XlsxStreamWriter, DataSourceStreamArrowWriter):
-    """Columnar micro-batch sink: Arrow RecordBatches in, batch_write.py
-    serialization out (split-aware, full option set) — same
-    temp-then-deterministic-rename commit protocol as the row stream
-    sink."""
-
-    def write(self, iterator) -> XlsxCommitMessage:
-        tmp, pid = self._tmp_target()
-        with self._open_workbook(tmp) as wb:
-            n = wb.write_arrow_batches(iterator, self.schema_, self.col_styles)
-        if n == 0:
-            os.remove(tmp)
-            return XlsxCommitMessage(file="", rows=0, pid=pid)
-        return XlsxCommitMessage(file=tmp, rows=n, pid=pid)
-
-
-class XlsxArrowWriter(XlsxWriter, DataSourceArrowWriter):
-    """Columnar sink: Spark ships Arrow RecordBatches to the worker (no
-    per-row pickling) and batch_write.py serializes each batch with numpy
-    — same workbook bytes as the row path for every scalar schema.
-    Auto-split at maxRowsPerSheet is preserved by slicing batches at the
-    sheet boundary."""
-
-    def write(self, iterator) -> XlsxCommitMessage:
-        target = self._target_path()
-        with self._open_workbook(target) as wb:
-            n = wb.write_arrow_batches(iterator, self.schema_, self.col_styles)
-        return XlsxCommitMessage(file=target, rows=n)
 
 
 def register_xlsx(spark) -> None:

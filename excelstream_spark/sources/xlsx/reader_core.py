@@ -268,6 +268,8 @@ class WorkbookReader:
 def parse_row(elem, cell_value, col_cache: dict[str, int]) -> list:
     """One parsed ``<row>`` element -> its typed cell values, gaps filled
     with None (reference parse_row gap-filling, streaming_reader.rs:630-633).
+    Each cell lands at its own column index, whatever the cell order; a
+    later cell with the same reference replaces an earlier one.
 
     Used by ``iter_rows`` and by the batch scanner's per-chunk fallback.
     ``cell_value`` is ``WorkbookReader.cell_value``; ``col_cache`` maps
@@ -297,11 +299,12 @@ def parse_row(elem, cell_value, col_cache: dict[str, int]) -> list:
                 is_text_run = True
                 if child.text is not None:
                     value_parts.append(child.text)
-        while len(row) < cell_col:
-            row.append(None)
-        row.append(
-            cell_value("".join(value_parts), c.get("t"), c.get("s"), is_text_run)
-        )
+        value = cell_value("".join(value_parts), c.get("t"), c.get("s"), is_text_run)
+        if cell_col < len(row):
+            row[cell_col] = value
+        else:
+            row.extend([None] * (cell_col - len(row)))
+            row.append(value)
     return row
 
 

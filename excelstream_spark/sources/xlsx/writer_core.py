@@ -18,7 +18,9 @@ zero_temp_workbook.rs:77-130) in idiomatic Python.  Capabilities:
 
 This class is engine-agnostic on purpose: the Spark sink writes one part-
 workbook per partition through it, and the driver-side HTTP helper writes
-into an in-memory buffer through the same code.
+into an in-memory buffer through the same code.  Arrow data (every sink
+and every DataFrame export) enters through ``write_arrow_batches``;
+``write_row`` serves header rows and row sources.
 """
 
 from __future__ import annotations
@@ -91,7 +93,6 @@ class WorkbookWriter:
         compression: int = 6,
         use_shared_strings: bool = False,
         protect_password: str | None = None,
-        auto_split: bool = True,
         col_widths: list[float] | None = None,
         row_height: float | None = None,
         max_rows_per_sheet: int = EXCEL_MAX_ROWS,
@@ -106,7 +107,6 @@ class WorkbookWriter:
         )
         self._sst = SharedStrings() if use_shared_strings else None
         self._protect = protect_password
-        self._auto_split = auto_split
         max_rows_per_sheet = int(max_rows_per_sheet)
         if not 1 <= max_rows_per_sheet <= EXCEL_MAX_ROWS:
             raise ValueError(
@@ -212,13 +212,8 @@ class WorkbookWriter:
         self._row_index += 1
 
     def advance_sheet_for_split(self) -> None:
-        """Roll to the next auto-split sheet (or raise if auto_split off),
-        re-emitting the header row so each sheet stays self-describing."""
-        if not self._auto_split:
-            raise ValueError(
-                f"sheet full ({self._max_rows} rows); enable auto_split "
-                "or add_sheet() manually"
-            )
+        """Roll to the next auto-split sheet, re-emitting the header row so
+        each sheet stays self-describing."""
         self.add_sheet()
         if self._split_header is not None:
             self.write_row(list(self._split_header), styles=ooxml.STYLE_HEADER)
@@ -257,11 +252,12 @@ class WorkbookWriter:
         self._row_index += n_rows
 
     def write_arrow_batches(self, batches, schema, col_styles=None) -> int:
-        """Append Arrow RecordBatches of a scalar ``schema`` (see
-        batch_write.vectorizable) through batch_write.batch_to_rows_xml,
-        slicing each batch at the auto-split sheet boundary — the same
-        rows, sheets and bytes as write_row per row.  Returns the number
-        of rows written."""
+        """Append Arrow RecordBatches of any ``schema`` through
+        batch_write.batch_to_rows_xml, slicing each batch at the auto-split
+        sheet boundary and sharing this writer's string table — the same
+        rows, sheets, shared strings and bytes as write_row per row of the
+        Rows pyspark converts the batches to.  Returns the number of rows
+        written."""
         from excelstream_spark.sources.xlsx.batch_write import batch_to_rows_xml
 
         n = 0
@@ -277,6 +273,7 @@ class WorkbookWriter:
                     self._row_index,
                     col_styles=col_styles,
                     row_height=self._row_height,
+                    sst=self._sst,
                 )
                 self.write_rows_xml(xml, take)
                 offset += take

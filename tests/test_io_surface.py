@@ -188,13 +188,14 @@ def test_http_arrow_guard_serves_exactly_max_rows(spark):
     assert http.dataframe_to_xlsx_bytes(empty) == http.dataframe_to_xlsx_bytes(_RowSource(empty))
 
 
-def test_http_non_scalar_frame_stays_on_row_path(spark):
-    """Array and struct columns, and a frame with no columns, are not
-    Arrow-encoded: the export is the row path's, cell text included."""
+def test_http_non_scalar_frame_matches_row_path(spark):
+    """Array and struct columns are Arrow-encoded as the text of their Row
+    values, so the export is the row path's, cell text included; a frame
+    with no columns takes the row path."""
     df = spark.sql(
         "SELECT 1 AS id, array(1, 2) AS xs, named_struct('a', 1, 'b', 'x') AS st"
     )
-    assert not http._fetches_as_arrow(df)
+    assert http._fetches_as_arrow(df)
     body = http.dataframe_to_csv_bytes(df)
     assert body == b'id,xs,st\r\n1,"[1, 2]","Row(a=1, b=\'x\')"\r\n'
     assert http.dataframe_to_xlsx_bytes(df) == http.dataframe_to_xlsx_bytes(_RowSource(df))

@@ -311,7 +311,7 @@ def test_xlsx_stream_sink_roundtrip(spark, tmp_path):
 
     spark.createDataFrame([(3, "c")], "id long, v string") \
         .coalesce(1).write.mode("append").parquet(src)
-    run_once(shared_strings="true")  # second batch through the row path
+    run_once(shared_strings="true")  # second batch with a shared-string table
     back = spark.read.format("xlsx").load(out)
     assert sorted(tuple(r) for r in back.collect()) == [(1, "a"), (2, "b"), (3, "c")]
     run_once()  # no new data: nothing added
@@ -323,6 +323,7 @@ def test_xlsx_stream_sink_roundtrip(spark, tmp_path):
     assert not g.glob(out + "/.tmp-*")
 
     # replayed commit (same batchId) overwrites, never duplicates
+    import pyarrow as pa
     from pyspark.sql import types as T
 
     from excelstream_spark.sources.xlsx.datasource import (
@@ -334,9 +335,13 @@ def test_xlsx_stream_sink_roundtrip(spark, tmp_path):
         T.StructType([T.StructField("id", T.LongType())]), {"path": out}
     )
     before = sorted(g.glob(out + "/*.xlsx"))
-    msg = w.write(iter([(99,)]))
+
+    def batches():
+        return iter([pa.record_batch([pa.array([99], pa.int64())], names=["id"])])
+
+    msg = w.write(batches())
     w.commit([msg], batchId=0)  # batch 0 already exists -> replace
-    msg2 = w.write(iter([(99,)]))
+    msg2 = w.write(batches())
     w.commit([msg2], batchId=0)
     assert sorted(g.glob(out + "/*.xlsx")) == before
 

@@ -1016,6 +1016,12 @@ def test_scanner_matches_row_reader_differential(tmp_path, monkeypatch, perturb)
                     continue
                 got = _rows_via_batch(p, "S", schema, header)
                 assert got == expected, (perturb, n_cols, chunk, types["long"])
+    if perturb == "swapped_cells":  # each cell lands at its own column
+        p = str(tmp_path / "swapped.xlsx")
+        _craft_xlsx(p, '<row r="1"><c r="B1"><v>2</v></c><c r="A1"><v>1</v></c></row>')
+        schema = T.StructType([T.StructField(c, T.LongType()) for c in "ab"])
+        assert _rows_via_row_reader(p, "S", schema, False) == [(1, 2)]
+        assert _rows_via_batch(p, "S", schema, False) == [(1, 2)]
 
 
 def test_scanner_fast_path_covers_sink_output(tmp_path, monkeypatch):
@@ -1031,7 +1037,7 @@ def test_scanner_fast_path_covers_sink_output(tmp_path, monkeypatch):
     import pyarrow as pa
 
     from excelstream_spark.sources.xlsx import batch_scan
-    from excelstream_spark.sources.xlsx.datasource import XlsxArrowWriter, XlsxDataSource
+    from excelstream_spark.sources.xlsx.datasource import XlsxDataSource, XlsxWriter
 
     rng = random.Random(8)
     n = 3000
@@ -1072,7 +1078,7 @@ def test_scanner_fast_path_covers_sink_output(tmp_path, monkeypatch):
         [pa.array(c, type=f.type) for c, f in zip(cols, pa_schema)], schema=pa_schema
     )
     out = str(tmp_path / "typed")
-    XlsxArrowWriter(schema, {"path": out}, overwrite=True).write(
+    XlsxWriter(schema, {"path": out}, overwrite=True).write(
         iter([batch.slice(i, 1000) for i in range(0, n, 1000)])
     )
     [part] = glob.glob(out + "/part-*.xlsx")
@@ -1374,8 +1380,9 @@ def test_batch_writer_float_repr_parity():
 
 
 def test_arrow_writer_spark_roundtrip_matches_row_writer(spark, tmp_path):
-    """format('xlsx') default (Arrow batch write) and useSharedStrings
-    (row write) produce equal data; read-back equals the source."""
+    """format('xlsx') default (inline strings) and useSharedStrings
+    (shared-string table) produce equal data; read-back equals the
+    source."""
     df = spark.createDataFrame(
         [(i, f"name{i}" + ("&<>" if i % 7 == 0 else ""),
           i * 1.25, i % 2 == 0,
@@ -1416,9 +1423,9 @@ def test_arrow_writer_autosplit_at_max_rows(spark, tmp_path):
 
 
 def test_arrow_writer_column_styles_and_height(spark, tmp_path):
-    """columnStyles / rowHeight options render on both write paths
-    exactly as WorkbookWriter.write_row renders them (the Arrow sink by
-    default, the row sink with useSharedStrings)."""
+    """columnStyles / rowHeight options render exactly as
+    WorkbookWriter.write_row renders them, with inline strings and with
+    useSharedStrings."""
     import glob as g
     import io
 
@@ -1440,6 +1447,51 @@ def test_arrow_writer_column_styles_and_height(spark, tmp_path):
         xa = zipfile.ZipFile(f).read("xl/worksheets/sheet1.xml")
         assert xa == zipfile.ZipFile(ref).read("xl/worksheets/sheet1.xml"), sst
         assert b'ht="18"' in xa and b's="' in xa
+
+
+def test_sink_writes_every_column_type_as_row_text(spark, tmp_path):
+    """Array, map, struct (holding a timestamp), binary, void and
+    nested-null columns go through the one Arrow sink, with inline and with
+    shared strings: the sheet is exactly WorkbookWriter.write_row over the
+    Rows pyspark converts the same Arrow data to (what a row sink
+    receives)."""
+    import glob as g
+    import io
+
+    from pyspark.sql import Row
+    from pyspark.sql.conversion import ArrowTableToRowsConversion
+
+    df = spark.createDataFrame(
+        [
+            (1, [1, 2], {"k": 1.5}, Row(a=1, b="x"),
+             Row(t=dt.datetime(2024, 1, 1, 10, 0), s="=y"), b"ab", None, [Row(q=None)]),
+            (2, None, None, None, None, None, None, None),
+            (3, [3, None], {"k": None}, Row(a=None, b="<&>"),
+             Row(t=None, s=None), b"", None, []),
+        ],
+        "id int, xs array<int>, m map<string,double>, st struct<a:int,b:string>, "
+        "sts struct<t:timestamp,s:string>, bin binary, v void, "
+        "nested array<struct<q:string>>",
+    ).coalesce(1)
+    rows = ArrowTableToRowsConversion.convert(df.toArrow(), df.schema)
+    for sst in (False, True):
+        out = str(tmp_path / f"sst_{sst}")
+        df.write.format("xlsx").mode("overwrite").option("useSharedStrings", sst).save(out)
+        [f] = g.glob(out + "/part-*.xlsx")
+        ref = io.BytesIO()
+        with WorkbookWriter(ref, use_shared_strings=sst) as wb:
+            wb.add_sheet("Sheet1")
+            wb.write_header(df.columns)
+            for r in rows:
+                wb.write_row(list(r))
+        got, want = zipfile.ZipFile(f), zipfile.ZipFile(ref)
+        for member in ("xl/worksheets/sheet1.xml", "xl/sharedStrings.xml"):
+            assert got.read(member) == want.read(member), (sst, member)
+        if not sst:
+            xml = got.read("xl/worksheets/sheet1.xml").decode()
+            assert '<c r="B2" t="inlineStr"><is><t xml:space="preserve">[1, 2]</t>' in xml
+            assert "Row(a=1, b=&apos;x&apos;)</t>" in xml
+            assert '<c r="G2"/>' in xml and '<c r="B3"/>' in xml
 
 
 # --- columns pruning + limitRows early-stop -------------------------------
@@ -1499,10 +1551,13 @@ def test_limit_rows_early_stop(spark, tmp_path):
 
 
 def test_property_batch_writer_equals_row_writer():
-    """Property-based byte equality: for ANY column of each vectorized
-    type (with nulls, specials, extremes), batch_to_rows_xml emits
-    exactly the row writer's worksheet XML."""
+    """Property-based byte equality: for ANY column of each kind (with
+    nulls, specials, extremes), batch_to_rows_xml emits exactly the row
+    writer's worksheet XML, and in shared-strings mode (with a small
+    uniqueness cap, so strings overflow to inline) exactly its
+    shared-string table, when the row writer gets the Arrow values."""
     import io
+    from decimal import Decimal
 
     import pyarrow as pa
     from hypothesis import given, settings, strategies as st
@@ -1526,6 +1581,9 @@ def test_property_batch_writer_equals_row_writer():
         "ts": (T.TimestampNTZType(), pa.timestamp("us"),
                st.datetimes(min_value=dt.datetime(1890, 1, 1),
                             max_value=dt.datetime(2300, 1, 1))),
+        "decimal": (T.DecimalType(38, 18), pa.decimal128(38, 18),
+                    st.decimals(min_value=Decimal(-10**19), max_value=Decimal(10**19),
+                                places=18, allow_nan=False, allow_infinity=False)),
     }
 
     @settings(max_examples=40, deadline=None)
@@ -1536,6 +1594,8 @@ def test_property_batch_writer_equals_row_writer():
                      min_size=1, max_size=4)
         )
         n = data.draw(st.integers(min_value=1, max_value=8))
+        sst = data.draw(st.booleans())
+        cap = data.draw(st.integers(min_value=1, max_value=4))
         cols, fields, pa_fields = [], [], []
         for j, k in enumerate(kinds):
             spark_t, pa_t, strat = col_strategies[k]
@@ -1549,28 +1609,33 @@ def test_property_batch_writer_equals_row_writer():
             [pa.array(c, type=f.type) for c, f in zip(cols, pa_fields)],
             schema=pa.schema(pa_fields),
         )
-        rows = [list(t) for t in zip(*cols)]
+        rows = [list(t) for t in zip(*(c.to_pylist() for c in batch.columns))]
         b1, b2 = io.BytesIO(), io.BytesIO()
-        with WorkbookWriter(b1) as wb:
+        with WorkbookWriter(b1, use_shared_strings=sst) as wb:
+            if sst:
+                wb._sst.cap = cap
             wb.add_sheet("S")
             for r in rows:
                 wb.write_row(r)
-        with WorkbookWriter(b2) as wb:
+        with WorkbookWriter(b2, use_shared_strings=sst) as wb:
+            if sst:
+                wb._sst.cap = cap
             wb.add_sheet("S")
             wb.write_rows_xml(
-                batch_to_rows_xml(batch, schema, wb.next_row_index), n
+                batch_to_rows_xml(batch, schema, wb.next_row_index, sst=wb._sst), n
             )
-        x1 = zipfile.ZipFile(b1).read("xl/worksheets/sheet1.xml")
-        x2 = zipfile.ZipFile(b2).read("xl/worksheets/sheet1.xml")
-        assert x1 == x2
+        for member in ("xl/worksheets/sheet1.xml", "xl/sharedStrings.xml"):
+            x1 = zipfile.ZipFile(b1).read(member)
+            x2 = zipfile.ZipFile(b2).read(member)
+            assert x1 == x2, member
 
     run()
 
 
 def test_header_consumes_sheet_raises_not_spins(spark, tmp_path):
     """maxRowsPerSheet=1 with a header cannot make progress after a
-    split; both write paths (Arrow by default, rows with
-    useSharedStrings) must raise, not loop forever."""
+    split; with inline strings and with useSharedStrings the sink must
+    raise, not loop forever."""
     df = spark.range(5).select(F.col("id"))
     for sst in ("false", "true"):
         out = str(tmp_path / f"tiny_{sst}")
