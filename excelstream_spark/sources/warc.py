@@ -44,16 +44,22 @@ task's file, so a failed job never leaves half-archives visible.
 
 The source also implements a STREAM reader: ``spark.readStream
 .format("warc")`` watches a directory and processes each new archive
-exactly once (the incremental-crawl ingest form; offsets follow the
-xlsx stream source's exact-set / maxFileAgeSec-compacted convention —
-see WarcStreamReader).
+exactly once (the incremental-crawl ingest form), yielding the batch
+reader's Arrow batches.  Path listing, stream offsets, the part-file
+protocol and registration are the file-source core's (files.py),
+shared with the xlsx source.
 
-Options (read):  ``batchRows`` (Arrow batch size, default 1024);
-  stream adds ``maxFileAgeSec`` (compacted offsets).
-Options (write): ``compression`` (``gzip`` default | ``none``),
-  ``payloadCol`` (default ``payload``), ``warcType`` (default
-  ``resource`` — the spec's type for raw content not wrapped in HTTP
-  headers).
+Options (read):  ``path`` (a file, directory or glob: a directory lists
+  ``*.warc`` / ``*.warc.gz`` recursively, a glob's file matches skip
+  ``_``/``.`` names such as ``_SUCCESS``; ``load([a, b])`` reads every
+  path, which Spark passes as ``paths``), ``batchRows`` (Arrow batch
+  size, default 1024); stream adds ``maxFileAgeSec`` (compacted
+  offsets).
+Options (write): ``path`` (the output directory), ``compression``
+  (``gzip`` default | ``none``), ``payloadCol`` (default ``payload``),
+  ``warcType`` (default ``resource`` — the spec's type for raw content
+  not wrapped in HTTP headers).
+Any other option key is ignored with a UserWarning naming it.
 
 100 TB shape: both directions are embarrassingly parallel over files /
 partitions with zero shuffle; the reader's per-record work is one
@@ -63,20 +69,21 @@ JVM once, Arrow-batched.
 
 from __future__ import annotations
 
-import glob
 import gzip
 import io
 import os
-import uuid
 
 from pyspark.sql import types as T
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    DataSourceStreamReader,
-    DataSourceWriter,
-    InputPartition,
-    WriterCommitMessage,
+from pyspark.sql.datasource import DataSourceReader, DataSourceWriter, InputPartition
+
+from excelstream_spark.sources.files import (
+    FileCommitMessage,
+    FileDataSource,
+    PartFileWriter,
+    input_files,
+    local_path,
+    partition_id,
+    register,
 )
 
 WARC_SCHEMA = T.StructType(
@@ -96,38 +103,6 @@ WARC_SCHEMA = T.StructType(
 #: bytes).  Callers with real crawl dates pass a ``warc_date`` column.
 _EPOCH_DATE = "1970-01-01T00:00:00Z"
 _CRLF = b"\r\n"
-
-
-def _local_path(path: str) -> str:
-    if path.startswith("file:") or "://" in path:
-        from urllib.parse import urlparse
-
-        u = urlparse(path)
-        if u.scheme in ("", "file"):
-            return u.path or path
-        raise ValueError(
-            f"warc source/sink is Python-filesystem-backed and cannot "
-            f"open {u.scheme}:// paths directly; mount the object store "
-            f"or write locally and replicate (sources/cloud.py)"
-        )
-    return path
-
-
-def _list_warc_files(path: str) -> list[str]:
-    path = _local_path(path)
-    if os.path.isdir(path):
-        files = sorted(
-            f
-            for pat in ("*.warc", "*.warc.gz")
-            for f in glob.glob(os.path.join(path, "**", pat), recursive=True)
-            if not os.path.basename(f).startswith(("_", "."))
-        )
-        if not files:
-            raise FileNotFoundError(f"no .warc/.warc.gz files under {path}")
-        return files
-    if not os.path.exists(path):
-        raise FileNotFoundError(path)
-    return [path]
 
 
 def _open_stream(path: str):
@@ -203,7 +178,12 @@ class WarcPartition(InputPartition):
         self.file = file
 
 
-class WarcDataSource(DataSource):
+class WarcDataSource(FileDataSource):
+    OPTIONS = frozenset({
+        "path", "batchRows", "maxFileAgeSec", "compression", "payloadCol",
+        "warcType",
+    })
+
     @classmethod
     def name(cls) -> str:
         return "warc"
@@ -214,23 +194,23 @@ class WarcDataSource(DataSource):
     def reader(self, schema: T.StructType) -> "WarcReader":
         return WarcReader(schema, self.options)
 
-    def streamReader(self, schema: T.StructType) -> "WarcStreamReader":
-        return WarcStreamReader(schema, self.options)
-
     def writer(self, schema: T.StructType, overwrite: bool) -> "WarcWriter":
         return WarcWriter(schema, self.options, overwrite)
 
 
 class WarcReader(DataSourceReader):
+    patterns = ("*.warc", "*.warc.gz")
+
     def __init__(self, schema: T.StructType, options):
         self.schema_ = schema
-        self.path = options.get("path")
-        if self.path is None:
-            raise ValueError("warc source requires a path")
+        self.options = options
         self.batch_rows = int(options.get("batchrows", 1024))
 
     def partitions(self):
-        return [WarcPartition(f) for f in _list_warc_files(self.path)]
+        return self._partitions(input_files(self.options, self.patterns))
+
+    def _partitions(self, files: list[str]) -> list[WarcPartition]:
+        return [WarcPartition(f) for f in files]
 
     def read(self, partition: WarcPartition):
         import pyarrow as pa
@@ -274,117 +254,10 @@ class WarcReader(DataSourceReader):
             yield flush()
 
 
-class WarcStreamReader(DataSourceStreamReader):
-    """Micro-batch WARC source: ``spark.readStream.format("warc")``
-    watches a directory and processes each NEW archive exactly once —
-    the incremental-crawl ingest form (a crawler keeps landing
-    segments; the pipeline picks each up once).  Archives must be
-    written atomically (rename into the watched directory) — the same
-    contract as Spark's built-in file sources.
-
-    Offset mechanics follow the xlsx stream source precedent
-    (sources/xlsx/datasource.XlsxStreamReader): exact offsets are
-    {"seen": sorted [file, ...]} — the full processed set, recovery
-    from any checkpointed pair exact regardless of listing order —
-    and ``option("maxFileAgeSec", N)`` switches to COMPACTED offsets
-    {"mark": max mtime, "recent": [...]} bounded by arrival rate x
-    window (files older than the window behind the newest are assumed
-    processed, the built-in source's purge semantics).  Enabling
-    compaction on an exact-mode checkpoint is safe; disabling it is
-    rejected at the first trigger — the bounded list cannot stand in
-    for the full processed set."""
-
-    def __init__(self, schema: T.StructType, options):
-        self.schema_ = schema
-        self.path = options.get("path")
-        if self.path is None:
-            raise ValueError("warc stream source requires a path")
-        self.batch_rows = int(options.get("batchrows", 1024))
-        age = options.get("maxfileagesec")
-        self.max_age = float(age) if age is not None else None
-
-    def _current_files(self) -> list[str]:
-        try:
-            return _list_warc_files(self.path)
-        except FileNotFoundError:
-            return []
-
-    def initialOffset(self) -> dict:
-        if self.max_age is not None:
-            return {"mark": 0.0, "recent": []}
-        return {"seen": []}
-
-    def latestOffset(self) -> dict:
-        files = self._current_files()
-        if self.max_age is None:
-            return {"seen": files}
-        pairs = []
-        for f in files:
-            try:
-                pairs.append((f, os.path.getmtime(f)))
-            except OSError:  # raced deletion between list and stat
-                pass
-        mark = max((m for _, m in pairs), default=0.0)
-        return {
-            "mark": mark,
-            "recent": sorted(f for f, m in pairs if m >= mark - self.max_age),
-        }
-
-    def partitions(self, start: dict, end: dict):
-        if "recent" in start and self.max_age is None:
-            raise ValueError(
-                "this checkpoint was written with maxFileAgeSec (compacted "
-                "offsets); running without the option would reprocess every "
-                "archive in the directory — keep the option or start a "
-                "fresh checkpoint"
-            )
-        processed = set(start.get("seen") or start.get("recent") or [])
-        new_files = sorted(
-            set(end.get("seen") or end.get("recent") or []) - processed
-        )
-        return [WarcPartition(f) for f in new_files]
-
-    def read(self, partition: WarcPartition):
-        # stream-reader contract: yield ROWS in WARC_SCHEMA order
-        with _open_stream(partition.file) as stream:
-            for headers, payload in parse_warc_stream(
-                stream, source=os.path.basename(partition.file)
-            ):
-                yield (
-                    headers.get("warc-record-id"),
-                    headers.get("warc-type"),
-                    headers.get("warc-target-uri"),
-                    headers.get("warc-date"),
-                    headers.get("content-type"),
-                    len(payload),
-                    payload,
-                )
-
-    def commit(self, end: dict) -> None:
-        pass  # progress is fully encoded in the checkpointed offset
-
-
-class WarcCommitMessage(WriterCommitMessage):
-    def __init__(self, file: str, rows: int):
-        self.file = file
-        self.rows = rows
-
-
-#: optional header columns the writer lifts from the input schema when
-#: present: (column name, WARC header, default-builder)
-_HEADER_COLS = (
-    ("record_id", "WARC-Record-ID", None),
-    ("warc_type", "WARC-Type", None),
-    ("target_uri", "WARC-Target-URI", None),
-    ("warc_date", "WARC-Date", None),
-    ("content_type", "Content-Type", None),
-)
-
-
-class WarcWriter(DataSourceWriter):
+class WarcWriter(PartFileWriter, DataSourceWriter):
     def __init__(self, schema: T.StructType, options, overwrite: bool):
         self.schema_ = schema
-        self.path = _local_path(options.get("path") or "")
+        self.path = local_path(options.get("path") or "")
         if not self.path:
             raise ValueError("warc sink requires a path")
         self.payload_col = options.get("payloadcol", "payload")
@@ -400,10 +273,7 @@ class WarcWriter(DataSourceWriter):
                 f"(option('payloadCol', ...) to rename); schema has {names}"
             )
         self.idx = {n: i for i, n in enumerate(names)}
-        if overwrite and os.path.isdir(self.path):
-            for f in glob.glob(os.path.join(self.path, "part-*.warc*")):
-                os.remove(f)
-        os.makedirs(self.path, exist_ok=True)
+        self._open_output_dir(WarcReader.patterns, overwrite)
 
     def _record(self, row, rownum: int, pid: int) -> bytes:
         payload = row[self.idx[self.payload_col]]
@@ -445,15 +315,9 @@ class WarcWriter(DataSourceWriter):
         buf.write(b"\r\n\r\n")
         return buf.getvalue()
 
-    def write(self, iterator) -> WarcCommitMessage:
-        from pyspark import TaskContext
-
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx else 0
-        ext = ".warc.gz" if self.gz else ".warc"
-        target = os.path.join(
-            self.path, f"part-{pid:05d}-{uuid.uuid4().hex[:8]}{ext}"
-        )
+    def write(self, iterator) -> FileCommitMessage:
+        pid = partition_id()
+        target = self._part_file(pid, ".warc.gz" if self.gz else ".warc")
         n = 0
         with open(target, "wb") as out:
             for row in iterator:
@@ -467,28 +331,9 @@ class WarcWriter(DataSourceWriter):
                 else:
                     out.write(rec)
                 n += 1
-        return WarcCommitMessage(file=target, rows=n)
-
-    def commit(self, messages) -> None:
-        with open(os.path.join(self.path, "_SUCCESS"), "w") as f:
-            total = sum(m.rows for m in messages if m is not None)
-            f.write(f"rows={total}\n")
-
-    def abort(self, messages) -> None:
-        for m in messages:
-            if m is not None and os.path.exists(m.file):
-                os.remove(m.file)
-
+        return FileCommitMessage(file=target, rows=n)
 
 def register_warc(spark) -> None:
-    """Idempotently register the warc format on this session (the
-    register_xlsx convention — the marker lives on the session object)."""
-    if getattr(spark, "_esspark_warc_registered", False):
-        return
-    try:
-        spark.dataSource.register(WarcDataSource)
-        spark._esspark_warc_registered = True
-    except Exception as e:
-        if "already" not in str(e).lower():
-            raise
-        spark._esspark_warc_registered = True
+    """Idempotently register the warc format on this session
+    (files.register)."""
+    register(spark, WarcDataSource)

@@ -8,16 +8,20 @@ Read path (reference S1-S5 semantics, Spark-shaped):
   so parallelism comes from many files / many sheets.  A directory of
   part-workbooks written by this sink is therefore read fully in parallel.
 
+Path listing, stream offsets, the batch sink's part files and _SUCCESS,
+registration and the unknown-option warning are the file-source core's
+(files.py), shared with the warc source.
+
 Write path (reference K1-K8): each partition streams one part-workbook
-(``part-NNNNN.xlsx``) with constant memory; commit() writes _SUCCESS.
+(``part-NNNNN-<uuid8>.xlsx``) with constant memory.
 The batch and the stream sink are Arrow writers: every column type and
 every option goes through the one columnar encoder (batch_write.py).
 ``singleFile=true`` + a single partition (coalesce(1)) emits exactly the
 target path as one workbook — the Excel-openable mode.
 
-Options (read):  path (a file, directory or glob; ``load([a, b])`` reads
-  every path — Spark passes the list as ``paths``, a JSON array, and the
-  schema comes from the first file), sheetName | sheetIndex | allSheets (default
+Options (read):  path (a file, directory or glob, listed by
+  files.input_files; ``load([a, b])`` reads every path, and the schema
+  comes from the first file), sheetName | sheetIndex | allSheets (default
   false — one partition per sheet of every file), header (default true),
   inferSchema (default true), samplingRows (default 200),
   sheetSchemaMode (realign | union | strict, default realign — policy
@@ -36,12 +40,11 @@ Options (read):  path (a file, directory or glob; ``load([a, b])`` reads
 
 The source also implements a STREAM reader: ``spark.readStream
 .format("xlsx")`` watches a directory and processes each new workbook
-exactly once (offsets = the processed-file set, checkpointed; bound
-them with maxFileAgeSec), and a STREAM writer: ``df.writeStream
-.format("xlsx")`` lands each micro-batch as deterministic
+exactly once (files.FileStreamReader: offsets = the processed-file set,
+checkpointed; bound them with maxFileAgeSec), and a STREAM writer:
+``df.writeStream.format("xlsx")`` lands each micro-batch as deterministic
 ``batch-<id>-part-<pid>.xlsx`` workbooks (idempotent on replay, temp
-files invisible to readers).  Note
-Spark's PythonMicroBatchStream executes availableNow as a single batch
+files invisible to readers).  Note Spark's PythonMicroBatchStream executes availableNow as a single batch
 per run — incremental pickup across restarts is exact either way.
 
 Options (write): sheetName, header (default true), compression (0-9,
@@ -61,23 +64,29 @@ from __future__ import annotations
 
 import glob
 import itertools
-import json
 import os
 import re
 import uuid
 import warnings
 
 from pyspark.sql.datasource import (
-    DataSource,
     DataSourceArrowWriter,
     DataSourceReader,
     DataSourceStreamArrowWriter,
-    DataSourceStreamReader,
     InputPartition,
-    WriterCommitMessage,
 )
 from pyspark.sql import types as T
 
+from excelstream_spark.sources.files import (
+    FileCommitMessage,
+    FileDataSource,
+    PartFileWriter,
+    input_files,
+    local_path,
+    partition_id,
+    register,
+    remove_task_files,
+)
 from excelstream_spark.sources.xlsx.reader_core import (
     WorkbookReader,
     infer_schema,
@@ -87,76 +96,12 @@ from excelstream_spark.sources.xlsx.reader_core import (
 )
 from excelstream_spark.sources.xlsx.writer_core import WorkbookWriter
 
-#: every option key the source and sink read
-OPTIONS = frozenset({
-    "path", "sheetName", "sheetIndex", "allSheets", "header", "inferSchema",
-    "samplingRows", "sheetSchemaMode", "columns", "limitRows", "maxFileAgeSec",
-    "compression", "useSharedStrings", "sheetProtectPassword", "singleFile",
-    "maxRowsPerSheet", "columnWidths", "rowHeight", "columnStyles",
-})
-#: keys Spark itself passes (load() of several paths; a stream sink's
-#: checkpoint) are known too; any other key draws a warning
-_KNOWN_KEYS = {k.lower() for k in OPTIONS | {"paths", "checkpointLocation"}}
-
-
 def _truthy(value: str | bool | None, default: bool = False) -> bool:
     if value is None:
         return default
     if isinstance(value, bool):
         return value
     return str(value).strip().lower() in ("1", "true", "yes", "y")
-
-
-def _local_path(path: str) -> str:
-    """Normalize a ``file:``/``file://`` URI to a plain local path.  The
-    xlsx DataSource runs PYTHON-side (os/glob/open), so only
-    locally-visible paths are valid — but callers reasonably pass the
-    same URI form Spark's JVM sources accept (export_presigned's
-    ``write_path`` contract does exactly that), which previously created
-    a literal ``./file:`` directory and wrote nowhere useful.  Non-file
-    schemes fail loudly instead of silently doing the same."""
-    if path.startswith("file:") or "://" in path:
-        from urllib.parse import urlparse
-
-        u = urlparse(path)
-        if u.scheme in ("", "file"):
-            return u.path or path
-        raise ValueError(
-            f"xlsx source/sink is Python-filesystem-backed and cannot "
-            f"open {u.scheme}:// paths directly; mount the object store "
-            f"or write locally and replicate (sources/cloud.py)"
-        )
-    return path
-
-
-def _input_files(options) -> list[str]:
-    """Every workbook to read: under ``path``, then under each entry of
-    ``paths``, the JSON array Spark passes when ``load()`` gets a list."""
-    paths = [options["path"]] if options.get("path") is not None else []
-    if "paths" in options:  # set by Spark, not a user option
-        paths += json.loads(options["paths"])
-    if not paths:
-        raise ValueError("xlsx source requires a path")
-    return [f for path in paths for f in _list_xlsx_files(path)]
-
-
-def _list_xlsx_files(path: str) -> list[str]:
-    path = _local_path(path)
-    if os.path.isdir(path):
-        files = sorted(
-            f
-            for f in glob.glob(os.path.join(path, "**", "*.xlsx"), recursive=True)
-            if not os.path.basename(f).startswith(("_", "."))
-        )
-        if not files:
-            raise FileNotFoundError(f"no .xlsx files under {path}")
-        return files
-    if os.path.exists(path):
-        return [path]
-    files = sorted(glob.glob(path))
-    if not files:
-        raise FileNotFoundError(path)
-    return files
 
 
 def _prune_schema(schema: T.StructType, columns: str | None) -> T.StructType:
@@ -201,25 +146,21 @@ class XlsxPartition(InputPartition):
         self.sheet = sheet
 
 
-class XlsxDataSource(DataSource):
-    def __init__(self, options):
-        # Spark builds the source once per load or save, batch or stream
-        super().__init__(options)
-        unknown = sorted(k for k in options if k.lower() not in _KNOWN_KEYS)
-        if unknown:
-            warnings.warn(
-                f"xlsx: ignoring unknown option(s) {unknown}; known options: "
-                f"{sorted(OPTIONS, key=str.lower)}",
-                UserWarning,
-                stacklevel=2,
-            )
+class XlsxDataSource(FileDataSource):
+    OPTIONS = frozenset({
+        "path", "sheetName", "sheetIndex", "allSheets", "header",
+        "inferSchema", "samplingRows", "sheetSchemaMode", "columns",
+        "limitRows", "maxFileAgeSec", "compression", "useSharedStrings",
+        "sheetProtectPassword", "singleFile", "maxRowsPerSheet",
+        "columnWidths", "rowHeight", "columnStyles",
+    })
 
     @classmethod
     def name(cls) -> str:
         return "xlsx"
 
     def schema(self):
-        files = _input_files(self.options)
+        files = input_files(self.options, XlsxReader.patterns)
         n_sample = int(self.options.get("samplingrows", 200))
         header = _truthy(self.options.get("header"), True)
         infer = _truthy(self.options.get("inferschema"), True)
@@ -256,9 +197,6 @@ class XlsxDataSource(DataSource):
     def reader(self, schema: T.StructType) -> "XlsxReader":
         return XlsxReader(schema, self.options)
 
-    def streamReader(self, schema: T.StructType) -> "XlsxStreamReader":
-        return XlsxStreamReader(schema, self.options)
-
     def streamWriter(self, schema: T.StructType, overwrite: bool) -> "XlsxStreamWriter":
         return XlsxStreamWriter(schema, self.options, truncate=overwrite)
 
@@ -267,6 +205,8 @@ class XlsxDataSource(DataSource):
 
 
 class XlsxReader(DataSourceReader):
+    patterns = ("*.xlsx",)
+
     def __init__(self, schema: T.StructType, options):
         from excelstream_spark.sources.xlsx.batch_scan import to_arrow_schema
 
@@ -293,7 +233,7 @@ class XlsxReader(DataSourceReader):
         )
 
     def partitions(self):
-        return self._partitions(_input_files(self.options))
+        return self._partitions(input_files(self.options, self.patterns))
 
     def _partitions(self, files: list[str]) -> list[XlsxPartition]:
         """One partition per (file, sheet): the named sheet, every sheet
@@ -375,97 +315,6 @@ def _warn_fallback(partition: XlsxPartition, cause: str) -> None:
     )
 
 
-class XlsxStreamReader(DataSourceStreamReader):
-    """Micro-batch file-source semantics for workbooks: each trigger picks
-    up .xlsx files that appeared since the last committed offset; one
-    partition per NEW (file, sheet).  A workbook must be written atomically
-    (rename into the watched directory) — the same contract as Spark's
-    built-in file sources.
-
-    Offsets are {"seen": sorted [file, ...]} — the full processed set, so
-    recovery from any checkpointed offset pair is exact regardless of
-    listing order or file mtimes.  An offset therefore grows with total
-    file count; option("maxFileAgeSec", N) switches to COMPACTED offsets
-    {"mark": max mtime, "recent": [files with mtime >= mark - N]} that
-    stay bounded by the arrival rate x window instead — the semantics of
-    the built-in file source's maxFileAge: a file whose mtime is older
-    than the window behind the newest file is assumed already processed
-    and skipped.  The cutoff is relative to the newest CURRENT file, so
-    if the stream is down longer than the window while files keep
-    arriving, backlog older than (newest mtime - N) is skipped too —
-    identical to the built-in source's purge behavior.  Pick N
-    comfortably above max delivery delay + max expected downtime.
-    Enabling compaction on an existing exact-mode checkpoint is safe
-    (both offset formats are accepted as the start side); DISABLING it
-    is rejected at the first trigger — the bounded 'recent' list cannot
-    stand in for the full processed set, so reprocessing everything in
-    the directory would silently follow.
-    """
-
-    def __init__(self, schema: T.StructType, options):
-        #: each new file is read exactly as a batch read of it would be
-        self._reader = XlsxReader(schema, options)
-        age = options.get("maxfileagesec")
-        self.max_age = float(age) if age is not None else None
-
-    def _current_files(self) -> list[str]:
-        try:
-            return _input_files(self._reader.options)
-        except FileNotFoundError:
-            return []
-
-    def initialOffset(self) -> dict:
-        if self.max_age is not None:
-            return {"mark": 0.0, "recent": []}
-        return {"seen": []}
-
-    def latestOffset(self) -> dict:
-        files = self._current_files()
-        if self.max_age is None:
-            return {"seen": files}
-        pairs = []
-        for f in files:
-            try:
-                pairs.append((f, os.path.getmtime(f)))
-            except OSError:  # raced deletion between list and stat
-                pass
-        mark = max((m for _, m in pairs), default=0.0)
-        return {
-            "mark": mark,
-            "recent": sorted(f for f, m in pairs if m >= mark - self.max_age),
-        }
-
-    def partitions(self, start: dict, end: dict):
-        if "recent" in start and self.max_age is None:
-            raise ValueError(
-                "this checkpoint was written with maxFileAgeSec (compacted "
-                "offsets); running without the option would reprocess every "
-                "file in the directory — keep the option or start a fresh "
-                "checkpoint"
-            )
-        processed = set(start.get("seen") or start.get("recent") or [])
-        new_files = sorted(
-            set(end.get("seen") or end.get("recent") or []) - processed
-        )
-        return self._reader._partitions(new_files)
-
-    def read(self, partition: XlsxPartition):
-        # each file's header realigns its columns to the schema per
-        # sheetSchemaMode, so a workbook whose column order differs is not
-        # coerced positionally
-        yield from self._reader.read(partition)
-
-    def commit(self, end: dict) -> None:
-        pass  # progress is fully encoded in the checkpointed offset
-
-
-class XlsxCommitMessage(WriterCommitMessage):
-    def __init__(self, file: str, rows: int, pid: int = 0):
-        self.file = file
-        self.rows = rows
-        self.pid = pid
-
-
 class _XlsxWriteOptions:
     """Write-option parsing + workbook encoding shared by the batch and
     the streaming sink, so both honor the same documented option set."""
@@ -476,7 +325,7 @@ class _XlsxWriteOptions:
         self.path = options.get("path")
         if self.path is None:
             raise ValueError("xlsx sink requires a path")
-        self.path = _local_path(self.path)
+        self.path = local_path(self.path)
         self.header = _truthy(options.get("header"), True)
         self.sheet_name = options.get("sheetname", "Sheet1")
         self.compression = int(options.get("compression", 6))
@@ -530,33 +379,25 @@ class _XlsxWriteOptions:
             return wb.write_arrow_batches(batches, self.schema_, self.col_styles)
 
 
-class XlsxWriter(_XlsxWriteOptions, DataSourceArrowWriter):
+class XlsxWriter(_XlsxWriteOptions, PartFileWriter, DataSourceArrowWriter):
     """Batch sink: Spark ships Arrow RecordBatches to the worker (no
-    per-row pickling) and each task streams them into one part-workbook;
-    maxRowsPerSheet auto-splits by slicing batches at the sheet
-    boundary."""
+    per-row pickling) and each task streams them into one part-workbook
+    (files.PartFileWriter); maxRowsPerSheet auto-splits by slicing
+    batches at the sheet boundary."""
 
     def __init__(self, schema: T.StructType, options, overwrite: bool):
         self._init_write_options(schema, options)
         self.single_file = _truthy(options.get("singlefile"), False)
-        # driver-side setup: Spark's planner has already handled the
-        # overwrite/errorifexists decision before constructing the writer
         if self.single_file:
             parent = os.path.dirname(os.path.abspath(self.path))
             os.makedirs(parent, exist_ok=True)
             if overwrite and os.path.exists(self.path):
                 os.remove(self.path)
         else:
-            if overwrite and os.path.isdir(self.path):
-                for f in glob.glob(os.path.join(self.path, "part-*.xlsx")):
-                    os.remove(f)
-            os.makedirs(self.path, exist_ok=True)
+            self._open_output_dir(XlsxReader.patterns, overwrite)
 
     def _target_path(self) -> str:
-        from pyspark import TaskContext
-
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx else 0
+        pid = partition_id()
         if self.single_file:
             if pid != 0:
                 raise ValueError(
@@ -567,12 +408,12 @@ class XlsxWriter(_XlsxWriteOptions, DataSourceArrowWriter):
             # mid-write task failure or retry never leaves a truncated
             # workbook at the destination
             return f"{self.path}.__tmp-{uuid.uuid4().hex[:8]}"
-        return os.path.join(self.path, f"part-{pid:05d}-{uuid.uuid4().hex[:8]}.xlsx")
+        return self._part_file(pid, ".xlsx")
 
-    def write(self, iterator) -> XlsxCommitMessage:
+    def write(self, iterator) -> FileCommitMessage:
         target = self._target_path()
         n = self._write_workbook(target, iterator)
-        return XlsxCommitMessage(file=target, rows=n)
+        return FileCommitMessage(file=target, rows=n)
 
     def commit(self, messages) -> None:
         if self.single_file:
@@ -580,15 +421,7 @@ class XlsxWriter(_XlsxWriteOptions, DataSourceArrowWriter):
                 if m is not None:
                     os.replace(m.file, self.path)  # atomic publish
         else:
-            success = os.path.join(self.path, "_SUCCESS")
-            with open(success, "w") as f:
-                total = sum(m.rows for m in messages if m is not None)
-                f.write(f"rows={total}\n")
-
-    def abort(self, messages) -> None:
-        for m in messages:
-            if m is not None and os.path.exists(m.file):
-                os.remove(m.file)
+            super().commit(messages)
 
 
 class XlsxStreamWriter(_XlsxWriteOptions, DataSourceStreamArrowWriter):
@@ -623,22 +456,19 @@ class XlsxStreamWriter(_XlsxWriteOptions, DataSourceStreamArrowWriter):
         os.makedirs(self.path, exist_ok=True)
 
     def _tmp_target(self) -> tuple[str, int]:
-        from pyspark import TaskContext
-
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx else 0
+        pid = partition_id()
         tmp = os.path.join(
             self.path, f".tmp-{uuid.uuid4().hex[:8]}-part-{pid:05d}.xlsx"
         )
         return tmp, pid
 
-    def write(self, iterator) -> XlsxCommitMessage:
+    def write(self, iterator) -> FileCommitMessage:
         tmp, pid = self._tmp_target()
         n = self._write_workbook(tmp, iterator)
         if n == 0:  # empty partition: no part file
             os.remove(tmp)
-            return XlsxCommitMessage(file="", rows=0, pid=pid)
-        return XlsxCommitMessage(file=tmp, rows=n, pid=pid)
+            return FileCommitMessage(file="", rows=0, pid=pid)
+        return FileCommitMessage(file=tmp, rows=n, pid=pid)
 
     def commit(self, messages, batchId: int) -> None:
         # replay hygiene: a replayed batch may produce FEWER partitions
@@ -666,30 +496,10 @@ class XlsxStreamWriter(_XlsxWriteOptions, DataSourceStreamArrowWriter):
                 pass
 
     def abort(self, messages, batchId: int) -> None:
-        for m in messages:
-            if m is None or not m.file:
-                continue
-            if os.path.exists(m.file):
-                os.remove(m.file)
+        remove_task_files(messages)
 
 
 def register_xlsx(spark) -> None:
-    """Idempotently register the xlsx format on this session.
-
-    Re-registering works but logs a "data source xlsx replaced" WARN per
-    call (the sink entry and repeated bench runs would spam it).  The
-    marker lives ON the session object — an id()-keyed set would both
-    leak entries and mistake a new session allocated at a recycled
-    address for an already-registered one."""
-    if getattr(spark, "_esspark_xlsx_registered", False):
-        return
-    try:
-        spark.dataSource.register(XlsxDataSource)
-        spark._esspark_xlsx_registered = True
-    except Exception as e:  # already registered is fine
-        if "already" not in str(e).lower():
-            raise
-        # someone registered xlsx on this session outside this helper —
-        # still mark it, or every later call would re-attempt and the
-        # WARN-spam suppression would never engage for this session
-        spark._esspark_xlsx_registered = True
+    """Idempotently register the xlsx format on this session
+    (files.register)."""
+    register(spark, XlsxDataSource)

@@ -173,7 +173,7 @@ def test_xlsx_streaming_offset_compaction(tmp_path):
     from pyspark.sql import types as T
 
     from excelstream_spark.sources.xlsx import WorkbookWriter
-    from excelstream_spark.sources.xlsx.datasource import XlsxStreamReader
+    from excelstream_spark.sources.xlsx.datasource import XlsxDataSource
 
     watch = str(tmp_path / "watch")
     os.makedirs(watch)
@@ -189,7 +189,7 @@ def test_xlsx_streaming_offset_compaction(tmp_path):
         return p
 
     schema = T.StructType([T.StructField("id", T.LongType())])
-    rdr = XlsxStreamReader(schema, {"path": watch, "maxfileagesec": "100"})
+    rdr = XlsxDataSource({"path": watch, "maxfileagesec": "100"}).streamReader(schema)
 
     now = time.time()
     # 50 "old" files far outside the window + 2 recent ones
@@ -230,7 +230,7 @@ def test_xlsx_stream_reader_realigns_swapped_header(tmp_path):
     from pyspark.sql import types as T
 
     from excelstream_spark.sources.xlsx import WorkbookWriter
-    from excelstream_spark.sources.xlsx.datasource import XlsxStreamReader
+    from excelstream_spark.sources.xlsx.datasource import XlsxDataSource
 
     watch = str(tmp_path / "w")
     os.makedirs(watch)
@@ -248,7 +248,7 @@ def test_xlsx_stream_reader_realigns_swapped_header(tmp_path):
         T.StructField("name", T.StringType()),
         T.StructField("ts", T.TimestampNTZType()),
     ])
-    rdr = XlsxStreamReader(schema, {"path": watch})
+    rdr = XlsxDataSource({"path": watch}).streamReader(schema)
     parts = rdr.partitions(rdr.initialOffset(), rdr.latestOffset())
     with warnings.catch_warnings():
         warnings.simplefilter("error")
@@ -269,12 +269,12 @@ def test_disabling_offset_compaction_fails_fast(tmp_path):
     import pytest
     from pyspark.sql import types as T
 
-    from excelstream_spark.sources.xlsx.datasource import XlsxStreamReader
+    from excelstream_spark.sources.xlsx.datasource import XlsxDataSource
 
     watch = str(tmp_path / "w")
     os.makedirs(watch)
     schema = T.StructType([T.StructField("id", T.LongType())])
-    rdr = XlsxStreamReader(schema, {"path": watch})  # option removed
+    rdr = XlsxDataSource({"path": watch}).streamReader(schema)  # option removed
     with pytest.raises(ValueError, match="maxFileAgeSec"):
         rdr.partitions({"mark": 1.0, "recent": []}, {"seen": []})
 
@@ -326,10 +326,7 @@ def test_xlsx_stream_sink_roundtrip(spark, tmp_path):
     import pyarrow as pa
     from pyspark.sql import types as T
 
-    from excelstream_spark.sources.xlsx.datasource import (
-        XlsxCommitMessage,
-        XlsxStreamWriter,
-    )
+    from excelstream_spark.sources.xlsx.datasource import XlsxStreamWriter
 
     w = XlsxStreamWriter(
         T.StructType([T.StructField("id", T.LongType())]), {"path": out}

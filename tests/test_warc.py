@@ -189,6 +189,21 @@ def test_payload_col_option_and_defaults(spark):
     assert r["target_uri"] is None  # no URI column -> header omitted
 
 
+def test_load_several_paths(spark):
+    """``load([a, b])`` reads every path (Spark passes the list as the
+    ``paths`` option)."""
+    register_warc(spark)
+    dirs = []
+    for n in (3, 2):
+        out = _tmpdir()
+        spark.createDataFrame(
+            [(f"r{i}", f"payload {i}") for i in range(n)],
+            "record_id string, payload string",
+        ).write.format("warc").mode("overwrite").save(out)
+        dirs.append(out)
+    assert spark.read.format("warc").load(dirs).count() == 5
+
+
 def test_stream_source_exactly_once_pickup(spark):
     """The incremental-crawl form: a watched directory processed with
     availableNow repeatedly against ONE checkpoint — each archive's
@@ -266,7 +281,7 @@ def test_stream_offset_compaction_unit():
     semantics applied to crawl segments)."""
     import time
 
-    from excelstream_spark.sources.warc import WARC_SCHEMA, WarcStreamReader
+    from excelstream_spark.sources.warc import WARC_SCHEMA, WarcDataSource
 
     watch = _tmpdir()
     rec = (
@@ -285,7 +300,8 @@ def test_stream_offset_compaction_unit():
         land(f"old{i:02d}.warc", now - 10_000 + i)
     land("new1.warc", now - 10)
     land("new2.warc", now)
-    rdr = WarcStreamReader(WARC_SCHEMA, {"path": watch, "maxfileagesec": "100"})
+    rdr = WarcDataSource({"path": watch, "maxfileagesec": "100"}).streamReader(
+        WARC_SCHEMA)
     start, end = rdr.initialOffset(), rdr.latestOffset()
     assert sorted(os.path.basename(f) for f in end["recent"]) == [
         "new1.warc", "new2.warc"]
@@ -296,6 +312,6 @@ def test_stream_offset_compaction_unit():
     parts2 = rdr.partitions(end, rdr.latestOffset())
     assert [os.path.basename(p.file) for p in parts2] == ["new3.warc"]
     # disabling compaction against a compacted checkpoint fails fast
-    bare = WarcStreamReader(WARC_SCHEMA, {"path": watch})
+    bare = WarcDataSource({"path": watch}).streamReader(WARC_SCHEMA)
     with pytest.raises(ValueError, match="maxFileAgeSec"):
         bare.partitions(end, bare.latestOffset())

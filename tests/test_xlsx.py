@@ -1200,44 +1200,70 @@ def test_scanner_fallbacks_warn_with_rows_unchanged(tmp_path, monkeypatch):
         assert _batch_rows(reader.read(XlsxPartition(own, "Data"))) == expected
 
 
-def test_every_option_is_documented():
-    """The option keys the data source reads are exactly its declared
+def _source(fmt: str):
+    from excelstream_spark.sources.warc import WarcDataSource
+    from excelstream_spark.sources.xlsx.datasource import XlsxDataSource
+
+    return {"xlsx": XlsxDataSource, "warc": WarcDataSource}[fmt]
+
+
+@pytest.mark.parametrize("fmt, n_keys", [("xlsx", 19), ("warc", 6)],
+                         ids=["xlsx", "warc"])
+def test_every_option_is_documented(fmt, n_keys):
+    """The option keys a data source reads, in its module and in the
+    shared file-source core (files.py), are exactly its declared
     ``OPTIONS``, and each is named in its module docstring
     (case-insensitive)."""
     import re
+    import sys
 
-    from excelstream_spark.sources.xlsx import datasource
+    from excelstream_spark.sources import files
 
-    with open(datasource.__file__) as f:
-        keys = set(re.findall(r"""options\.get\(\s*["'](\w+)["']""", f.read()))
-    assert keys == {k.lower() for k in datasource.OPTIONS}
-    assert len(keys) == 19
-    doc = datasource.__doc__.lower()
+    source = _source(fmt)
+    module = sys.modules[source.__module__]
+    keys = set()
+    for mod in (module, files):
+        with open(mod.__file__) as f:
+            keys |= set(re.findall(r"""options\.get\(\s*["'](\w+)["']""", f.read()))
+    assert keys == {k.lower() for k in source.OPTIONS}
+    assert len(keys) == n_keys
+    doc = module.__doc__.lower()
     assert sorted(k for k in keys if not re.search(rf"\b{k}\b", doc)) == []
 
 
-def test_unknown_option_keys_warn():
+@pytest.mark.parametrize("fmt, bad, named, known, good", [
+    ("xlsx",
+     {"pushdown": "true", "sheetNmae": "S", "batchReader": "false",
+      "arrowBatches": "false", "arrowBatchSize": "10", "batchWriter": "false"},
+     "['arrowBatchSize', 'arrowBatches', 'batchReader', 'batchWriter', "
+     "'pushdown', 'sheetNmae']",
+     ("'sheetName'", "'limitRows'"),
+     {"sheetName": "S", "LIMITROWS": "5", "samplingrows": "10"}),
+    ("warc",
+     {"batchRow": "10", "payloadColumn": "body"},
+     "['batchRow', 'payloadColumn']",
+     ("'batchRows'", "'payloadCol'"),
+     {"BATCHROWS": "10", "payloadcol": "body", "maxFileAgeSec": "5",
+      "warcType": "response", "Compression": "none"}),
+], ids=["xlsx", "warc"])
+def test_unknown_option_keys_warn(fmt, bad, named, known, good):
     """Deleted and misspelt option keys draw one UserWarning naming them
     and listing the known keys; documented keys, in any case, and the
     keys Spark passes itself draw none."""
     import warnings
 
-    from excelstream_spark.sources.xlsx.datasource import XlsxDataSource
-
+    source = _source(fmt)
     with pytest.warns(UserWarning) as record:
-        XlsxDataSource({"path": "/x", "pushdown": "true", "sheetNmae": "S",
-                        "batchReader": "false", "arrowBatches": "false",
-                        "arrowBatchSize": "10", "batchWriter": "false"})
+        source({"path": "/x", **bad})
     assert len(record) == 1
     msg = str(record[0].message)
-    assert ("['arrowBatchSize', 'arrowBatches', 'batchReader', "
-            "'batchWriter', 'pushdown', 'sheetNmae']") in msg
-    assert "'sheetName'" in msg and "'limitRows'" in msg
+    assert msg.startswith(f"{fmt}: ")
+    assert named in msg
+    assert all(k in msg for k in known)
     with warnings.catch_warnings():
         warnings.simplefilter("error")
-        XlsxDataSource({"path": "/x", "sheetName": "S", "LIMITROWS": "5",
-                        "samplingrows": "10", "paths": '["/x"]',
-                        "checkpointLocation": "/ck"})
+        source({"path": "/x", **good, "paths": '["/x"]',
+                "checkpointLocation": "/ck"})
 
 
 # --- sheetSchemaMode policies ---------------------------------------------
