@@ -17,9 +17,6 @@ distributed path is one directory per table).
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 
 from excelstream_spark.sources.xlsx import register_xlsx
@@ -79,7 +76,8 @@ def append_to_workbook(
     """Append rows to an existing single-file workbook: read + union +
     rewrite (the operation the reference left unimplemented).
 
-    Atomic: writes a sibling temp file then replaces the original.
+    Writes straight to ``path``: the sink renames its temp over the
+    original only at commit, after the read of the original has run.
     """
     register_xlsx(spark)
     reader = spark.read.format("xlsx").option("header", header)
@@ -87,9 +85,6 @@ def append_to_workbook(
         reader = reader.option("sheetName", sheet_name)
     existing = reader.load(path)
     combined = existing.unionByName(df.toDF(*existing.columns))
-    fd, tmp = tempfile.mkstemp(suffix=".xlsx", dir=os.path.dirname(os.path.abspath(path)))
-    os.close(fd)
-    os.remove(tmp)
     writer = (
         combined.coalesce(1)
         .write.format("xlsx")
@@ -99,8 +94,7 @@ def append_to_workbook(
     )
     if sheet_name:
         writer = writer.option("sheetName", sheet_name)
-    writer.save(tmp)
-    os.replace(tmp, path)
+    writer.save(path)
 
 
 def write_sheets(

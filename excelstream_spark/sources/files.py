@@ -41,11 +41,20 @@ reprocessing everything in the directory would silently follow.
 Progress lives entirely in the checkpointed offset, so ``commit`` keeps
 the base class's no-op.
 
-How a batch sink publishes (``PartFileWriter``): each task writes one
-``part-{pid:05d}-{uuid8}{ext}`` file; an overwrite first removes the
-``part-`` files the format reads; commit() writes ``_SUCCESS`` holding
-``rows=N``; abort() removes the task files, so a failed job leaves no
-partial output visible.
+How a sink publishes (``PartFileWriter``): by rename, once.  The writer
+draws a job id when Spark builds it on the driver, and Spark pickles that
+writer to every task and to commit(), so all of them see the same id.
+Each task attempt writes a dot-prefixed temp that no reader lists,
+``.tmp-{job}-{uuid8}-part-{pid:05d}{ext}``, and hands commit() its
+name and partition id.  commit() alone publishes: on overwrite it first
+removes the previous ``part-`` files the format reads, then renames each
+message's temp to its final name (``part-{pid:05d}-{job}{ext}``, or the
+target path itself for a single-file sink), removes this job's other
+temps (those of failed, lost or speculative attempts) and writes
+``_SUCCESS`` holding ``rows=N``.  abort() removes this job's temps.  A
+retried task therefore publishes once, and a failed overwrite leaves the
+previous output in place and readable.  A stream sink renames to its
+own names under the same protocol (xlsx ``XlsxStreamWriter``).
 
 How a source is registered and checks its options (``FileDataSource``,
 ``register``): any option key outside the source's ``OPTIONS`` (and the
@@ -237,41 +246,70 @@ def partition_id() -> int:
 
 
 class FileCommitMessage(WriterCommitMessage):
-    def __init__(self, file: str, rows: int, pid: int = 0):
+    """A task's hand-over to commit(): its temp ``file`` ("" when it
+    wrote none), its ``rows`` and the partition ``pid`` naming its part."""
+
+    def __init__(self, file: str, rows: int, pid: int):
         self.file = file
         self.rows = rows
         self.pid = pid
 
 
-def remove_task_files(messages) -> None:
-    """Abort: remove the files the tasks wrote."""
-    for m in messages:
-        if m is not None and m.file and os.path.exists(m.file):
-            os.remove(m.file)
-
-
 class PartFileWriter:
-    """A batch sink's part-file protocol (module docstring), for a sink
-    whose ``path`` attribute is its output directory."""
+    """A file sink's publish-by-rename (module docstring).  The sink calls
+    ``_init_output`` when it is built and names the format's reader
+    ``patterns``, which an overwrite removes as ``part-`` files."""
 
-    path: str
+    patterns: tuple[str, ...] = ()
 
-    def _open_output_dir(self, patterns: tuple[str, ...], overwrite: bool) -> None:
-        # driver-side: Spark's planner has already handled the
-        # overwrite/errorifexists decision before constructing the writer
-        if overwrite and os.path.isdir(self.path):
-            for pat in patterns:
-                for f in glob.glob(os.path.join(self.path, "part-" + pat)):
-                    os.remove(f)
-        os.makedirs(self.path, exist_ok=True)
+    def _init_output(
+        self, path: str, ext: str, overwrite: bool = False,
+        single_file: bool = False, job: str | None = None,
+    ) -> None:
+        #: the output directory, or with ``single_file`` the one target
+        self.path = path
+        self.ext = ext
+        self.overwrite = overwrite
+        self.single_file = single_file
+        self.out_dir = os.path.dirname(os.path.abspath(path)) if single_file else path
+        self.job = job or uuid.uuid4().hex[:8]
+        os.makedirs(self.out_dir, exist_ok=True)
 
-    def _part_file(self, pid: int, ext: str) -> str:
-        return os.path.join(self.path, f"part-{pid:05d}-{uuid.uuid4().hex[:8]}{ext}")
+    def _temp_file(self) -> tuple[str, int]:
+        """This task attempt's temp file and its partition id."""
+        pid = partition_id()
+        name = f".tmp-{self.job}-{uuid.uuid4().hex[:8]}-part-{pid:05d}{self.ext}"
+        return os.path.join(self.out_dir, name), pid
+
+    def _glob(self, *patterns: str) -> list[str]:
+        where = glob.escape(self.out_dir)
+        return [f for pat in patterns for f in glob.glob(os.path.join(where, pat))]
+
+    def _publish(self, messages, final_path, stale=()) -> None:
+        """Remove the ``stale`` files, rename each message's temp to
+        ``final_path(pid)``, then remove this job's other temps."""
+        for f in stale:
+            os.remove(f)
+        for m in messages:
+            if m is not None and m.file:
+                os.replace(m.file, final_path(m.pid))
+        self._remove_temps()
+
+    def _remove_temps(self) -> None:
+        for f in self._glob(f".tmp-{self.job}-*"):
+            os.remove(f)
 
     def commit(self, messages) -> None:
+        if self.single_file:
+            return self._publish(messages, lambda pid: self.path)
+        old = self._glob(*("part-" + pat for pat in self.patterns)) if self.overwrite else []
+        self._publish(
+            messages,
+            lambda pid: os.path.join(self.path, f"part-{pid:05d}-{self.job}{self.ext}"),
+            old,
+        )
         with open(os.path.join(self.path, "_SUCCESS"), "w") as f:
-            total = sum(m.rows for m in messages if m is not None)
-            f.write(f"rows={total}\n")
+            f.write(f"rows={sum(m.rows for m in messages if m is not None)}\n")
 
     def abort(self, messages) -> None:
-        remove_task_files(messages)
+        self._remove_temps()

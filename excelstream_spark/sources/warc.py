@@ -31,7 +31,7 @@ Fixed read schema (payload stays ``binary`` — losslessness first,
     payload binary
 
 Write path: each task streams its partition into one
-``part-NNNNN-<uuid>.warc.gz`` with EACH RECORD ITS OWN GZIP MEMBER —
+``part-NNNNN-<job8>.warc.gz`` with EACH RECORD ITS OWN GZIP MEMBER —
 the Common Crawl convention, which keeps records independently
 seekable/splittable downstream.  ``Content-Length`` is the exact UTF-8
 byte length of the payload.  The expected input schema is a ``payload``
@@ -39,14 +39,16 @@ column (string or binary; option ``payloadCol`` renames) plus optional
 ``record_id`` / ``target_uri`` / ``warc_date`` / ``content_type`` /
 ``warc_type`` columns; absent headers get deterministic defaults (no
 wall-clock reads — a re-run writes identical bytes, the house
-reproducibility rule).  commit() writes _SUCCESS; abort() removes the
-task's file, so a failed job never leaves half-archives visible.
+reproducibility rule).  Parts are published by the file-source core's
+rename at commit (files.py), so a failed job never leaves half-archives
+visible, a retried task publishes once, and a failed overwrite keeps the
+previous archives.
 
 The source also implements a STREAM reader: ``spark.readStream
 .format("warc")`` watches a directory and processes each new archive
 exactly once (the incremental-crawl ingest form), yielding the batch
-reader's Arrow batches.  Path listing, stream offsets, the part-file
-protocol and registration are the file-source core's (files.py),
+reader's Arrow batches.  Path listing, stream offsets, how the sink
+publishes and registration are the file-source core's (files.py),
 shared with the xlsx source.
 
 Options (read):  ``path`` (a file, directory or glob: a directory lists
@@ -82,7 +84,6 @@ from excelstream_spark.sources.files import (
     PartFileWriter,
     input_files,
     local_path,
-    partition_id,
     register,
 )
 
@@ -255,6 +256,8 @@ class WarcReader(DataSourceReader):
 
 
 class WarcWriter(PartFileWriter, DataSourceWriter):
+    patterns = WarcReader.patterns
+
     def __init__(self, schema: T.StructType, options, overwrite: bool):
         self.schema_ = schema
         self.path = local_path(options.get("path") or "")
@@ -273,7 +276,7 @@ class WarcWriter(PartFileWriter, DataSourceWriter):
                 f"(option('payloadCol', ...) to rename); schema has {names}"
             )
         self.idx = {n: i for i, n in enumerate(names)}
-        self._open_output_dir(WarcReader.patterns, overwrite)
+        self._init_output(self.path, ".warc.gz" if self.gz else ".warc", overwrite)
 
     def _record(self, row, rownum: int, pid: int) -> bytes:
         payload = row[self.idx[self.payload_col]]
@@ -316,10 +319,9 @@ class WarcWriter(PartFileWriter, DataSourceWriter):
         return buf.getvalue()
 
     def write(self, iterator) -> FileCommitMessage:
-        pid = partition_id()
-        target = self._part_file(pid, ".warc.gz" if self.gz else ".warc")
+        temp, pid = self._temp_file()
         n = 0
-        with open(target, "wb") as out:
+        with open(temp, "wb") as out:
             for row in iterator:
                 rec = self._record(row, n, pid)
                 if self.gz:
@@ -331,7 +333,8 @@ class WarcWriter(PartFileWriter, DataSourceWriter):
                 else:
                     out.write(rec)
                 n += 1
-        return FileCommitMessage(file=target, rows=n)
+        return FileCommitMessage(temp, n, pid)
+
 
 def register_warc(spark) -> None:
     """Idempotently register the warc format on this session

@@ -8,16 +8,21 @@ Read path (reference S1-S5 semantics, Spark-shaped):
   so parallelism comes from many files / many sheets.  A directory of
   part-workbooks written by this sink is therefore read fully in parallel.
 
-Path listing, stream offsets, the batch sink's part files and _SUCCESS,
-registration and the unknown-option warning are the file-source core's
-(files.py), shared with the warc source.
+Path listing, stream offsets, how a sink publishes, registration and
+the unknown-option warning are the file-source core's (files.py), shared
+with the warc source.
 
 Write path (reference K1-K8): each partition streams one part-workbook
-(``part-NNNNN-<uuid8>.xlsx``) with constant memory.
+with constant memory into a hidden temp, and the job's commit renames
+every temp to ``part-NNNNN-<job8>.xlsx`` (one job id per write), so a
+retried or speculative task publishes once.  An overwrite removes the
+previous parts at that commit, so a failed overwrite keeps the old
+output readable.
 The batch and the stream sink are Arrow writers: every column type and
 every option goes through the one columnar encoder (batch_write.py).
 ``singleFile=true`` + a single partition (coalesce(1)) emits exactly the
-target path as one workbook — the Excel-openable mode.
+target path as one workbook — the Excel-openable mode; its commit renames
+the temp over the target, so the path only ever holds a whole workbook.
 
 Options (read):  path (a file, directory or glob, listed by
   files.input_files; ``load([a, b])`` reads every path, and the schema
@@ -43,8 +48,8 @@ The source also implements a STREAM reader: ``spark.readStream
 exactly once (files.FileStreamReader: offsets = the processed-file set,
 checkpointed; bound them with maxFileAgeSec), and a STREAM writer:
 ``df.writeStream.format("xlsx")`` lands each micro-batch as deterministic
-``batch-<id>-part-<pid>.xlsx`` workbooks (idempotent on replay, temp
-files invisible to readers).  Note Spark's PythonMicroBatchStream executes availableNow as a single batch
+``batch-<id>-part-<pid>.xlsx`` workbooks, renamed from hidden temps at
+the batch's commit under the same protocol (idempotent on replay).  Note Spark's PythonMicroBatchStream executes availableNow as a single batch
 per run — incremental pickup across restarts is exact either way.
 
 Options (write): sheetName, header (default true), compression (0-9,
@@ -62,11 +67,9 @@ Any other option key is ignored with a UserWarning naming it.
 
 from __future__ import annotations
 
-import glob
 import itertools
 import os
 import re
-import uuid
 import warnings
 
 from pyspark.sql.datasource import (
@@ -83,9 +86,7 @@ from excelstream_spark.sources.files import (
     PartFileWriter,
     input_files,
     local_path,
-    partition_id,
     register,
-    remove_task_files,
 )
 from excelstream_spark.sources.xlsx.reader_core import (
     WorkbookReader,
@@ -381,61 +382,42 @@ class _XlsxWriteOptions:
 
 class XlsxWriter(_XlsxWriteOptions, PartFileWriter, DataSourceArrowWriter):
     """Batch sink: Spark ships Arrow RecordBatches to the worker (no
-    per-row pickling) and each task streams them into one part-workbook
-    (files.PartFileWriter); maxRowsPerSheet auto-splits by slicing
-    batches at the sheet boundary."""
+    per-row pickling) and each task streams them into one part-workbook,
+    published by files.PartFileWriter; singleFile publishes the one task's
+    workbook as the target path itself.  maxRowsPerSheet auto-splits by
+    slicing batches at the sheet boundary."""
+
+    patterns = XlsxReader.patterns
 
     def __init__(self, schema: T.StructType, options, overwrite: bool):
         self._init_write_options(schema, options)
-        self.single_file = _truthy(options.get("singlefile"), False)
-        if self.single_file:
-            parent = os.path.dirname(os.path.abspath(self.path))
-            os.makedirs(parent, exist_ok=True)
-            if overwrite and os.path.exists(self.path):
-                os.remove(self.path)
-        else:
-            self._open_output_dir(XlsxReader.patterns, overwrite)
-
-    def _target_path(self) -> str:
-        pid = partition_id()
-        if self.single_file:
-            if pid != 0:
-                raise ValueError(
-                    "singleFile=true requires exactly one partition — "
-                    "coalesce(1) / repartition(1) before writing"
-                )
-            # write to a temp sibling; commit() renames atomically so a
-            # mid-write task failure or retry never leaves a truncated
-            # workbook at the destination
-            return f"{self.path}.__tmp-{uuid.uuid4().hex[:8]}"
-        return self._part_file(pid, ".xlsx")
+        self._init_output(
+            self.path, ".xlsx", overwrite, _truthy(options.get("singlefile"), False)
+        )
 
     def write(self, iterator) -> FileCommitMessage:
-        target = self._target_path()
-        n = self._write_workbook(target, iterator)
-        return FileCommitMessage(file=target, rows=n)
-
-    def commit(self, messages) -> None:
-        if self.single_file:
-            for m in messages:
-                if m is not None:
-                    os.replace(m.file, self.path)  # atomic publish
-        else:
-            super().commit(messages)
+        temp, pid = self._temp_file()
+        if self.single_file and pid != 0:
+            raise ValueError(
+                "singleFile=true requires exactly one partition — "
+                "coalesce(1) / repartition(1) before writing"
+            )
+        return FileCommitMessage(temp, self._write_workbook(temp, iterator), pid)
 
 
-class XlsxStreamWriter(_XlsxWriteOptions, DataSourceStreamArrowWriter):
+class XlsxStreamWriter(_XlsxWriteOptions, PartFileWriter, DataSourceStreamArrowWriter):
     """Micro-batch xlsx sink: ``writeStream.format("xlsx")``.
 
-    Each task streams its partition into a DOT-PREFIXED temp workbook
-    (invisible to this source's readers, which skip ``_``/``.`` files);
+    Each task streams its partition into a temp workbook and
     ``commit(messages, batchId)`` renames them to deterministic
-    ``batch-<batchId>-part-<pid>.xlsx`` names.  Deterministic names make
-    a REPLAYED commit (crash between sink commit and checkpoint write)
-    overwrite its own files instead of duplicating rows — the same
+    ``batch-<batchId>-part-<pid>.xlsx`` names (files.PartFileWriter's
+    temps, rename and sweep).  pyspark builds a new stream writer for each
+    commit, so the job id is the fixed ``stream``: every commit sweeps
+    the temps any earlier attempt or crashed batch left.  Deterministic
+    names make a REPLAYED commit (crash between sink commit and checkpoint
+    write) overwrite its own files instead of duplicating rows — the same
     idempotence the built-in file sink gets from its metadata log,
-    without requiring readers to consult one.  A crash before commit
-    leaves only dotfile temps, swept by the next successful commit.
+    without requiring readers to consult one.
 
     The batch directory composes with the batch/streaming readers: the
     whole output stays one parallel-readable workbook directory.
@@ -453,50 +435,28 @@ class XlsxStreamWriter(_XlsxWriteOptions, DataSourceStreamArrowWriter):
     def __init__(self, schema: T.StructType, options, truncate: bool = False):
         self._init_write_options(schema, options)
         self.truncate = truncate
-        os.makedirs(self.path, exist_ok=True)
-
-    def _tmp_target(self) -> tuple[str, int]:
-        pid = partition_id()
-        tmp = os.path.join(
-            self.path, f".tmp-{uuid.uuid4().hex[:8]}-part-{pid:05d}.xlsx"
-        )
-        return tmp, pid
+        self._init_output(self.path, ".xlsx", job="stream")
 
     def write(self, iterator) -> FileCommitMessage:
-        tmp, pid = self._tmp_target()
-        n = self._write_workbook(tmp, iterator)
-        if n == 0:  # empty partition: no part file
-            os.remove(tmp)
-            return FileCommitMessage(file="", rows=0, pid=pid)
-        return FileCommitMessage(file=tmp, rows=n, pid=pid)
+        temp, pid = self._temp_file()
+        n = self._write_workbook(temp, iterator)
+        # an empty partition publishes no part; commit sweeps its temp
+        return FileCommitMessage(temp if n else "", n, pid)
 
     def commit(self, messages, batchId: int) -> None:
         # replay hygiene: a replayed batch may produce FEWER partitions
         # than the crashed attempt published — clear this batch's prior
-        # parts so orphans cannot duplicate rows
-        for stale in glob.glob(
-            os.path.join(self.path, f"batch-{batchId:08d}-part-*.xlsx")
-        ):
-            os.remove(stale)
-        if self.truncate:  # complete mode: output = this batch only
-            for old in glob.glob(os.path.join(self.path, "batch-*.xlsx")):
-                os.remove(old)
-        for m in messages:
-            if m is None or not m.file:
-                continue
-            final = os.path.join(
-                self.path, f"batch-{batchId:08d}-part-{m.pid:05d}.xlsx"
-            )
-            os.replace(m.file, final)
-        # sweep temps from crashed earlier attempts of ANY batch
-        for stale in glob.glob(os.path.join(self.path, ".tmp-*.xlsx")):
-            try:
-                os.remove(stale)
-            except OSError:
-                pass
+        # parts so orphans cannot duplicate rows; complete mode clears
+        # every batch, so the output is this batch only
+        prefix = "batch-" if self.truncate else f"batch-{batchId:08d}-part-"
+        self._publish(
+            messages,
+            lambda pid: os.path.join(self.path, f"batch-{batchId:08d}-part-{pid:05d}.xlsx"),
+            self._glob(prefix + "*.xlsx"),
+        )
 
     def abort(self, messages, batchId: int) -> None:
-        remove_task_files(messages)
+        self._remove_temps()
 
 
 def register_xlsx(spark) -> None:

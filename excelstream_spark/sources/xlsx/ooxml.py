@@ -34,17 +34,6 @@ def letter_to_index(letters: str) -> int:
     return result - 1
 
 
-_CELL_REF_RE = re.compile(r"([A-Z]+)(\d+)")
-
-
-def parse_cell_ref(ref: str) -> tuple[int, int]:
-    """'B3' -> (row 2, col 1), 0-based."""
-    m = _CELL_REF_RE.match(ref)
-    if not m:
-        raise ValueError(f"bad cell ref: {ref!r}")
-    return int(m.group(2)) - 1, letter_to_index(m.group(1))
-
-
 # --- XML escaping ---------------------------------------------------------
 
 _ESC = {"&": "&amp;", "<": "&lt;", ">": "&gt;", '"': "&quot;", "'": "&apos;"}
@@ -70,12 +59,6 @@ def esc(text: str) -> str:
             text = text.replace(ch, rep)
     if "\r" in text:
         text = text.replace("\r", "&#13;")
-    return text
-
-
-def unesc(text: str) -> str:
-    for ch, rep in _ESC.items():
-        text = text.replace(rep, ch)
     return text
 
 

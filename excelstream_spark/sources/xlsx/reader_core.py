@@ -22,7 +22,6 @@ from __future__ import annotations
 
 import datetime as dt
 import functools
-import re
 import zipfile
 from collections.abc import Iterator
 from xml.etree.ElementTree import iterparse
@@ -376,9 +375,6 @@ def merge_schemas(schemas: list[T.StructType]) -> T.StructType:
 
 
 # -- schema inference ------------------------------------------------------
-
-_SAFE_NAME_RE = re.compile(r"[^0-9a-zA-Z_]")
-
 
 def _merge_type(acc: str | None, value) -> str | None:
     """Per-column type lattice: long < double; bool / timestamp / string

@@ -5,6 +5,7 @@ Spark-specific surface (partitioned writes, schema inference, options)."""
 from __future__ import annotations
 
 import datetime as dt
+import os
 import zipfile
 
 import pytest
@@ -352,17 +353,18 @@ def test_max_rows_per_sheet_option_roundtrip(spark, tmp_path):
     assert got == [(i, 2 * i) for i in range(17)]
 
 
-def test_single_file_write_is_atomic(spark, tmp_path):
-    """singleFile publishes via temp + rename: no *.__tmp-* litter on
-    success and the destination only ever appears complete."""
-    import glob as g
-
+def test_single_file_write_is_atomic(spark, tmp_path, retried_writes):
+    """singleFile publishes by renaming its temp over the target: after a
+    clean write, and after one whose task failed its first attempt
+    part-way, the target's directory holds the target alone (the rows of
+    the retried write are checked in test_files.py)."""
     out = str(tmp_path / "atomic.xlsx")
     spark.range(5).coalesce(1).write.mode("overwrite").format("xlsx").option(
         "singleFile", True
     ).save(out)
-    assert g.glob(str(tmp_path / "*.__tmp-*")) == []
+    assert os.listdir(tmp_path) == ["atomic.xlsx"]
     assert spark.read.format("xlsx").load(out).count() == 5
+    assert os.listdir(os.path.join(retried_writes, "single")) == ["out.xlsx"]
 
 
 def test_workbook_reader_lazy_sst(tmp_path):
@@ -1078,9 +1080,8 @@ def test_scanner_fast_path_covers_sink_output(tmp_path, monkeypatch):
         [pa.array(c, type=f.type) for c, f in zip(cols, pa_schema)], schema=pa_schema
     )
     out = str(tmp_path / "typed")
-    XlsxWriter(schema, {"path": out}, overwrite=True).write(
-        iter([batch.slice(i, 1000) for i in range(0, n, 1000)])
-    )
+    writer = XlsxWriter(schema, {"path": out}, overwrite=True)
+    writer.commit([writer.write(iter([batch.slice(i, 1000) for i in range(0, n, 1000)]))])
     [part] = glob.glob(out + "/part-*.xlsx")
     read_schema = XlsxDataSource({"path": out}).schema()
     expected = _rows_via_row_reader(part, "Sheet1", read_schema, header=True)
