@@ -12,14 +12,24 @@ read existing sheet + union + rewrite.
 
 ``write_sheets`` streams several DataFrames into ONE workbook (driver-side
 via toLocalIterator — bounded memory, for human-sized workbooks; the
-distributed path is one directory per table).
+distributed path is one directory per table).  Each chunk of Rows goes
+back to Arrow and through the sink's encoder, so its cells are the
+sink's, timestamps included: each is written as its wall clock in the
+session zone (xlsx/dates.py), whatever the driver process's zone.  It
+writes a hidden temp beside ``path`` and publishes it by one rename
+(files.PartFileWriter), so a failed query leaves the old workbook.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from itertools import islice
 
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.conversion import LocalDataToArrowConversion
+
+from excelstream_spark.sources.files import FileCommitMessage, PartFileWriter
 from excelstream_spark.sources.xlsx import register_xlsx
+from excelstream_spark.sources.xlsx.dates import in_session_zone
 from excelstream_spark.sources.xlsx.writer_core import WorkbookWriter
 
 
@@ -49,19 +59,6 @@ def parquet_to_excel(
         .mode("overwrite")
         .option("header", header)
         .options(**options)
-        .save(dst)
-    )
-
-
-def csv_to_excel(
-    spark: SparkSession, src: str, dst: str, header: bool = True, **options
-) -> None:
-    register_xlsx(spark)
-    (
-        spark.read.options(header=header, inferSchema=True, **options)
-        .csv(src)
-        .write.format("xlsx")
-        .mode("overwrite")
         .save(dst)
     )
 
@@ -103,13 +100,26 @@ def write_sheets(
     header: bool = True,
     compression: int = 6,
 ) -> None:
-    """Several DataFrames -> one multi-sheet workbook (driver-streamed)."""
-    with WorkbookWriter(path, compression=compression) as wb:
-        for name, df in dfs.items():
-            wb.add_sheet(name)
-            if header:
-                wb.write_header(df.columns)
-            # rows, not one Arrow collect as sources/http.py does: there
-            # is no row bound here, so a collect would be unbounded
-            for row in df.toLocalIterator():
-                wb.write_row(list(row))
+    """Several DataFrames -> one multi-sheet workbook (driver-streamed,
+    published by rename; module docstring)."""
+    out = PartFileWriter()
+    out._init_output(path, ".xlsx", single_file=True)
+    temp, pid = out._temp_file()
+    try:
+        with WorkbookWriter(temp, compression=compression) as wb:
+            for name, df in dfs.items():
+                wb.add_sheet(name)
+                if header:
+                    wb.write_header(df.columns)
+                # rows, not one Arrow collect as sources/http.py does: there
+                # is no row bound here, so a collect would be unbounded
+                rows = df.toLocalIterator()
+                while chunk := list(islice(rows, 4096)):
+                    table = LocalDataToArrowConversion.convert(chunk, df.schema, False)
+                    wb.write_arrow_batches(
+                        in_session_zone(table, df.sparkSession).to_batches(), df.schema
+                    )
+    except BaseException:
+        out.abort([])
+        raise
+    out.commit([FileCommitMessage(temp, 0, pid)])

@@ -15,14 +15,17 @@ through WorkbookWriter.write_arrow_batches (the sink's encoder), csv by
 building each column's text in bulk for the stdlib csv writer, with
 array/map/struct/binary columns as the text of their Row values
 (batch_write.row_text) — giving the same bytes the row path gives for
-the same rows.
+the same rows, timestamps aside.  Timestamps follow the package's one
+rule (xlsx/dates.py): the fetched data is labelled with the session
+zone once, and every timestamp, top level or nested, is written as its
+wall clock in that zone, as the sink writes it, whatever the driver
+process's own zone.
 
 The row path (``toLocalIterator`` — one job per partition, rows streamed
-under the same guard, cells encoded one by one) serves only any row
-source that is not a DataFrame (anything offering ``columns`` and
-``toLocalIterator``), a frame with no columns, and a frame with a
-top-level timestamp column when the driver process's time zone is not
-UTC (Rows carry that zone's wall clock; Arrow carries UTC instants).
+under the same guard, cells encoded one by one) serves only a row source
+that is not a DataFrame (anything offering ``columns`` and
+``toLocalIterator``) and a frame with no columns.  Its timestamps are
+the Rows' own values.
 
 For big exports the pattern is IMPLEMENTED below (``export_presigned`` /
 ``serve_dataframe``): write distributed to object storage and hand out
@@ -34,7 +37,6 @@ from __future__ import annotations
 import csv
 import gzip
 import io
-import time
 
 import numpy as np
 import pyarrow as pa
@@ -42,11 +44,8 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from excelstream_spark.sources.xlsx.batch_write import (
-    decimal_text,
-    row_text,
-    wall_clock,
-)
+from excelstream_spark.sources.xlsx.batch_write import decimal_text, row_text
+from excelstream_spark.sources.xlsx.dates import in_session_zone, wall_clock
 from excelstream_spark.sources.xlsx.writer_core import WorkbookWriter
 
 XLSX_CONTENT_TYPE = (
@@ -82,12 +81,7 @@ def _iter_rows_bounded(df, max_rows: int):
 
 def _fetches_as_arrow(df) -> bool:
     """Whether ``df`` takes the Arrow path (module docstring)."""
-    if not isinstance(df, DataFrame) or not df.columns:
-        return False
-    local_is_utc = time.timezone == 0 and not time.daylight
-    return local_is_utc or not any(
-        isinstance(f.dataType, T.TimestampType) for f in df.schema.fields
-    )
+    return isinstance(df, DataFrame) and bool(df.columns)
 
 
 def _arrow_batches(df, max_rows: int) -> list[pa.RecordBatch] | None:
@@ -98,13 +92,14 @@ def _arrow_batches(df, max_rows: int) -> list[pa.RecordBatch] | None:
     table = df.limit(max_rows + 1).toArrow()
     if table.num_rows > max_rows:
         raise _too_large(max_rows)
-    return table.to_batches()
+    return in_session_zone(table, df.sparkSession).to_batches()
 
 
 def _csv_text(col: pa.Array, dtype: T.DataType) -> list[str]:
     """One column's cells as the text csv.writer makes of the row path's
     values: ``str()`` of the Python value a Spark Row carries, "" for
-    null."""
+    null; timestamps as wall clocks (module docstring)."""
+    col = wall_clock(col)
     if isinstance(dtype, T.BooleanType):
         vals = pc.fill_null(col, False).to_numpy(zero_copy_only=False)
         text = np.where(vals, "True", "False")
@@ -119,9 +114,7 @@ def _csv_text(col: pa.Array, dtype: T.DataType) -> list[str]:
             col = decimal_text(col)
         elif isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
             # str(datetime) drops an all-zero fraction; Arrow always prints it
-            col = pc.replace_substring_regex(
-                wall_clock(col).cast(pa.string()), r"\.000000$", ""
-            )
+            col = pc.replace_substring_regex(col.cast(pa.string()), r"\.000000$", "")
         elif isinstance(dtype, (T.StringType, T.DateType)):
             col = col.cast(pa.string())
         else:

@@ -144,6 +144,8 @@ _ARROW_TYPES = {
     T.StringType(): pa.string(),
     T.DateType(): pa.date32(),
     T.TimestampNTZType(): pa.timestamp("us"),
+    # wall clocks labelled UTC; XlsxReader.read maps them to the instants
+    # they name in the session zone (dates.instants)
     T.TimestampType(): pa.timestamp("us", tz="UTC"),
     T.BinaryType(): pa.binary(),
 }

@@ -21,13 +21,17 @@ column only — same output, still one join.  Combined with
 DataSourceArrowWriter feeding the sink Arrow batches (no per-row pickle
 across the JVM boundary), this is the write-side mirror of batch_scan.py.
 
-Semantics are exactly write_row's over the Rows pyspark makes of the
-same batch, by construction and by byte-equality test (tests/
-test_xlsx.py): same cell XML for every type (array/map/struct/binary
-and the like as their Row values' text, ``row_text``), same ``r=``
-refs, same null cells, same escaping via the same ooxml.esc, and in
-shared-strings mode the same table.  Every sink and every DataFrame
-export encodes Arrow data through this module.
+Semantics are write_row's over the Rows pyspark makes of the same
+batch, by construction and by byte-equality test (tests/test_xlsx.py):
+same cell XML for every type (array/map/struct/binary and the like as
+their Row values' text, ``row_text``), same ``r=`` refs, same null
+cells, same escaping via the same ooxml.esc, and in shared-strings mode
+the same table.  Timestamps are the one deliberate difference: every
+timestamp, top level or nested, is first mapped to its wall clock in
+the zone its Arrow type names (``dates.wall_clock``, the session zone),
+where pyspark's Rows would localize nested values in the worker
+process's zone.  Every sink and every DataFrame export encodes Arrow
+data through this module.
 """
 
 from __future__ import annotations
@@ -43,7 +47,11 @@ from pyspark.sql import types as T
 from pyspark.sql.conversion import ArrowTableToRowsConversion
 
 from excelstream_spark.sources.xlsx import ooxml
-from excelstream_spark.sources.xlsx.dates import EPOCH_1970_SERIAL, US_PER_DAY
+from excelstream_spark.sources.xlsx.dates import (
+    EPOCH_1970_SERIAL,
+    US_PER_DAY,
+    wall_clock,
+)
 
 #: Spark types write_row gives a cell kind of their own; a decimal or any
 #: other column is written as string cells of its text (``_as_cells``)
@@ -104,11 +112,31 @@ def decimal_text(col: pa.Array) -> pa.Array:
     return pa.array(out, pa.string())
 
 
+def _naive(dtype: T.DataType) -> T.DataType:
+    """``dtype`` with every nested ``timestamp`` typed ``timestamp_ntz``."""
+    if isinstance(dtype, T.TimestampType):
+        return T.TimestampNTZType()
+    if isinstance(dtype, T.StructType):
+        return T.StructType([
+            T.StructField(f.name, _naive(f.dataType), f.nullable) for f in dtype.fields
+        ])
+    if isinstance(dtype, T.ArrayType):
+        return T.ArrayType(_naive(dtype.elementType), dtype.containsNull)
+    if isinstance(dtype, T.MapType):
+        return T.MapType(
+            _naive(dtype.keyType), _naive(dtype.valueType), dtype.valueContainsNull
+        )
+    return dtype
+
+
 def row_text(col: pa.Array, dtype: T.DataType) -> pa.Array:
     """Column of any other type (array, map, struct, binary, void, UDT,
-    variant) -> ``str()`` of the value pyspark's Arrow-to-Row conversion
-    gives each cell (binary as bytes, its default); null stays null."""
-    one = T.StructType([T.StructField("c", dtype)])
+    variant), its timestamps already wall clocks (``wall_clock``) ->
+    ``str()`` of the value pyspark's Arrow-to-Row conversion gives each
+    cell (binary as bytes, its default); null stays null.  Typing those
+    timestamps ``timestamp_ntz`` keeps the conversion from localizing
+    them again."""
+    one = T.StructType([T.StructField("c", _naive(dtype))])
     rows = ArrowTableToRowsConversion.convert(
         pa.table({"c": col}), one, return_as_tuples=True
     )
@@ -116,8 +144,10 @@ def row_text(col: pa.Array, dtype: T.DataType) -> pa.Array:
 
 
 def _as_cells(col: pa.Array, dtype: T.DataType) -> tuple[pa.Array, T.DataType]:
-    """The column as write_row types its values: a decimal or any type
-    without a cell kind of its own becomes a string column of its text."""
+    """The column as write_row types its values, its timestamps as wall
+    clocks: a decimal or any type without a cell kind of its own becomes a
+    string column of its text."""
+    col = wall_clock(col)
     if isinstance(dtype, _CELL_TYPES):
         return col, dtype
     if isinstance(dtype, T.DecimalType):
@@ -138,15 +168,6 @@ def _shared_indices(sst, cols: list[tuple[pa.Array, T.DataType]], n: int) -> lis
             if v is not None and not v.startswith("="):
                 out[r] = sst.index_for(v)
     return idx
-
-
-def wall_clock(col: pa.Array) -> pa.Array:
-    """Timestamp column -> naive wall-clock values: a tz-aware column is
-    localized to its own zone (the row path receives local wall-clock
-    datetimes, not UTC instants); a naive one is returned as is."""
-    if getattr(col.type, "tz", None):
-        return pc.local_timestamp(col)
-    return col
 
 
 def _null_mask(col: pa.Array) -> np.ndarray:
@@ -244,10 +265,8 @@ def _append_column(
         s = f' s="{style}"' if style is not None else f' s="{ooxml.STYLE_DATE}"'
         out.cell(letter, f'"{s}><v>', serial.astype("U32").tolist(), nulls, "</v></c>")
     elif isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
-        # tz-aware columns: serialize the LOCAL timestamp, not the UTC
-        # instant (equal under the library default UTC session, divergent
-        # otherwise)
-        micros = pc.fill_null(wall_clock(col).cast(pa.int64()), 0).to_numpy()
+        # already a wall clock (_as_cells)
+        micros = pc.fill_null(col.cast(pa.int64()), 0).to_numpy()
         serial, in_day = _serial_parts(micros)
         body = serial.astype("U32").tolist()
         if style is not None:  # explicit style (0 included) — row-path parity

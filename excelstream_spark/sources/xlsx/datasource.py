@@ -40,8 +40,11 @@ Options (read):  path (a file, directory or glob, listed by
   maxFileAgeSec (stream reads).
   Readable column types: bigint, int, smallint, tinyint, double, float,
   boolean, string, date, timestamp, timestamp_ntz, binary; any other
-  declared type fails on the driver.  Every read goes through the
-  columnar scanner (batch_scan.py); Spark applies filters after the scan.
+  declared type fails on the driver.  A cell holds a wall clock: a
+  declared timestamp column reads it in the session zone, and the sinks
+  write each timestamp as the session zone's wall clock (dates.py).
+  Every read goes through the columnar scanner (batch_scan.py); Spark
+  applies filters after the scan.
 
 The source also implements a STREAM reader: ``spark.readStream
 .format("xlsx")`` watches a directory and processes each new workbook
@@ -88,6 +91,7 @@ from excelstream_spark.sources.files import (
     local_path,
     register,
 )
+from excelstream_spark.sources.xlsx.dates import instants, session_zone
 from excelstream_spark.sources.xlsx.reader_core import (
     WorkbookReader,
     infer_schema,
@@ -252,12 +256,19 @@ class XlsxReader(DataSourceReader):
         return parts
 
     def read(self, partition: XlsxPartition):
-        """Yields pyarrow RecordBatches from the columnar scanner
-        (batch_scan.py, ~4x the row reader).  When the scanner fails before
-        its first batch, or finds no rows where the row reader finds some
-        (e.g. a namespace-prefixed worksheet), the row reader's rows are
-        served and a RuntimeWarning names the file, sheet and cause.  On
-        either path ``limitRows`` counts scanned data rows."""
+        """Yields pyarrow RecordBatches, a declared ``timestamp`` column's
+        wall clocks read in the session zone (dates.instants)."""
+        zone = session_zone()
+        for batch in self._read_batches(partition):
+            yield instants(batch, zone)
+
+    def _read_batches(self, partition: XlsxPartition):
+        """The columnar scanner's batches (batch_scan.py, ~4x the row
+        reader).  When the scanner fails before its first batch, or finds
+        no rows where the row reader finds some (e.g. a namespace-prefixed
+        worksheet), the row reader's rows are served and a RuntimeWarning
+        names the file, sheet and cause.  On either path ``limitRows``
+        counts scanned data rows."""
         from excelstream_spark.sources.xlsx.batch_scan import BatchSheetReader
 
         cause = None

@@ -14,12 +14,32 @@ columns) are provided.  Unlike the reference, which formats to strings and
 rounds to whole seconds, we keep native timestamps at microsecond
 precision — the reference's behavior is a floor, not a spec (SURVEY.md
 §1.2).
+
+The one timestamp rule.  A serial carries no zone, so a cell holds a
+wall clock, and the package reads and writes every wall clock in the
+Spark session's time zone (``spark.sql.session.timeZone``).  This module
+is the only place that converts between instants and wall clocks:
+
+- ``wall_clock`` (every renderer: sink cells, nested-value text, HTTP
+  csv and xlsx bodies, ``write_sheets``) maps a timestamp column, top
+  level or nested in structs, lists and maps, to naive wall clocks in
+  the zone its Arrow type names.  The sink's batches arrive labelled
+  with the session zone; driver-side Arrow data (UTC-labelled by
+  pyspark) is relabelled with it first (``in_session_zone``).
+- ``instants`` (the reader) maps the wall clocks read for a declared
+  ``timestamp`` column back to instants in the session zone, by the rule
+  of Spark's ``CAST(timestamp_ntz AS timestamp)``: a wall clock in the
+  fall-back hour takes the earlier offset, and one inside a
+  spring-forward gap moves later by the gap's length.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+import os
+import re
 
+from pyspark import TaskContext
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -97,3 +117,136 @@ def timestamp_to_excel_serial(col) -> Column:
         86400.0 * 1e6
     )
     return F.when(days < 61, days - 1).otherwise(days)
+
+
+# --- the one timestamp rule (module docstring) ------------------------------
+#
+# pyarrow is imported inside these functions: the package imports this
+# module on the driver, where most sessions never need Arrow (the import
+# costs ~40 ms).
+
+
+def _with_tz(t: pa.DataType, tz: str | None) -> pa.DataType:
+    """``t`` with every zoned timestamp in it, however nested, labelled
+    ``tz`` (None: naive); naive timestamps stay naive."""
+    import pyarrow as pa
+
+    if pa.types.is_timestamp(t):
+        return pa.timestamp(t.unit, tz) if t.tz else t
+    if pa.types.is_struct(t):
+        return pa.struct([f.with_type(_with_tz(f.type, tz)) for f in t])
+    if pa.types.is_map(t):
+        return pa.map_(
+            t.key_field.with_type(_with_tz(t.key_type, tz)),
+            t.item_field.with_type(_with_tz(t.item_type, tz)),
+        )
+    if pa.types.is_list(t):
+        return pa.list_(t.value_field.with_type(_with_tz(t.value_type, tz)))
+    return t
+
+
+#: a fixed-offset zone as Spark accepts one ("Z", "+05:30", "-8",
+#: "GMT+8", "UTC-08:00"); pyarrow's zone database names none of them
+_FIXED_OFFSET_RE = re.compile(
+    r"(?:UTC|GMT|UT)?(?:Z|([+-])(\d\d?)(?::?(\d\d))?(?::?(\d\d))?)"
+)
+
+
+def _fixed_offset_us(zone: str) -> int | None:
+    """A fixed-offset zone's offset in microseconds (Spark's timestamp
+    unit), None for a region zone."""
+    m = _FIXED_OFFSET_RE.fullmatch(zone)
+    if m is None:
+        return None
+    sign, hours, minutes, seconds = m.groups()
+    if sign is None:
+        return 0
+    secs = int(hours) * 3600 + int(minutes or 0) * 60 + int(seconds or 0)
+    return (secs if sign == "+" else -secs) * 1_000_000
+
+
+def wall_clock(col: pa.Array) -> pa.Array:
+    """Column -> the same column with every zoned timestamp, top level or
+    nested, replaced by its naive wall clock in the zone its Arrow type
+    names; a column holding none is returned as is."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    naive = _with_tz(col.type, None)
+    if naive == col.type:
+        return col
+    if pa.types.is_timestamp(col.type):
+        offset = _fixed_offset_us(col.type.tz)
+        if offset is None:
+            return pc.local_timestamp(col)
+        return pc.add(col.cast(pa.int64()), offset).cast(naive)
+    if pa.types.is_struct(col.type):
+        children = [wall_clock(col.field(i)) for i in range(col.type.num_fields)]
+        mask = col.is_null() if col.null_count else None
+        return pa.StructArray.from_arrays(children, fields=list(naive), mask=mask)
+    # a list or map: its own validity and offsets over rebuilt values
+    return pa.Array.from_buffers(
+        naive, len(col), col.buffers()[:2], offset=col.offset,
+        children=[wall_clock(col.values)],
+    )
+
+
+def in_session_zone(data, spark):
+    """Driver-side Arrow ``data`` (a table, whose instants pyspark labels
+    UTC) labelled with ``spark``'s session zone: the same instants, so
+    ``wall_clock`` renders the session's wall clocks.  A cast that only
+    relabels copies no values."""
+    import pyarrow as pa
+
+    zone = spark.conf.get("spark.sql.session.timeZone")
+    schema = pa.schema([f.with_type(_with_tz(f.type, zone)) for f in data.schema])
+    return data if schema == data.schema else data.cast(schema)
+
+
+def session_zone() -> str:
+    """The session zone seen from a task: the query's
+    ``spark.sql.session.timeZone``, or, when the session never set it,
+    the JVM default zone Spark then uses, which the JVM takes from ``TZ``
+    and else from ``/etc/localtime`` (Python workers share the JVM's
+    environment)."""
+    ctx = TaskContext.get()
+    zone = ctx.getLocalProperty("spark.sql.session.timeZone") if ctx else None
+    if zone:
+        return zone
+    zone = os.environ.get("TZ", "").lstrip(":")
+    if zone:
+        return zone
+    link = os.path.realpath("/etc/localtime")
+    return link.split("/zoneinfo/", 1)[1] if "/zoneinfo/" in link else "UTC"
+
+
+def instants(batch: pa.RecordBatch, zone: str) -> pa.RecordBatch:
+    """The reader's inverse of ``wall_clock``: each zoned timestamp column
+    of ``batch`` holds wall clocks (labelled UTC, as the reader types
+    them); each becomes the instant its wall clock names in ``zone``,
+    by the rule in the module docstring."""
+    if zone == "UTC":
+        return batch
+    import pyarrow as pa
+
+    cols = [
+        _instants(c, zone) if pa.types.is_timestamp(c.type) and c.type.tz else c
+        for c in batch.columns
+    ]
+    return pa.RecordBatch.from_arrays(cols, schema=batch.schema)
+
+
+def _instants(col: pa.Array, zone: str) -> pa.Array:
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    offset = _fixed_offset_us(zone)
+    if offset is None:
+        # the offset in force just before any transition: the earlier one
+        # in the fall-back hour, the pre-gap one inside a spring-forward gap
+        wall = col.cast(pa.timestamp(col.type.unit))
+        first = pc.assume_timezone(wall, zone, ambiguous="earliest", nonexistent="earliest")
+        offset = pc.subtract(
+            pc.local_timestamp(first).cast(pa.int64()), first.cast(pa.int64())
+        )
+    return pc.subtract(col.cast(pa.int64()), offset).cast(col.type)

@@ -256,8 +256,8 @@ class WorkbookWriter:
         batch_write.batch_to_rows_xml, slicing each batch at the auto-split
         sheet boundary and sharing this writer's string table — the same
         rows, sheets, shared strings and bytes as write_row per row of the
-        Rows pyspark converts the batches to.  Returns the number of rows
-        written."""
+        Rows pyspark converts the batches to, timestamps written as wall
+        clocks (batch_write.py).  Returns the number of rows written."""
         from excelstream_spark.sources.xlsx.batch_write import batch_to_rows_xml
 
         n = 0

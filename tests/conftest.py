@@ -26,11 +26,12 @@ def spark():
     yield spark
 
 
-def run_in_retrying_session(code: str) -> None:
+def run_in_retrying_session(code: str, **env: str) -> None:
     """Run ``code`` in a child ``local[2,2]`` session, where a failed task
     gets a second attempt (the tests' own session never retries one).
-    ``spark`` is bound, the package imports, the UI is off; a failing
-    snippet fails the caller with the child's stderr."""
+    ``spark`` is bound, the package imports, the UI is off, ``env`` adds
+    to the child's environment; a failing snippet fails the caller with
+    the child's stderr."""
     prelude = (
         "from excelstream_spark.session import get_spark\n"
         "spark = get_spark('retry', **{'spark.ui.enabled': 'false'})\n"
@@ -40,6 +41,7 @@ def run_in_retrying_session(code: str) -> None:
         "PYTHONPATH": os.pathsep.join(filter(None, [ROOT, os.environ.get("PYTHONPATH")])),
         "SPARK_MASTER": "local[2,2]",
         "SPARK_GRAFT_DRIVER_MEM": "1g",
+        **env,
     }
     done = subprocess.run(
         [sys.executable, "-c", prelude + textwrap.dedent(code)],

@@ -155,20 +155,26 @@ def _typed_frame(spark):
 
 
 @pytest.mark.parametrize("tz", ["UTC", "America/New_York"])
-def test_http_arrow_export_matches_row_path(spark, tz):
-    """The one-fetch Arrow path writes exactly the row path's sheet XML
-    and csv bytes for the same ordered rows, under either session zone."""
+def test_http_arrow_export_matches_sink(spark, tmp_path, tz):
+    """Under either session zone, the one-fetch Arrow path writes exactly
+    the sink's sheet XML for the same ordered rows; without the zoned
+    column it also writes the row path's xlsx and csv bytes."""
+    register_xlsx(spark)
     prev = spark.conf.get("spark.sql.session.timeZone")
     spark.conf.set("spark.sql.session.timeZone", tz)
     try:
         df = _typed_frame(spark)
         assert http._fetches_as_arrow(df)
+        out = str(tmp_path / "sink.xlsx")
+        df.coalesce(1).write.format("xlsx").option("singleFile", True).mode("overwrite").save(out)
         arrow_x = http.dataframe_to_xlsx_bytes(df)
-        rows_x = http.dataframe_to_xlsx_bytes(_RowSource(df))
-        assert _sheet_xml(arrow_x) == _sheet_xml(rows_x)
-        assert arrow_x == rows_x  # member timestamps are fixed too
-        arrow_c = http.dataframe_to_csv_bytes(df, delimiter=";")
-        assert arrow_c == http.dataframe_to_csv_bytes(_RowSource(df), delimiter=";")
+        with open(out, "rb") as f:
+            assert _sheet_xml(arrow_x) == _sheet_xml(f.read())
+        zone_free = df.drop("ts")
+        arrow_x = http.dataframe_to_xlsx_bytes(zone_free)
+        assert arrow_x == http.dataframe_to_xlsx_bytes(_RowSource(zone_free))
+        arrow_c = http.dataframe_to_csv_bytes(zone_free, delimiter=";")
+        assert arrow_c == http.dataframe_to_csv_bytes(_RowSource(zone_free), delimiter=";")
         assert arrow_c.count(b"\r\n") > 40  # header + rows (one cell holds a newline)
     finally:
         spark.conf.set("spark.sql.session.timeZone", prev)
@@ -213,18 +219,6 @@ def test_http_row_source_is_served(spark):
     assert res.body.decode().splitlines()[0] == "r_regionkey,r_name"
     with pytest.raises(http.ResultTooLargeError):
         http.serve_dataframe(_RowSource(load_table(spark, SF_DIR, "region")), "r.xlsx", max_inline_rows=4)
-
-
-def test_http_timestamps_take_row_path_off_utc(spark, monkeypatch):
-    """Rows carry the driver zone's wall clock, Arrow carries UTC: a
-    timestamp column leaves the Arrow path unless that zone is UTC."""
-    ts = spark.sql("SELECT 1 AS id, timestamp'2024-01-01 00:00:00' AS ts")
-    ntz = spark.sql("SELECT 1 AS id, timestamp_ntz'2024-01-01 00:00:00' AS ts")
-    assert http._fetches_as_arrow(ts) and http._fetches_as_arrow(ntz)
-    monkeypatch.setattr(http.time, "timezone", 18000)
-    monkeypatch.setattr(http.time, "daylight", 1)
-    assert not http._fetches_as_arrow(ts)
-    assert http._fetches_as_arrow(ntz)
 
 
 class _FakeS3:
@@ -465,6 +459,32 @@ def test_write_sheets_multi_table(spark, tmp_path):
     with WorkbookReader(p) as wb:
         assert wb.sheet_names() == ["Regions", "Nations"]
         assert len(list(wb.iter_rows("Nations"))) == 26  # header + 25
+
+
+def test_write_sheets_keeps_old_workbook_on_failure(spark, tmp_path):
+    """A query that fails while write_sheets streams it leaves the
+    workbook already at the path byte-identical and readable, and no temp
+    beside it."""
+    p = str(tmp_path / "multi.xlsx")
+    converters.write_sheets({"Regions": load_table(spark, SF_DIR, "region")}, p)
+    with open(p, "rb") as f:
+        before = f.read()
+
+    @F.udf("long")
+    def fail_late(i):
+        if i == 4_000:
+            raise RuntimeError("fails mid-stream")
+        return i
+
+    failing = spark.range(0, 5_000, numPartitions=2).select(fail_late("id").alias("id"))
+    with pytest.raises(Exception, match="fails mid-stream"):
+        converters.write_sheets({"Regions": load_table(spark, SF_DIR, "region"), "Ids": failing}, p)
+    with open(p, "rb") as f:
+        assert f.read() == before
+    assert os.listdir(tmp_path) == ["multi.xlsx"]
+    with WorkbookReader(p) as wb:
+        assert wb.sheet_names() == ["Regions"]
+        assert len(list(wb.iter_rows("Regions"))) == 6  # header + 5
 
 
 def test_streaming_hourly_matches_batch(spark):
