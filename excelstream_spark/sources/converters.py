@@ -30,7 +30,7 @@ from pyspark.sql.conversion import LocalDataToArrowConversion
 from excelstream_spark.sources.files import FileCommitMessage, PartFileWriter
 from excelstream_spark.sources.xlsx import register_xlsx
 from excelstream_spark.sources.xlsx.dates import in_session_zone
-from excelstream_spark.sources.xlsx.writer_core import WorkbookWriter
+from excelstream_spark.sources.xlsx.writer_core import DEFAULT_COMPRESSION, WorkbookWriter
 
 
 def excel_to_parquet(
@@ -98,7 +98,7 @@ def write_sheets(
     dfs: dict[str, DataFrame],
     path: str,
     header: bool = True,
-    compression: int = 6,
+    compression: int = DEFAULT_COMPRESSION,
 ) -> None:
     """Several DataFrames -> one multi-sheet workbook (driver-streamed,
     published by rename; module docstring)."""

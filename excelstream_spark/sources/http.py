@@ -46,7 +46,7 @@ from pyspark.sql import types as T
 
 from excelstream_spark.sources.xlsx.batch_write import decimal_text, row_text
 from excelstream_spark.sources.xlsx.dates import in_session_zone, wall_clock
-from excelstream_spark.sources.xlsx.writer_core import WorkbookWriter
+from excelstream_spark.sources.xlsx.writer_core import DEFAULT_COMPRESSION, WorkbookWriter
 
 XLSX_CONTENT_TYPE = (
     "application/vnd.openxmlformats-officedocument.spreadsheetml.sheet"
@@ -127,7 +127,7 @@ def dataframe_to_xlsx_bytes(
     df: DataFrame,
     sheet_name: str = "Sheet1",
     header: bool = True,
-    compression: int = 6,
+    compression: int = DEFAULT_COMPRESSION,
     max_rows: int = DEFAULT_MAX_ROWS,
 ) -> bytes:
     """Serialize a (bounded) DataFrame to xlsx bytes for an HTTP response:
@@ -172,7 +172,8 @@ def dataframe_to_csv_bytes(
             w.writerow(["" if v is None else v for v in row])
     data = text.getvalue().encode("utf-8")
     if gzip_compress:
-        data = gzip.compress(data, compresslevel=6)
+        # mtime=0: the body is a function of the rows, not of the clock
+        data = gzip.compress(data, compresslevel=DEFAULT_COMPRESSION, mtime=0)
     return data
 
 

@@ -543,9 +543,14 @@ class BatchSheetReader:
         successful vector cast always equals the scalar result."""
         try:
             if kind.t is None:  # plain numeric (possibly date-styled)
-                if isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
+                if isinstance(dtype, (T.TimestampType, T.TimestampNTZType, T.DateType)):
                     f = texts.cast(pa.float64()).to_numpy(zero_copy_only=False)
                     us, valid = _serials_to_us(f)
+                    if isinstance(dtype, T.DateType):
+                        # serial_to_datetime(x).date(): the microsecond
+                        # rounding first, then the day it falls in
+                        days = (us // _US_PER_DAY).astype(np.int32)
+                        return pa.array(days, type=pa.int32(), mask=~valid).cast(pa_type)
                     return pa.array(us, type=pa.int64(), mask=~valid).cast(pa_type)
                 if kind.is_date:
                     # date-styled cell typed as datetime scalar-side; its

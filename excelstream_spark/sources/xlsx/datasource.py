@@ -56,7 +56,8 @@ the batch's commit under the same protocol (idempotent on replay).  Note Spark's
 per run — incremental pickup across restarts is exact either way.
 
 Options (write): sheetName, header (default true), compression (0-9,
-  default 6), useSharedStrings (string cells reference a deduplicated
+  default 2; 6 gives the smaller, slower files of the reference's
+  default), useSharedStrings (string cells reference a deduplicated
   table, up to 100,000 distinct strings; later ones are written inline),
   sheetProtectPassword, singleFile,
   maxRowsPerSheet (default 1,048,576 -> auto-split),
@@ -99,7 +100,12 @@ from excelstream_spark.sources.xlsx.reader_core import (
     resolve_header_remap,
     rows_to_batch,
 )
-from excelstream_spark.sources.xlsx.writer_core import WorkbookWriter
+from excelstream_spark.sources.xlsx.writer_core import (
+    DEFAULT_COMPRESSION,
+    EXCEL_MAX_ROWS,
+    WorkbookWriter,
+    compression_level,
+)
 
 def _truthy(value: str | bool | None, default: bool = False) -> bool:
     if value is None:
@@ -340,11 +346,12 @@ class _XlsxWriteOptions:
         self.path = local_path(self.path)
         self.header = _truthy(options.get("header"), True)
         self.sheet_name = options.get("sheetname", "Sheet1")
-        self.compression = int(options.get("compression", 6))
+        # checked here, on the driver, so a bad level fails before any task
+        self.compression = compression_level(
+            options.get("compression", DEFAULT_COMPRESSION)
+        )
         self.use_sst = _truthy(options.get("usesharedstrings"), False)
         self.protect = options.get("sheetprotectpassword")
-        from excelstream_spark.sources.xlsx.writer_core import EXCEL_MAX_ROWS
-
         self.max_rows_per_sheet = int(
             options.get("maxrowspersheet", EXCEL_MAX_ROWS)
         )

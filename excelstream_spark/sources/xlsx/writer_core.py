@@ -14,7 +14,9 @@ zero_temp_workbook.rs:77-130) in idiomatic Python.  Capabilities:
 - optional shared-strings table with a uniqueness cap (hybrid SST mode,
   cf. /root/reference/src/fast_writer/shared_strings.rs:9-96)
 - sheet protection (legacy password hash)
-- deflate level 0-9 (default 6, like the reference's default)
+- deflate level 0-9 (default 2, ``DEFAULT_COMPRESSION``: zlib's fast
+  match loop, a third of level 6's deflate time for files 13-21% larger;
+  level 6 is the reference's default and gives its smaller files)
 
 This class is engine-agnostic on purpose: the Spark sink writes one part-
 workbook per partition through it, and the driver-side HTTP helper writes
@@ -27,6 +29,7 @@ from __future__ import annotations
 
 import datetime as dt
 import io
+import operator
 import zipfile
 
 from excelstream_spark.sources.xlsx import ooxml
@@ -84,23 +87,39 @@ class SharedStrings:
         )
 
 
+#: the deflate level of every workbook the package writes unless the
+#: ``compression`` option names another, and of its gzip csv bodies
+DEFAULT_COMPRESSION = 2
+
+
+def compression_level(value) -> int:
+    """The deflate level ``value`` names (an int or its text, 0 = stored
+    to 9); raises ValueError naming the ``compression`` option otherwise."""
+    try:
+        level = int(value) if isinstance(value, str) else operator.index(value)
+    except (TypeError, ValueError):
+        level = -1
+    if not 0 <= level <= 9:
+        raise ValueError(
+            f"xlsx option compression must be an integer 0-9, got {value!r}"
+        )
+    return level
+
+
 class WorkbookWriter:
     """Streaming writer over any seekable-or-not binary file object."""
 
     def __init__(
         self,
         target: str | io.IOBase,
-        compression: int = 6,
+        compression: int = DEFAULT_COMPRESSION,
         use_shared_strings: bool = False,
         protect_password: str | None = None,
         col_widths: list[float] | None = None,
         row_height: float | None = None,
         max_rows_per_sheet: int = EXCEL_MAX_ROWS,
     ):
-        if isinstance(compression, str):
-            compression = int(compression)
-        if not 0 <= compression <= 9:
-            raise ValueError(f"compression must be 0-9, got {compression}")
+        compression = compression_level(compression)
         method = zipfile.ZIP_STORED if compression == 0 else zipfile.ZIP_DEFLATED
         self._zip = zipfile.ZipFile(
             target, "w", compression=method, compresslevel=compression or None

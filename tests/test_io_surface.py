@@ -74,6 +74,43 @@ def test_http_csv_bytes_gzip(spark):
     assert len(text.splitlines()) == 1 + df.count()
 
 
+def test_http_gzip_csv_is_a_function_of_the_rows(spark):
+    """Two gzip csv exports of one frame are byte-identical: the gzip
+    header carries no timestamp (bytes 4-7 are zero)."""
+    df = load_table(spark, SF_DIR, "nation")
+    first = http.dataframe_to_csv_bytes(df, gzip_compress=True)
+    assert first[4:8] == b"\0\0\0\0"
+    assert http.dataframe_to_csv_bytes(df, gzip_compress=True) == first
+    assert gzip.decompress(first) == http.dataframe_to_csv_bytes(df)
+
+
+def _write_xlsx(tmp_path, how, df, **level):
+    """One workbook of ``df`` through ``how``, at ``level`` when given."""
+    if how == "http":
+        return http.dataframe_to_xlsx_bytes(df, **level)
+    out = str(tmp_path / f"{how}-{level.get('compression', 'default')}.xlsx")
+    if how == "sink":
+        w = df.coalesce(1).write.format("xlsx").option("singleFile", True)
+        w.options(**level).mode("overwrite").save(out)
+    else:
+        converters.write_sheets({"Sheet1": df}, out, **level)
+    with open(out, "rb") as f:
+        return f.read()
+
+
+@pytest.mark.parametrize("how", ["sink", "http", "write_sheets"])
+def test_default_compression_is_level_2(spark, tmp_path, how):
+    """Every xlsx writer deflates at level 2 unless told otherwise: its
+    default workbook is the explicit level-2 one, not the level-6 one."""
+    register_xlsx(spark)
+    df = spark.range(3000).select(
+        "id", F.concat(F.lit("row "), "id").alias("s"), (F.col("id") * 1.5).alias("x")
+    )
+    default = _write_xlsx(tmp_path, how, df)
+    assert default == _write_xlsx(tmp_path, how, df, compression=2)
+    assert default != _write_xlsx(tmp_path, how, df, compression=6)
+
+
 def test_http_max_rows_guard(spark):
     df = load_table(spark, SF_DIR, "customer")
     try:

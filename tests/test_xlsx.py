@@ -190,7 +190,7 @@ def test_sheet_selection_options(spark, tmp_path):
 def test_compression_levels(spark, tmp_path):
     df = spark.range(2000).select(F.concat(F.lit("v" * 50), F.col("id")).alias("s"))
     sizes = {}
-    for level in (0, 1, 9):
+    for level in (0, 1, 2, 9):
         out = str(tmp_path / f"c{level}")
         df.coalesce(1).write.mode("overwrite").format("xlsx").option("compression", level).save(out)
         part = next(f for f in (tmp_path / f"c{level}").iterdir() if f.suffix == ".xlsx")
@@ -198,6 +198,21 @@ def test_compression_levels(spark, tmp_path):
         assert spark.read.format("xlsx").load(out).count() == 2000
     assert sizes[0] > sizes[1] > 0
     assert sizes[9] <= sizes[1]
+    # levels 1-3 share zlib's fast match loop and do not order by size on
+    # every input: on this frame's long runs level 1 is the smaller
+    assert sizes[0] > sizes[2] >= sizes[9]
+
+
+@pytest.mark.parametrize("level", ["12", "gzip", -1])
+def test_bad_compression_level_fails_on_driver(tmp_path, level):
+    """A level outside 0-9 fails when the sink is planned, naming the
+    option, before any task runs."""
+    from excelstream_spark.sources.xlsx.datasource import XlsxWriter
+
+    schema = T.StructType([T.StructField("s", T.StringType())])
+    with pytest.raises(ValueError, match="compression must be an integer 0-9"):
+        XlsxWriter(schema, {"path": str(tmp_path / "x"), "compression": level}, overwrite=True)
+    assert not os.listdir(tmp_path)
 
 
 def test_shared_strings_mode(spark, tmp_path):
@@ -1085,6 +1100,8 @@ def test_scanner_fast_path_covers_sink_output(tmp_path, monkeypatch):
     [part] = glob.glob(out + "/part-*.xlsx")
     read_schema = XlsxDataSource({"path": out}).schema()
     expected = _rows_via_row_reader(part, "Sheet1", read_schema, header=True)
+    # the written schema too: ship_date declared as a date
+    expected_written = _rows_via_row_reader(part, "Sheet1", schema, header=True)
 
     def fallback(*a, **k):
         raise AssertionError("scanner fallback used")
@@ -1096,9 +1113,49 @@ def test_scanner_fast_path_covers_sink_output(tmp_path, monkeypatch):
         batches = list(
             batch_scan.BatchSheetReader(wb, "Sheet1", read_schema, True).batches()
         )
+        written = list(
+            batch_scan.BatchSheetReader(wb, "Sheet1", schema, True).batches()
+        )
     assert len(batches) > 3
     assert _batch_rows(batches) == expected
     assert len(expected) == n and expected[n // 2] == (None,) * len(schema.fields)
+    assert _batch_rows(written) == expected_written
+    assert [r[6] for r in expected_written] == cols[6]
+
+
+def test_scanner_bulk_dates_match_scalar_path():
+    """A numeric column read as a declared date converts in bulk to what
+    the per-cell path gives (serial_to_datetime(x).date(), null where the
+    serial is out of range), date-styled or not."""
+    import io
+
+    import pyarrow as pa
+
+    from excelstream_spark.sources.xlsx.batch_scan import BatchSheetReader, _Kind
+
+    buf = io.BytesIO()
+    with WorkbookWriter(buf) as w:
+        w.write_row([1.0])
+    texts = [
+        "1", "59", "60", "61", "45000.5", "45000.99999999999",
+        "1000.999999999999",  # rounds to the next midnight
+        "0.5", "2958465.999", "2958466", "1e9", "-3", "-45000.25",
+    ]
+    schema = T.StructType([T.StructField("d", T.DateType())])
+    with WorkbookReader(buf.getvalue()) as wb:
+        reader = BatchSheetReader(wb, "Sheet1", schema, header=False)
+        for kind in (_Kind(None, True, str(ooxml.STYLE_DATE)), _Kind(None, False, None)):
+            bulk = reader._convert_uniform(kind, pa.array(texts), T.DateType(), pa.date32())
+            scalar = reader._convert_scalar(
+                [kind] * len(texts), texts, [False] * len(texts), T.DateType(), pa.date32()
+            )
+            assert bulk is not None and bulk.equals(scalar), (kind, bulk, scalar)
+    assert scalar.to_pylist()[:7] == [
+        dt.date(1900, 1, 1), dt.date(1900, 2, 28), dt.date(1900, 2, 28),
+        dt.date(1900, 3, 1), dt.date(2023, 3, 15), dt.date(2023, 3, 15),
+        dt.date(1902, 9, 27),
+    ]
+    assert scalar.to_pylist()[7:] == [None, dt.date(9999, 12, 31), None, None, None, None]
 
 
 def test_batch_reader_spark_surface(spark, tmp_path):
