@@ -172,7 +172,9 @@ def dataframe_to_csv_bytes(
             w.writerow(["" if v is None else v for v in row])
     data = text.getvalue().encode("utf-8")
     if gzip_compress:
-        # mtime=0: the body is a function of the rows, not of the clock
+        # mtime=0: the body is a function of the rows, not of the clock.
+        # The workbook default level: on a 10k-row slice it gzips in 12 ms
+        # instead of 42 ms (level 6) for a 12% larger body (DEPLOYMENT.md)
         data = gzip.compress(data, compresslevel=DEFAULT_COMPRESSION, mtime=0)
     return data
 

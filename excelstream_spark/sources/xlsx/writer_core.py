@@ -89,6 +89,7 @@ class SharedStrings:
 
 #: the deflate level of every workbook the package writes unless the
 #: ``compression`` option names another, and of its gzip csv bodies
+#: (``http.dataframe_to_csv_bytes``): retuning it changes both
 DEFAULT_COMPRESSION = 2
 
 
